@@ -12,6 +12,27 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Bounded low-core mode (optimization r15, VERDICT r14 item 3): the
+    // driver ALSO runs the bench at a low core count for scaling evidence,
+    // and the full 1-warmup + 2-timed-pass protocol cannot finish inside
+    // its timeout there (BENCH_r14_c8.json: rc=124, tail mid-suite — no
+    // scaling data at all for six rounds). At <=8 cores the timed passes
+    // default to ONE; the warm-up pass stays (JIT/codegen otherwise lands
+    // in the first timed pass). Both counts are env-overridable
+    // (SPARK_GRAFT_BENCH_WARMUP / SPARK_GRAFT_BENCH_PASSES) and the
+    // 32-core protocol is byte-identical to r09-r14: warmup 1, passes 2,
+    // per-query min.
+    // A non-integer count fails before the session starts, naming the
+    // variable. At least one timed pass always runs; `passes` is clamped
+    // where it is defined so the reported `timed_passes` is the count that
+    // ran.
+    def envCount(name: String, default: Int): Int =
+      sys.env.get(name).fold(default)(v => v.trim.toIntOption.getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be an integer, got '$v'")))
+    val warmups = envCount("SPARK_GRAFT_BENCH_WARMUP", 1)
+    val passes = math.max(envCount("SPARK_GRAFT_BENCH_PASSES",
+      if (cpus.toInt <= 8) 1 else 2), 1)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -63,20 +84,6 @@ object Bench {
     // its solo time when the unpersist sat inside its timing).
     def cleanup(): Unit = spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
-    // Bounded low-core mode (optimization r15, VERDICT r14 item 3): the
-    // driver ALSO runs the bench at a low core count for scaling evidence,
-    // and the full 1-warmup + 2-timed-pass protocol cannot finish inside
-    // its timeout there (BENCH_r14_c8.json: rc=124, tail mid-suite — no
-    // scaling data at all for six rounds). At <=8 cores the timed passes
-    // default to ONE; the warm-up pass stays (JIT/codegen otherwise lands
-    // in the first timed pass). Both counts are env-overridable
-    // (SPARK_GRAFT_BENCH_WARMUP / SPARK_GRAFT_BENCH_PASSES) and the
-    // 32-core protocol is byte-identical to r09-r14: warmup 1, passes 2,
-    // per-query min.
-    val warmups = sys.env.get("SPARK_GRAFT_BENCH_WARMUP").map(_.toInt)
-      .getOrElse(1)
-    val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt)
-      .getOrElse(if (cpus.toInt <= 8) 1 else 2)
     // warm-up: JIT, codegen, footers
     (1 to warmups).foreach(_ => names.foreach { n => run(n); cleanup() })
     // Timed passes (default two), report the per-query MIN: transient host
@@ -89,7 +96,7 @@ object Bench {
       cleanup()
       name -> (dt, err)
     }.toMap
-    val allPasses = (1 to math.max(passes, 1)).map(_ => pass())
+    val allPasses = (1 to passes).map(_ => pass())
     val timed = names.map { name =>
       val rs = allPasses.map(_(name))
       (name, rs.map(_._1).min, rs.flatMap(_._2).headOption)

@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.math.BigInteger
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Duplicate-cluster resolution: connected components over a near-duplicate
   * pair list (SURVEY.md §2 B-10). Pairwise dedup operators (exact /
@@ -28,6 +33,20 @@ import org.apache.spark.sql.functions._
   */
 object Clusters {
 
+  /** Largest edge list a graph operator runs in ONE task, sized like a
+    * broadcast threshold: 4M edges ≈ 64 MB of longs. The one cap for every
+    * operator with a one-task path. */
+  private val OneTaskMaxEdges = 4000000
+
+  /** Whether `e` has at most [[OneTaskMaxEdges]] rows. A `limit(cap+1)
+    * .count()`, not a full count (the PQ hard-cap idiom): it short-circuits
+    * the moment cap+1 edges exist, so the small-graph case pays a few
+    * partitions and the 100 TB case never pays a full pass over an edge
+    * list it is about to shuffle anyway. The exact size is irrelevant —
+    * only which side of the cap. */
+  private def fitsOneTask(e: DataFrame): Boolean =
+    e.limit(OneTaskMaxEdges + 1).count() <= OneTaskMaxEdges
+
   /** Connected components of the undirected graph given by `edges`
     * (`aCol`, `bCol`): returns (id, comp) with `comp` = the minimum vertex
     * id reachable from `id`. Only vertices that appear in `edges` are
@@ -38,31 +57,24 @@ object Clusters {
     * set of a dedup pass is the NEAR-DUP RATE times the corpus, orders of
     * magnitude smaller than the corpus itself, and the iterative loop costs
     * O(log diameter) rounds of full-graph shuffles plus per-round driver
-    * scheduling REGARDLESS of size. Below `maxSingleTaskEdges` (sized like
-    * a broadcast threshold: 4M edges ≈ 64 MB of longs) the exact union-find
-    * runs inside ONE task via mapPartitions over a coalesced edge list —
-    * one job, no rounds. Above it, the label-propagation loop is the scale
-    * path. Both produce identical (id, min-reachable-id) output. */
+    * scheduling REGARDLESS of size. Up to [[OneTaskMaxEdges]] the exact
+    * union-find runs inside ONE task via mapPartitions over a coalesced
+    * edge list — one job, no rounds. Above it, the label-propagation loop
+    * is the scale path. Both produce identical (id, min-reachable-id)
+    * output. */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25, maxSingleTaskEdges: Long = 4000000L): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     val e = edges
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .localCheckpoint(eager = false)
-    // The dispatch probe is a `limit(cap+1).count()`, not a full count
-    // (the PQ hard-cap idiom): it short-circuits the moment cap+1 edges
-    // exist, so the small-graph case pays a few partitions and the 100 TB
-    // case never pays a full pass over an edge list it is about to shuffle
-    // anyway. The exact size is irrelevant — only which side of the cap.
-    val cap = math.min(maxSingleTaskEdges, Int.MaxValue - 1L).toInt
-    if (e.limit(cap + 1).count() <= cap) singleTask(e)
-    else iterative(e, maxIter)
+    if (fitsOneTask(e)) componentsOneTask(e) else componentsRounds(e, maxIter)
   }
 
   /** Exact union-find (path halving + union-by-min) over the whole edge
     * list in one task. Not a driver collect: the work runs inside an
     * executor task and returns a distributed result — the same shape as any
     * single-partition aggregate, reserved for inputs that fit one task. */
-  private def singleTask(e: DataFrame): DataFrame = {
+  private def componentsOneTask(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     e.as[(Long, Long)].coalesce(1).mapPartitions { it =>
@@ -95,8 +107,8 @@ object Clusters {
     * round result is checkpointed ONCE with its change flag, so the
     * convergence probe reads cached blocks instead of re-running the
     * compression join (and the next round re-running it again — Spark has
-    * no plan-level CSE). */
-  private def iterative(e: DataFrame, maxIter: Int): DataFrame = {
+    * no plan-level CSE). `e` is (src: bigint, dst: bigint). */
+  private[graft] def componentsRounds(e: DataFrame, maxIter: Int): DataFrame = {
     val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint(eager = false) // joined every round — materialize once
@@ -140,23 +152,6 @@ object Clusters {
     labels
   }
 
-  /** Weighted PageRank over a directed edge list — the graph-centrality
-    * step past connected components: which nodes (event types, domains,
-    * canonical documents) the corpus's link/transition structure keeps
-    * flowing INTO. Fixed `iterations` rounds of
-    * `r'(v) = (1−d)·10⁶ + d·Σᵤ r(u)·w(u,v)/W(u)`, with EVERY intermediate
-    * held in integer micro-units and every division an integer division —
-    * parallel double summation order can never flip a digit, so 10 rounds
-    * of distributed iteration are bit-reproducible by an independent engine
-    * (the DuckDB oracle unrolls the same rounds; the ≤ 1 micro-unit/term
-    * floor bias is part of the operator's defined semantics). Dangling-node
-    * mass is dropped (standard simplification; documented, determinism
-    * unaffected).
-    *
-    * Scale shape: per round, ONE edge⋈rank hash join on src + ONE dst-keyed
-    * sum with map-side combine — hot destination nodes are hot COUNTERS,
-    * never hot join keys; `localCheckpoint` truncates the growing lineage
-    * each round exactly like [[connectedComponents]]. */
   /** Synchronous label-propagation community labels (Raghavan et al. 2007,
     * the deterministic synchronous variant): `rounds` rounds where every
     * node adopts the PLURALITY label of its neighbors (ties → smallest
@@ -245,6 +240,31 @@ object Clusters {
           .otherwise(lit(0L)).as("core_deg"))
   }
 
+  /** Weighted PageRank over a directed edge list — the graph-centrality
+    * step past connected components: which nodes (event types, domains,
+    * canonical documents) the corpus's link/transition structure keeps
+    * flowing INTO. Fixed `iterations` rounds of
+    * `r'(v) = (1−d)·10⁶ + d·Σᵤ r(u)·w(u,v)/W(u)`, with EVERY intermediate
+    * held in integer micro-units and every division an integer division —
+    * parallel double summation order can never flip a digit, so the rounds
+    * are bit-reproducible by an independent engine (the DuckDB oracle
+    * unrolls the same rounds; the ≤ 1 micro-unit/term floor bias is part of
+    * the operator's defined semantics). Dangling-node mass is dropped
+    * (standard simplification; documented, determinism unaffected). Returns
+    * (node, rank_micro).
+    *
+    * Size dispatch (the [[connectedComponents]] discipline, same cap): a
+    * transition or co-occurrence graph is vocabulary-sized, and the round
+    * loop pays a few Spark jobs per round whatever the size. Up to
+    * [[OneTaskMaxEdges]] edges all rounds run inside ONE task
+    * ([[pageRankOneTask]]) — a fixed job count whatever `iterations` is.
+    * Above the cap the distributed round loop ([[pageRankRounds]]) is the
+    * scale path: per round ONE edge⋈rank hash join on src + ONE dst-keyed
+    * sum with map-side combine — hot destination nodes are hot COUNTERS,
+    * never hot join keys. The loop also runs when the one-task path could
+    * not reproduce it: node columns of another type than string or
+    * integral (or of two types), or ANSI mode off. Both paths return
+    * identical rows. */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iterations: Int = 10,
       dampingMilli: Int = 850): DataFrame = {
@@ -253,7 +273,28 @@ object Clusters {
     require(dampingMilli >= 0 && dampingMilli <= 1000,
       s"dampingMilli must be in [0, 1000], got $dampingMilli")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("long").as("w"))
+        col(weightCol).cast("long").as("w"))
+      .localCheckpoint(eager = false) // read by the size check and the rank pass
+    val nodeType = e.schema("src").dataType
+    val oneTask = nodeType == e.schema("dst").dataType &&
+      OneTaskNodeTypes(nodeType) &&
+      e.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean &&
+      fitsOneTask(e)
+    if (oneTask) pageRankOneTask(e, iterations, dampingMilli)
+    else pageRankRounds(e, iterations, dampingMilli)
+  }
+
+  /** Node types whose JVM equality (`Row.get`) is SQL equality — the ones
+    * [[pageRankOneTask]] can key a hash map by. Doubles (−0.0, NaN), binary
+    * and collated strings compare differently and take the round loop. */
+  private val OneTaskNodeTypes: Set[DataType] =
+    Set(StringType, LongType, IntegerType, ShortType, ByteType)
+
+  /** The distributed round loop of [[pageRankWeighted]] — the any-size
+    * scale path. `e` is (src, dst, w: bigint); `localCheckpoint` truncates
+    * the growing lineage each round exactly like [[connectedComponents]]. */
+  private[graft] def pageRankRounds(e: DataFrame, iterations: Int,
+      dampingMilli: Int): DataFrame = {
     val outW = e.groupBy("src").agg(sum("w").as("ow"))
     val ew = e.join(outW, "src").localCheckpoint(eager = false)
     val nodes = e.select(col("src").as("node"))
@@ -278,6 +319,71 @@ object Clusters {
         .localCheckpoint(eager = false)
     }
     ranks.select(col("node"), col("r").as("rank_micro"))
+  }
+
+  /** All rounds of [[pageRankRounds]] inside one task, over `e` (src, dst,
+    * w: bigint) coalesced to one partition: the same rows, computed with
+    * the loop's exact integer semantics —
+    *  - `ow` is the sum of the non-null `w` of each src (its null-dst edges
+    *    included);
+    *  - an edge contributes `(r·w) div ow` (the 128-bit product is exact,
+    *    the quotient truncates toward zero and keeps its low 64 bits, as the
+    *    loop's decimal `div` does) unless its src, dst or `w` is null — a
+    *    null-dst edge is not evaluated at all, as the optimizer's inferred
+    *    `isnotnull(dst)` filter skips it in the loop;
+    *  - `rank = base + (dampingMilli·Σc) div 1000`; a null node, or one with
+    *    no in-edges, gets `base`;
+    *  - as under ANSI, a zero `ow` or a long overflow in a sum throws.
+    * Duplicate edges each count. */
+  private[graft] def pageRankOneTask(e: DataFrame, iterations: Int,
+      dampingMilli: Int): DataFrame = {
+    val base = 1000000L - dampingMilli * 1000L
+    val schema = new StructType()
+      .add("node", e.schema("src").dataType)
+      .add("rank_micro", LongType)
+    e.coalesce(1).mapPartitions { rows =>
+      val index = mutable.HashMap.empty[Any, Int] // non-null node → slot
+      var nullNode = false
+      def slot(v: Any): Int =
+        if (v == null) { nullNode = true; -1 }
+        else index.getOrElseUpdate(v, index.size)
+      // edges with a non-null src and w; dst is -1 when null
+      val (src, dst, w) = (mutable.ArrayBuilder.make[Int],
+        mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Long])
+      rows.foreach { r =>
+        val (s, d) = (slot(r.get(0)), slot(r.get(1)))
+        if (s >= 0 && !r.isNullAt(2)) { src += s; dst += d; w += r.getLong(2) }
+      }
+      val (es, ed, ew) = (src.result(), dst.result(), w.result())
+      val n = index.size
+      val ow = new Array[Long](n)
+      for (k <- es.indices) ow(es(k)) = Math.addExact(ow(es(k)), ew(k))
+      var rank = Array.fill(n)(1000000L)
+      for (_ <- 1 to iterations) {
+        val sc = new Array[Long](n)
+        var k = 0
+        while (k < es.length) {
+          val s = es(k); val d = ed(k)
+          if (d >= 0) sc(d) = Math.addExact(sc(d), mulDiv(rank(s), ew(k), ow(s)))
+          k += 1
+        }
+        rank = sc.map(x => Math.addExact(base, mulDiv(dampingMilli, x, 1000)))
+      }
+      val out = index.iterator.map { case (v, i) => Row(v, rank(i)) }
+      if (nullNode) out ++ Iterator(Row(null, base)) else out
+    }(Encoders.row(schema))
+  }
+
+  /** `(a·b) div c` with an exact 128-bit product, truncated toward zero,
+    * keeping the quotient's low 64 bits (Spark's decimal `div` → bigint);
+    * a zero `c` throws, as ANSI division by zero does. */
+  private def mulDiv(a: Long, b: Long, c: Long): Long = {
+    if (c == 0) throw new ArithmeticException(
+      "[DIVIDE_BY_ZERO] PageRank out-weight of a source node sums to 0")
+    val lo = a * b
+    if (Math.multiplyHigh(a, b) == (lo >> 63)) lo / c // a·b fits a long
+    else BigInteger.valueOf(a).multiply(BigInteger.valueOf(b))
+      .divide(BigInteger.valueOf(c)).longValue
   }
 
   /** The unrolled-iteration CTE chain for [[pageRankWeighted]]'s DuckDB

@@ -139,8 +139,9 @@ object DriftOps extends QueryFamily {
   /** q_pagerank — weighted PageRank over the event-type transition graph
     * (the same lag-derived edges as q_transitions): which states the
     * session flow concentrates into. 10 rounds of integer-micro-unit
-    * iteration — bit-reproduced by the unrolled DuckDB oracle, a full
-    * cross-engine check of a distributed ITERATIVE algorithm. */
+    * iteration (in one task: the graph is a few event types) —
+    * bit-reproduced by the unrolled DuckDB oracle, a full cross-engine
+    * check of an ITERATIVE algorithm. */
   def qPagerank(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")

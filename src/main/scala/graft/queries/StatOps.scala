@@ -62,8 +62,8 @@ object StatOps extends QueryFamily {
     * [[graft.operators.Clusters.pageRankWeighted]] loop: the
     * graph-centrality upgrade of raw-frequency keywords (a token ranks
     * high when its NEIGHBOURS are central, not merely when it is
-    * frequent). One corpus explode + pair count; 10 rounds of joins on
-    * the bounded token graph. */
+    * frequent). One corpus explode + pair count; 10 rounds on the
+    * bounded token graph (in one task while it has at most 4M edges). */
   def qTextrank(s: SparkSession, dir: String): DataFrame = {
     val ws = T.tokens(col("text"))
     val adj = when(size(ws) > 1,

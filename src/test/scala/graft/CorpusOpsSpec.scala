@@ -83,11 +83,10 @@ class CorpusOpsSpec extends SparkSpec {
   test("connected components converge on a long path (compression bound)") {
     // a 64-vertex path needs pointer compression to finish inside the
     // 25-round budget: plain min-propagation would need 63 rounds.
-    // maxSingleTaskEdges = -1 forces the ITERATIVE scale path — the
-    // single-task union-find would trivialize the bound being tested
-    val edges = (0L until 63L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val comp = Clusters.connectedComponents(edges, "a_id", "b_id",
-        maxSingleTaskEdges = -1L)
+    // the ROUND LOOP directly — the size dispatch would pick the one-task
+    // union-find, which would trivialize the bound being tested
+    val edges = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
+    val comp = Clusters.componentsRounds(edges, maxIter = 25)
       .as[(Long, Long)].collect().toMap
     assert(comp.size == 64 && comp.values.forall(_ == 0L))
   }
@@ -136,8 +135,7 @@ class CorpusOpsSpec extends SparkSpec {
       .toDF("a_id", "b_id")
     val fast = Clusters.connectedComponents(edges, "a_id", "b_id")
       .as[(Long, Long)].collect().toMap
-    val iter = Clusters.connectedComponents(edges, "a_id", "b_id",
-        maxSingleTaskEdges = -1L)
+    val iter = Clusters.componentsRounds(edges.toDF("src", "dst"), maxIter = 25)
       .as[(Long, Long)].collect().toMap
     assert(fast === iter)
     assert(fast.nonEmpty)

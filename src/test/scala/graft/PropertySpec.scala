@@ -265,4 +265,55 @@ class PropertySpec extends SparkSpec {
         s"case $caseIdx groups=$nGroups n=$n vRange=$vRange width=$width")
     }
   }
+
+  test("PROPERTY pagerank: the one-task path returns the round loop's rows (random graphs)") {
+    // Seeded random edge lists with duplicate edges, self-loops, null
+    // src/dst and null w, over string and long node ids; every
+    // (iterations, dampingMilli) pair in {1, 10} x {0, 850, 1000}; plus the
+    // empty graph and one with negative weights (truncation toward zero).
+    import graft.operators.Clusters
+    val rnd = freshRandom(8)
+    def some(p: Int, v: Int): Option[Int] =
+      if (rnd.nextInt(100) < p) None else Some(v)
+    type Edges = Seq[(Option[Int], Option[Int], Option[Long])]
+    def frame(g: Edges, stringIds: Boolean) =
+      if (stringIds) g.map { case (a, b, w) =>
+        (a.map(i => s"n$i"), b.map(i => s"n$i"), w) }.toDF("src", "dst", "w")
+      else g.map { case (a, b, w) =>
+        (a.map(_.toLong), b.map(_.toLong), w) }.toDF("src", "dst", "w")
+    val random = for ((it, d) <- Seq(1, 10).flatMap(i =>
+        Seq(0, 850, 1000).map(i -> _))) yield {
+      val n = 2 + rnd.nextInt(7)
+      val g = Seq.fill(rnd.nextInt(20)) {
+        (some(10, rnd.nextInt(n)), some(10, rnd.nextInt(n)),
+          some(10, 1 + rnd.nextInt(9)).map(_.toLong))
+      }
+      (g ++ g.take(rnd.nextInt(4)), it, d) // explicit duplicates
+    }
+    val fixed = Seq[(Edges, Int, Int)]((Seq.empty, 10, 850),
+      (Seq((Some(0), Some(1), Some(5L)), (Some(0), Some(2), Some(-2L)),
+        (Some(1), Some(0), Some(-1L)), (Some(1), Some(2), Some(4L)),
+        (Some(2), Some(2), Some(1L))), 10, 850))
+    for (((g, it, d), caseIdx) <- (random ++ fixed).zipWithIndex;
+         stringIds <- Seq(true, false)) {
+      val e = frame(g, stringIds)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().toSeq.sortBy(_.toString)
+      val one = rows(Clusters.pageRankOneTask(e, it, d))
+      val loop = rows(Clusters.pageRankRounds(e, it, d))
+      assert(one === loop,
+        s"case $caseIdx stringIds=$stringIds iterations=$it damping=$d: $g")
+    }
+  }
+
+  test("pagerank: a zero out-weight throws on both paths, returning no rows") {
+    import graft.operators.Clusters
+    // a's weights sum to 0: (r·w) div ow divides by zero under ANSI
+    val e = Seq(("a", "b", 2L), ("a", "c", -2L), ("b", "a", 1L))
+      .toDF("src", "dst", "w")
+    intercept[Exception](Clusters.pageRankOneTask(e, 10, 850).collect())
+    intercept[Exception](Clusters.pageRankRounds(e, 10, 850).collect())
+    intercept[Exception](Clusters.pageRankWeighted(e, "src", "dst", "w")
+      .collect())
+  }
 }

@@ -50,12 +50,32 @@ def run_once(classes, queries, sf_dir, xmx):
             "graft.Bench", queries])
     out = subprocess.run(cmd, env=env, capture_output=True, text=True,
                          cwd=REPO)
-    for line in out.stdout.splitlines():
+    return bench_times(out.stdout, out.returncode, queries.split(","),
+                       out.stderr)
+
+
+def bench_times(stdout, returncode, names, stderr=""):
+    """Per-query seconds of one bench run, refusing a run that erred.
+
+    A query that throws still gets a time (its time to fail), so an erring
+    run would feed that time into the B/A ratios. A run is refused when it
+    exited non-zero, reports n_errors > 0, or lists a wanted query under
+    errors."""
+    bench = None
+    for line in stdout.splitlines():
         line = line.strip()
         if line.startswith("{") and '"metric"' in line:
-            return json.loads(line)["queries"]
-    raise RuntimeError(f"no bench JSON (rc={out.returncode})\n"
-                       f"stderr tail: {out.stderr[-2000:]}")
+            bench = json.loads(line)
+    if bench is None:
+        raise RuntimeError(f"no bench JSON (rc={returncode})\n"
+                           f"stderr tail: {stderr[-2000:]}")
+    errors = bench.get("errors", {})
+    if (returncode != 0 or bench.get("n_errors", 0) > 0
+            or any(q in errors for q in names)):
+        raise RuntimeError(f"bench run erred (rc={returncode}, "
+                           f"n_errors={bench.get('n_errors')}): {errors}\n"
+                           f"stderr tail: {stderr[-2000:]}")
+    return bench["queries"]
 
 
 def main():

@@ -1,0 +1,32 @@
+#!/usr/bin/env python3
+"""Guard test for ab_pair.py: a bench run that erred (non-zero exit,
+n_errors > 0, or a wanted query under errors) must be refused, so no
+time-to-fail enters a B/A ratio; a clean run must load.
+Run: python3 tools/test_ab_pair.py"""
+import importlib.util
+import json
+import os
+
+spec = importlib.util.spec_from_file_location(
+    "ab_pair", os.path.join(os.path.dirname(__file__), "ab_pair.py"))
+ab = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(ab)
+
+
+def run(rc=0, n_errors=0, errors=None):
+    line = json.dumps({"metric": "total", "value": 1.5, "n_errors": n_errors,
+                       "queries": {"q_x": 1.0, "q_y": 0.5},
+                       "errors": errors or {}})
+    try:
+        return ab.bench_times("warming up\n" + line + "\n", rc, ["q_x"])
+    except RuntimeError:
+        return None
+
+
+assert run() == {"q_x": 1.0, "q_y": 0.5}, "clean run must load"
+assert run(rc=1) is None, "non-zero exit must refuse"
+assert run(n_errors=1, errors={"q_y": "boom"}) is None, \
+    "n_errors > 0 must refuse"
+assert run(errors={"q_x": "boom"}) is None, \
+    "a wanted query under errors must refuse"
+print("ab_pair errored-run guard OK")
