@@ -110,14 +110,20 @@ object Bench {
     // attributed the round it happens instead of rediscovered by a later
     // verdict. New queries simply aren't in the ledger yet; refresh the
     // fixture when intentionally changing a query's plan.
-    val baseline: Map[String, Double] =
+    val ledger =
       try {
         val src = scala.io.Source.fromInputStream(
           getClass.getResourceAsStream("/bench_baseline.json"))
-        val text = try src.mkString finally src.close()
-        """"(q_[A-Za-z0-9_]+)"\s*:\s*([0-9.Ee+-]+)""".r
-          .findAllMatchIn(text).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
+        try src.mkString finally src.close()
+      } catch { case scala.util.control.NonFatal(_) => "" }
+    val baseline: Map[String, Double] =
+      """"(q_[A-Za-z0-9_]+)"\s*:\s*([0-9.Ee+-]+)""".r
+        .findAllMatchIn(ledger).map(m => m.group(1) -> m.group(2).toDouble).toMap
+    // The ledger is recorded at one core count (its `cpus` metadata): at
+    // another, per-query scaling is heterogeneous (scan-bound queries slow
+    // ~linearly, shuffle-bound ones barely), so neither the drift estimate
+    // nor the gate means anything there.
+    val ledgerCpus = BenchGate.ledgerCpus(ledger)
     // Host-drift normalization: a loaded host slows EVERY query by a
     // near-uniform factor (the r7 driver run drifted ~1.4x across untouched
     // trivial projections and flagged 28 false regressions). The run's
@@ -137,38 +143,20 @@ object Bench {
       else timed.collect {
         case (name, t, None) if baseline.get(name).exists(_ > 0.2) =>
           t / baseline(name)
-      }.sorted
-    val hostDrift =
-      if (ratios.isEmpty) 1.0 else ratios(ratios.length / 2)
-    val norm = math.max(hostDrift, 1.0)
+      }
+    val hostDrift = BenchGate.hostDrift(ratios, cpus.toInt, ledgerCpus)
+    val norm = math.max(hostDrift.getOrElse(1.0), 1.0)
     // The normalization is blind to a GENUINE uniform regression by
     // construction (it cancels uniform drift, whatever its cause) — so an
     // anomalous drift must itself alarm, loudly, not sit silently in a
-    // JSON field: a drifted run demands either a quiet-host rerun or a
-    // bisect of whatever changed globally.
-    // Two tiers: a hard alert at 1.3x, and a soft warning from 1.1x — the
-    // normalization would otherwise silently accept any GENUINE uniform
-    // regression inside the (1.0, 1.3) window (e.g. a config change slowing
-    // everything 1.25x reads as norm=1.25, zero flags, no alert).
-    val driftAlert = hostDrift > 1.3
-    if (driftAlert) System.err.println(
-      f"HOST DRIFT $hostDrift%.2fx vs ledger across the suite: host load OR " +
-        "a uniform regression (a global config/code change). Rerun on a " +
-        "quiet host before trusting n_regressions=0.")
-    else if (hostDrift > 1.1) System.err.println(
-      f"HOST DRIFT WARNING $hostDrift%.2fx vs ledger: inside the tolerated " +
-        "window, but a uniform regression would hide here — compare " +
-        "host_drift against the committed drift history before accepting.")
+    // JSON field (BenchGate.driftMessage).
+    BenchGate.driftMessage(hostDrift).foreach(System.err.println)
     // Only the FULL suite compares apples-to-apples: a filtered run pays
     // JVM/JIT warm-up on far fewer queries and reads hot where the
-    // recording read warm, inflating 2x+ on fit-heavy queries. The ledger
-    // is also a 32-CORE artifact: at a low core count per-query scaling is
-    // heterogeneous (scan-bound queries slow ~linearly, shuffle-bound ones
-    // barely), so the median-ratio normalization cannot separate "scales
-    // worse than median" from "regressed" — the gate (and its retry pass)
-    // only runs at the recording condition.
-    val gateActive = sfDir.contains("sf0.1") && args.isEmpty &&
-      cpus.toInt == 32
+    // recording read warm, inflating 2x+ on fit-heavy queries — the gate
+    // (and its retry pass) only runs at the recording condition.
+    val gateActive =
+      BenchGate.gateActive(sfDir, args.isEmpty, cpus.toInt, ledgerCpus)
     val firstFlags =
       if (!gateActive) Seq.empty
       else BenchGate.regressions(timed, baseline, norm)
@@ -200,7 +188,7 @@ object Bench {
         (folded, BenchGate.regressions(folded, baseline, norm))
       }
     regressions.foreach { case (name, t, b) =>
-      System.err.println(f"PERF REGRESSION: $name took $t%.2fs vs recorded $b%.2fs (${t / b}%.2fx raw, host drift $hostDrift%.2fx) — survived a same-JVM re-run")
+      System.err.println(f"PERF REGRESSION: $name took $t%.2fs vs recorded $b%.2fs (${t / b}%.2fx raw, host drift ${hostDrift.getOrElse(1.0)}%.2fx) — survived a same-JVM re-run")
     }
     // Errors from FINAL timings (post-retry), so a failure the retry
     // surfaced on a suite-passing query still lands in the machine-read
@@ -215,7 +203,7 @@ object Bench {
     val totalF = finalTimed.map(_._2).sum
     val regs = regressions
       .map { case (k, t, b) => s"${q(k)}:[$t,$b]" }.mkString("{", ",", "}")
-    val jsonLine = s"""{"metric":"total","value":$totalF,"unit":"sec","n_errors":$nErrors,"n_regressions":${regressions.size},"n_flag_transient":${firstFlags.size - regressions.size},"flag_block":$wasBlock,"host_drift":$hostDrift,"drift_alert":$driftAlert,"cpus":$cpus,"warmup_passes":$warmups,"timed_passes":$passes,"queries":$qsF,"errors":$errs,"regressions":$regs,"sf":"$sfDir"}"""
+    val jsonLine = s"""{"metric":"total","value":$totalF,"unit":"sec","n_errors":$nErrors,"n_regressions":${regressions.size},"n_flag_transient":${firstFlags.size - regressions.size},"flag_block":$wasBlock,${BenchGate.driftFields(hostDrift)},"cpus":$cpus,"warmup_passes":$warmups,"timed_passes":$passes,"queries":$qsF,"errors":$errs,"regressions":$regs,"sf":"$sfDir"}"""
     // Driver contract repair (optimization r15, VERDICT r14 item 2): the
     // driver has NEVER parsed this line (BENCH_r09..r14: parsed=null) —
     // sbt's `[success]` epilogue followed it on stdout (suppressed via
@@ -235,10 +223,11 @@ object Bench {
     // uniformly faster/slower" to host load from a file instead of
     // re-deriving it each verdict. Best-effort append — a read-only
     // checkout must not fail the bench.
-    if (gateActive) try { // full sf0.1 suite at the 32-core ledger condition
+    if (gateActive) try { // full sf0.1 suite at the ledger's core count
+      val drift = hostDrift.getOrElse(1.0) // defined whenever the gate runs
       val line = s"""{"ts":"${java.time.Instant.now()}","n":${names.size},""" +
         s""""total_sec":${math.round(totalF * 1000) / 1000.0},""" +
-        s""""host_drift":${math.round(hostDrift * 1000) / 1000.0},""" +
+        s""""host_drift":${math.round(drift * 1000) / 1000.0},""" +
         s""""n_regressions":${regressions.size},"n_errors":$nErrors}"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get("tools/drift_history.jsonl"),

@@ -33,20 +33,6 @@ import org.apache.spark.sql.types._
   */
 object Clusters {
 
-  /** Largest edge list a graph operator runs in ONE task, sized like a
-    * broadcast threshold: 4M edges ≈ 64 MB of longs. The one cap for every
-    * operator with a one-task path. */
-  private val OneTaskMaxEdges = 4000000
-
-  /** Whether `e` has at most [[OneTaskMaxEdges]] rows. A `limit(cap+1)
-    * .count()`, not a full count (the PQ hard-cap idiom): it short-circuits
-    * the moment cap+1 edges exist, so the small-graph case pays a few
-    * partitions and the 100 TB case never pays a full pass over an edge
-    * list it is about to shuffle anyway. The exact size is irrelevant —
-    * only which side of the cap. */
-  private def fitsOneTask(e: DataFrame): Boolean =
-    e.limit(OneTaskMaxEdges + 1).count() <= OneTaskMaxEdges
-
   /** Connected components of the undirected graph given by `edges`
     * (`aCol`, `bCol`): returns (id, comp) with `comp` = the minimum vertex
     * id reachable from `id`. Only vertices that appear in `edges` are
@@ -57,7 +43,7 @@ object Clusters {
     * set of a dedup pass is the NEAR-DUP RATE times the corpus, orders of
     * magnitude smaller than the corpus itself, and the iterative loop costs
     * O(log diameter) rounds of full-graph shuffles plus per-round driver
-    * scheduling REGARDLESS of size. Up to [[OneTaskMaxEdges]] the exact
+    * scheduling REGARDLESS of size. Up to [[OneTask.MaxRows]] edges the exact
     * union-find runs inside ONE task via mapPartitions over a coalesced
     * edge list — one job, no rounds. Above it, the label-propagation loop
     * is the scale path. Both produce identical (id, min-reachable-id)
@@ -67,7 +53,7 @@ object Clusters {
     val e = edges
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .localCheckpoint(eager = false)
-    if (fitsOneTask(e)) componentsOneTask(e) else componentsRounds(e, maxIter)
+    if (OneTask.fits(e)) componentsOneTask(e) else componentsRounds(e, maxIter)
   }
 
   /** Exact union-find (path halving + union-by-min) over the whole edge
@@ -256,7 +242,7 @@ object Clusters {
     * Size dispatch (the [[connectedComponents]] discipline, same cap): a
     * transition or co-occurrence graph is vocabulary-sized, and the round
     * loop pays a few Spark jobs per round whatever the size. Up to
-    * [[OneTaskMaxEdges]] edges all rounds run inside ONE task
+    * [[OneTask.MaxRows]] edges all rounds run inside ONE task
     * ([[pageRankOneTask]]) — a fixed job count whatever `iterations` is.
     * Above the cap the distributed round loop ([[pageRankRounds]]) is the
     * scale path: per round ONE edge⋈rank hash join on src + ONE dst-keyed
@@ -277,18 +263,12 @@ object Clusters {
       .localCheckpoint(eager = false) // read by the size check and the rank pass
     val nodeType = e.schema("src").dataType
     val oneTask = nodeType == e.schema("dst").dataType &&
-      OneTaskNodeTypes(nodeType) &&
+      OneTask.KeyTypes(nodeType) &&
       e.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean &&
-      fitsOneTask(e)
+      OneTask.fits(e)
     if (oneTask) pageRankOneTask(e, iterations, dampingMilli)
     else pageRankRounds(e, iterations, dampingMilli)
   }
-
-  /** Node types whose JVM equality (`Row.get`) is SQL equality — the ones
-    * [[pageRankOneTask]] can key a hash map by. Doubles (−0.0, NaN), binary
-    * and collated strings compare differently and take the round loop. */
-  private val OneTaskNodeTypes: Set[DataType] =
-    Set(StringType, LongType, IntegerType, ShortType, ByteType)
 
   /** The distributed round loop of [[pageRankWeighted]] — the any-size
     * scale path. `e` is (src, dst, w: bigint); `localCheckpoint` truncates

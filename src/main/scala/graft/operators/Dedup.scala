@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TextFunctions
 
 /** Deduplication operators for document corpora (SURVEY.md §2 B-10).
@@ -16,6 +20,12 @@ import graft.functions.TextFunctions
   *   frequency, so extremely common shingles explode the join; `maxShingleDf`
   *   drops them (they carry no discriminative signal). This is the exact
   *   verifier; `nearMinhashLsh` is the sub-quadratic candidate generator.
+  *   Size dispatch (with `containmentPairs`): each document is shingled
+  *   once; up to `OneTask.MaxRows` (document, shingle) rows the pair
+  *   counts come from ONE task (per-document ScanCount), above it from the
+  *   distributed self-join. Both do Σ df² pair instances over the kept
+  *   shingles — the self-join's sort-merge join already runs each
+  *   shingle's whole posting in one task — and return identical rows.
   * - `nearMinhashLsh`: banded MinHash built from codegen'd built-ins —
   *   AND-amplification inside each band (all `rowsPerBand` minhashes must
   *   match), OR across `numBands` bands. Candidate pairs come from an
@@ -102,17 +112,25 @@ object Dedup {
     * regardless of corpus size; at test scale (≤10⁵ docs) the cap never
     * binds, so results are unchanged. Corpora where the cap bites should use
     * banded MinHash (`minhashPairs`) as the candidate generator instead —
-    * its cost is corpus-linear by construction. */
+    * its cost is corpus-linear by construction.
+    *
+    * Size dispatch: each document is shingled once ([[shingleKeys]]). Up to
+    * [[OneTask.MaxRows]] (document, shingle) rows the pair counts come from
+    * ONE task ([[pairCountsOneTask]], per-document ScanCount over in-task
+    * postings); above it, the guarded self-join ([[pairCountsJoin]]) is the
+    * scale path. The one-task work is Σ df² over kept shingles — the same
+    * pair instances the self-join emits, whose sort-merge join already runs
+    * each shingle's whole posting in one task. Both paths return identical
+    * rows. The cap is measured, not assumed: on corpora whose pair work
+    * grows with the square of their size (sf0.1 documents repeated up to
+    * 15 times, 3.9M rows) the one task stayed 2.7–7.6× faster than the
+    * self-join on 4 cores (SCALE.md, near-dup). */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
       n: Int, threshold: Double,
       maxShingleDf: Long = Long.MaxValue,
       maxShingleDfFraction: Option[Double] = None): DataFrame =
-    shinglePairCounts(df, textCol, idCol, n, maxShingleDf,
-      maxShingleDfFraction)
-      .withColumn("jaccard",
-        col("i").cast("double") / (col("ca") + col("cb") - col("i")))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
+    jaccard(shinglePairCounts(df, textCol, idCol, n, maxShingleDf,
+      maxShingleDfFraction), threshold)
 
   /** Exact shingle CONTAINMENT pairs: `C = |A∩B| / min(|A|, |B|)` — the
     * inclusion metric Jaccard structurally misses: a 50-shingle quote
@@ -121,41 +139,83 @@ object Dedup {
     * boilerplate-inclusion / quotation / near-superset detector that
     * union-normalized dedup leaves behind (the containment form of
     * Broder's resemblance work — public method). Same guarded
-    * sub-quadratic machinery as [[ngramJaccardPairs]]: stop-shingle df
-    * guard, singleton prune, hashed 8-byte join keys. */
+    * sub-quadratic machinery and size dispatch as [[ngramJaccardPairs]]:
+    * stop-shingle df guard, singleton prune, hashed 8-byte keys. */
   def containmentPairs(df: DataFrame, textCol: String, idCol: String,
       n: Int, threshold: Double,
       maxShingleDf: Long = Long.MaxValue,
       maxShingleDfFraction: Option[Double] = None): DataFrame =
-    shinglePairCounts(df, textCol, idCol, n, maxShingleDf,
-      maxShingleDfFraction)
+    containment(shinglePairCounts(df, textCol, idCol, n, maxShingleDf,
+      maxShingleDfFraction), threshold)
+
+  /** The Jaccard tail over `(a_id, b_id, i, ca, cb)` pair counts. */
+  private[graft] def jaccard(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .withColumn("jaccard",
+        col("i").cast("double") / (col("ca") + col("cb") - col("i")))
+      .filter(col("jaccard") >= threshold)
+      .select("a_id", "b_id", "jaccard")
+
+  /** The containment tail over `(a_id, b_id, i, ca, cb)` pair counts. */
+  private[graft] def containment(pairs: DataFrame,
+      threshold: Double): DataFrame =
+    pairs
       .withColumn("containment",
         col("i").cast("double") / least(col("ca"), col("cb")))
       .filter(col("containment") >= threshold)
       .select("a_id", "b_id", "containment")
 
-  /** The shared guarded pair-generation tail of the exact shingle-overlap
+  /** The shared guarded pair-generation core of the exact shingle-overlap
     * family: `(a_id, b_id, i, ca, cb)` — intersection size plus both
-    * distinct-shingle counts — for every co-shingled pair. All the scale
-    * machinery lives here once: df guard, singleton prune, xxhash64 keys,
-    * exchange-reusing self-join. */
+    * distinct-shingle counts — for every co-shingled pair, from the
+    * one-task kernel or the distributed self-join by input size. */
   private def shinglePairCounts(df: DataFrame, textCol: String, idCol: String,
-      n: Int,
-      maxShingleDf: Long = Long.MaxValue,
-      maxShingleDfFraction: Option[Double] = None): DataFrame = {
-    // Every consumer below uses the shingle only through EQUALITY, so hash
-    // it once to a 64-bit key at explode time: the df-group, hot anti-join
-    // and pair self-join then all shuffle 8-byte longs instead of n-gram
-    // strings (measured ~25% off the whole query at sf0.1; the win grows
-    // with shingle width). Exactness: results differ from string keys only
-    // on an xxhash64 collision within one corpus's shingle set — ~2⁻⁴⁵ odds
-    // at 10⁹ distinct shingles — the standard shingle-hashing posture every
-    // at-scale near-dup system takes.
-    val sh0 = df
-      .select(col(idCol).as("doc"),
-        explode(array_distinct(TextFunctions.wordShingles(col(textCol), n)))
-          .as("gs"))
-      .select(col("doc"), xxhash64(col("gs")).as("g"))
+      n: Int, maxShingleDf: Long,
+      maxShingleDfFraction: Option[Double]): DataFrame = {
+    val keys = shingleKeys(df, textCol, idCol, n)
+    // a document without shingles is one row, so the check also bounds N
+    val oneTask = OneTask.KeyTypes(keys.schema("doc").dataType) &&
+      OneTask.fits(keys.select(explode_outer(col("gs"))))
+    if (oneTask) pairCountsOneTask(keys, maxShingleDf, maxShingleDfFraction)
+    else pairCountsJoin(keys, maxShingleDf, maxShingleDfFraction)
+  }
+
+  /** `(doc, gs)`: one row per input row, `gs` its distinct word n-gram
+    * shingles hashed to 64-bit keys. Every consumer uses a shingle only
+    * through EQUALITY, so it is hashed once here: the df-group, hot
+    * anti-join and pair self-join then all shuffle 8-byte longs instead of
+    * n-gram strings (measured ~25% off the whole query at sf0.1; the win
+    * grows with shingle width). Exactness: results differ from string keys
+    * only on an xxhash64 collision within one corpus's shingle set — ~2⁻⁴⁵
+    * odds at 10⁹ distinct shingles — the standard shingle-hashing posture
+    * every at-scale near-dup system takes. Materialized once (lazily, by
+    * the size check's job, which runs in parallel), so both pair-counting
+    * paths read it without shingling again. localCheckpoint trades fault
+    * tolerance for speed (blocks die with their executor) — the right
+    * local/test choice; a long-running production job would use reliable
+    * checkpoint() or replicated persist here. */
+  private[graft] def shingleKeys(df: DataFrame, textCol: String,
+      idCol: String, n: Int): DataFrame =
+    df.select(col(idCol).as("doc"),
+        transform(array_distinct(TextFunctions.wordShingles(col(textCol), n)),
+          s => xxhash64(s)).as("gs"))
+      .localCheckpoint(eager = false)
+
+  /** The fraction guard's df cap on a corpus of `rows` documents:
+    * max(5, ⌈fraction × rows⌉) capped at 10 000. The Column form runs in
+    * [[pairCountsJoin]]'s plan; [[fractionCapOf]] is the same arithmetic
+    * for [[pairCountsOneTask]]'s in-task count. */
+  private def fractionCap(rows: Column, frac: Double): Column =
+    least(greatest(lit(5L), ceil(rows * frac).cast("long")), lit(10000L))
+
+  private def fractionCapOf(rows: Long, frac: Double): Long =
+    math.min(math.max(5L, math.ceil(rows * frac).toLong), 10000L)
+
+  /** The distributed pair counting over [[shingleKeys]] — the any-size
+    * scale path: df guard, singleton prune, exchange-reusing self-join. */
+  private[graft] def pairCountsJoin(keys: DataFrame, maxShingleDf: Long,
+      maxShingleDfFraction: Option[Double]): DataFrame = {
+    val sh0 = keys.select(col("doc"), explode(col("gs")).as("g"))
     // the guard broadcasts the DROPPED heavy-hitter set and anti-joins: at
     // most totalShingles/cap shingles can exceed the cap, so that set is
     // provably tiny, while the kept set is the whole corpus vocabulary —
@@ -168,20 +228,15 @@ object Dedup {
     }
     val filtered0 = maxShingleDfFraction match {
       case Some(frac) =>
-        val total = df.agg(count(lit(1)).as("_n"))
+        val total = keys.agg(count(lit(1)).as("_n"))
         guarded(_.crossJoin(broadcast(total))
-          .filter(col("df") >
-            least(greatest(lit(5L), ceil(col("_n") * frac).cast("long")),
-              lit(10000L))))
+          .filter(col("df") > fractionCap(col("_n"), frac)))
       case None if maxShingleDf == Long.MaxValue => sh0
       case None => guarded(_.filter(col("df") > maxShingleDf))
     }
     // The (doc, shingle) table feeds four consumers (doc frequencies,
     // per-doc counts, both sides of the pair join); Spark has no plan-level
-    // CSE, so materialize it once (lazily, on first action). localCheckpoint
-    // trades fault tolerance for speed (blocks die with their executor) —
-    // the right local/test choice; a long-running production job would use
-    // reliable checkpoint() or replicated persist here.
+    // CSE, so materialize it once (lazily, on first action).
     val filtered = filtered0.localCheckpoint(eager = false)
     val counts = filtered.groupBy("doc").agg(count(lit(1)).as("c"))
     // A shingle in exactly ONE document can never produce a pair, so prune
@@ -193,8 +248,7 @@ object Dedup {
     // Denominator counts above are computed BEFORE the prune: Jaccard
     // values are bit-identical with or without it.
     val paired = filtered
-      .withColumn("kdf", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("g")))
+      .withColumn("kdf", count(lit(1)).over(Window.partitionBy("g")))
       .filter(col("kdf") >= 2)
       .select("doc", "g")
     val inter = paired.select(col("doc").as("a_id"), col("g"))
@@ -204,6 +258,143 @@ object Dedup {
     inter
       .join(counts.select(col("doc").as("a_id"), col("c").as("ca")), "a_id")
       .join(counts.select(col("doc").as("b_id"), col("c").as("cb")), "b_id")
+  }
+
+  /** [[pairCountsJoin]]'s rows computed inside ONE task over [[shingleKeys]]
+    * (doc of a [[OneTask.KeyTypes]] type): one pass counts the rows `N` and
+    * each key's df, the guard drops keys above its cap, then ScanCount per
+    * document (the inverted-list merge of approximate string search, Li,
+    * Lu & Lu, ICDE 2008): for each document `a`, walk the postings of its
+    * kept keys and count every later document `b` in a dense counter. The
+    * self-join's relational semantics carry over exactly:
+    *  - every array element counts, so a key repeated inside one row (a
+    *    hash collision) counts twice, and a duplicate id counts with its
+    *    multiplicity (its `c` sums over all of its rows);
+    *  - a null id counts toward `N` and df only, never toward a pair;
+    *  - `a_id < b_id` in SQL order (numeric, or UTF-8 byte order for
+    *    strings). */
+  private[graft] def pairCountsOneTask(keys: DataFrame, maxShingleDf: Long,
+      maxShingleDfFraction: Option[Double]): DataFrame = {
+    val idType = keys.schema("doc").dataType
+    val schema = new StructType()
+      .add("a_id", idType).add("b_id", idType)
+      .add("i", LongType).add("ca", LongType).add("cb", LongType)
+    keys.coalesce(1).mapPartitions { rows =>
+      // one (doc slot, key) element per array entry; slot -1 = null id
+      val slot = mutable.HashMap.empty[Any, Int]
+      val ids = mutable.ArrayBuffer.empty[Any]
+      val (elemDoc, elemKey) =
+        (mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Long])
+      var nRows = 0L
+      rows.foreach { r =>
+        nRows += 1
+        val gs = if (r.isNullAt(1)) Nil else r.getSeq[Long](1)
+        if (gs.nonEmpty) {
+          val d = if (r.isNullAt(0)) -1 else {
+            val id = r.get(0)
+            slot.getOrElseUpdate(id, { ids += id; ids.size - 1 })
+          }
+          gs.foreach { g => elemDoc += d; elemKey += g }
+        }
+      }
+      val (ed, ek) = (elemDoc.result(), elemKey.result())
+      // distinct keys (sorted) with their df
+      val uk = ek.clone()
+      java.util.Arrays.sort(uk)
+      val kdf = new Array[Int](uk.length)
+      var nk = 0
+      var e = 0
+      while (e < uk.length) {
+        if (nk == 0 || uk(e) != uk(nk - 1)) { uk(nk) = uk(e); nk += 1 }
+        kdf(nk - 1) += 1
+        e += 1
+      }
+      val cap =
+        maxShingleDfFraction.fold(maxShingleDf)(fractionCapOf(nRows, _))
+      // dense doc index = rank in SQL id order, so `b > a` is `b_id > a_id`
+      val byRank = sortedSlots(ids, idType)
+      val nDocs = byRank.length
+      val rank = new Array[Int](nDocs)
+      for (r <- 0 until nDocs) rank(byRank(r)) = r
+      // the kept elements of non-null ids, as (doc rank, key index), then
+      // each doc's keys and each key's postings as one flat array plus
+      // start offsets (CSR)
+      val (keptDoc, keptKey) =
+        (mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Int])
+      val c = new Array[Long](nDocs)
+      val postStart = new Array[Int](nk + 1)
+      e = 0
+      while (e < ed.length) {
+        if (ed(e) >= 0) {
+          val k = java.util.Arrays.binarySearch(uk, 0, nk, ek(e))
+          if (kdf(k) <= cap) {
+            val d = rank(ed(e))
+            keptDoc += d; keptKey += k
+            c(d) += 1; postStart(k + 1) += 1
+          }
+        }
+        e += 1
+      }
+      val (kd, kk) = (keptDoc.result(), keptKey.result())
+      val docStart = new Array[Int](nDocs + 1)
+      for (d <- 0 until nDocs) docStart(d + 1) = docStart(d) + c(d).toInt
+      for (k <- 0 until nk) postStart(k + 1) += postStart(k)
+      val docKeys = new Array[Int](kd.length)
+      val docFill = docStart.clone()
+      for (x <- kd.indices) {
+        docKeys(docFill(kd(x))) = kk(x); docFill(kd(x)) += 1
+      }
+      // filled in doc order, so each key's postings ascend
+      val post = new Array[Int](kd.length)
+      val postFill = postStart.clone()
+      for (d <- 0 until nDocs; p <- docStart(d) until docStart(d + 1)) {
+        val k = docKeys(p)
+        post(postFill(k)) = d; postFill(k) += 1
+      }
+      // ScanCount, docs in rank order: `cur(k)` is key k's next unvisited
+      // posting entry — always one of the current doc's own entries, so
+      // every entry after it is the same doc (skipped) or a later one
+      val cur = postStart.clone()
+      val cnt = new Array[Long](nDocs)
+      val touched = new Array[Int](nDocs)
+      Iterator.range(0, nDocs).flatMap { a =>
+        var nt = 0
+        for (p <- docStart(a) until docStart(a + 1)) {
+          val k = docKeys(p)
+          cur(k) += 1
+          var q = cur(k)
+          while (q < postStart(k + 1)) {
+            val b = post(q)
+            if (b != a) {
+              if (cnt(b) == 0) { touched(nt) = b; nt += 1 }
+              cnt(b) += 1
+            }
+            q += 1
+          }
+        }
+        Array.tabulate(nt) { t =>
+          val b = touched(t)
+          val i = cnt(b)
+          cnt(b) = 0
+          Row(ids(byRank(a)), ids(byRank(b)), i, c(a), c(b))
+        }
+      }
+    }(Encoders.row(schema))
+  }
+
+  /** The slots of `ids` sorted by SQL order of their values: numeric for
+    * integral types, UTF-8 byte order (Spark's binary collation) for
+    * strings. */
+  private def sortedSlots(ids: mutable.ArrayBuffer[Any],
+      idType: DataType): Array[Int] = {
+    val slots = ids.indices.toArray
+    idType match {
+      case StringType =>
+        val u = ids.map(v => UTF8String.fromString(v.asInstanceOf[String]))
+        slots.sortWith((x, y) => u(x).binaryCompare(u(y)) < 0)
+      case _ =>
+        slots.sortBy(s => ids(s).asInstanceOf[Number].longValue)
+    }
   }
 
   /** Near-duplicate pairs via banded MinHash LSH, composed from codegen'd

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit pins for the perf-regression gate's pure logic (r13 verdict
   * item 2): the 1.5x/0.25s flag rule, the suite-tail contiguous-block
-  * transient signature, and the retry fold. No SparkSession. */
+  * transient signature, the retry fold, and host drift only at the
+  * ledger's recorded core count. No SparkSession. */
 class BenchGateSpec extends AnyFunSuite {
 
   private val base = Map("q_a" -> 1.0, "q_b" -> 2.0, "q_c" -> 0.1)
@@ -67,5 +68,48 @@ class BenchGateSpec extends AnyFunSuite {
       "q_c" -> (1.0, Option.empty[String]))
     val folded = BenchGate.foldRetry(timed, retry)
     assert(BenchGate.regressions(folded, ledger, 1.0).map(_._1) === Seq("q_a"))
+  }
+
+  private val ledger32 = """{"queries": {"q_a": 1.0}, "cpus": 32, "sf": "x"}"""
+  private val ratios = Seq(1.5, 1.0, 1.2) // median 1.2: the warning tier
+
+  test("host drift at the ledger's core count: computed, warned, gate on") {
+    val cores = BenchGate.ledgerCpus(ledger32)
+    assert(cores === Some(32))
+    val drift = BenchGate.hostDrift(ratios, 32, cores)
+    assert(drift === Some(1.2))
+    assert(BenchGate.driftMessage(drift)
+      .exists(_.startsWith("HOST DRIFT WARNING")))
+    assert(BenchGate.driftMessage(Some(1.4))
+      .exists(_.startsWith("HOST DRIFT 1.40x")))
+    assert(BenchGate.driftMessage(Some(1.05)).isEmpty)
+    assert(BenchGate.driftFields(drift) ===
+      "\"host_drift\":1.2,\"drift_alert\":false")
+    assert(BenchGate.driftFields(Some(1.4)) ===
+      "\"host_drift\":1.4,\"drift_alert\":true")
+    assert(BenchGate.hostDrift(Seq.empty, 32, cores) === Some(1.0))
+    assert(BenchGate.gateActive("/d/sf0.1", fullSuite = true, 32, cores))
+    assert(!BenchGate.gateActive("/d/sf0.1", fullSuite = false, 32, cores))
+    assert(!BenchGate.gateActive("/d/sf0.01", fullSuite = true, 32, cores))
+  }
+
+  test("host drift at another core count: null, no alert, no gate") {
+    val cores = BenchGate.ledgerCpus(ledger32)
+    val drift = BenchGate.hostDrift(Seq(2.0, 2.0, 2.0), 8, cores)
+    assert(drift === None)
+    assert(BenchGate.driftMessage(drift).isEmpty)
+    assert(BenchGate.driftFields(drift) ===
+      "\"host_drift\":null,\"drift_alert\":false")
+    assert(!BenchGate.gateActive("/d/sf0.1", fullSuite = true, 8, cores))
+  }
+
+  test("host drift with no recorded core count: null at every core count") {
+    val cores =
+      BenchGate.ledgerCpus("""{"queries": {"q_a": 1.0}, "sf": "x"}""")
+    assert(cores === None)
+    for (cpus <- Seq(4, 8, 32)) {
+      assert(BenchGate.hostDrift(Seq(2.0), cpus, cores) === None)
+      assert(!BenchGate.gateActive("/d/sf0.1", fullSuite = true, cpus, cores))
+    }
   }
 }

@@ -182,6 +182,30 @@ class DedupSpec extends SparkSpec {
     assert(all.contains((0L, 2L)) && g3.subsetOf(all))
   }
 
+  test("ngramJaccardPairs on a 300-document corpus runs at most 6 jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // 100 families of 3 near-duplicates: 12 family words, the last one
+    // replaced per document
+    val corpus = (0 until 300).map { i =>
+      (i.toLong, ((0 until 11).map(j => s"g${i / 3}_$j") :+ s"x$i")
+        .mkString(" "))
+    }.toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      assert(Dedup.ngramJaccardPairs(corpus, "text", "doc_id", 3, 0.05,
+        maxShingleDfFraction = Some(0.01)).collect().nonEmpty)
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get <= 6, s"${jobs.get} jobs")
+  }
+
   test("containment finds the embedded quote Jaccard misses") {
     // A short doc quoted VERBATIM inside a long one: Jaccard is diluted by
     // the long doc's union, containment is ~1 — exactly the inclusion case

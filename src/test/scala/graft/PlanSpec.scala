@@ -550,11 +550,19 @@ class PlanSpec extends SparkSpec {
     // The stop-shingle anti-join itself sits BEHIND the (doc, shingle)
     // localCheckpoint so it cannot appear in this plan; what must hold
     // downstream: equi-join pair generation (never a product) and
-    // map-side-partial intersection counting.
+    // map-side-partial intersection counting. A corpus this small counts
+    // its pairs in one task, so the distributed machinery — the path every
+    // corpus above the one-task cap takes — is planned directly.
+    import graft.operators.Dedup
+    val keys = Dedup.shingleKeys(graft.Tables.documents(spark, sf), "text",
+      "doc_id", 3)
+    val scale = planString(Dedup.containment(
+      Dedup.pairCountsJoin(keys, Long.MaxValue, Some(0.01)), 0.6))
     val p = planString(graft.queries.LlmOps.qContainment(spark, sf))
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
-    assert(p.contains("partial_count"), p.take(3000))
+    for (plan <- Seq(p, scale))
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoopJoin"), plan.take(3000))
+    assert(scale.contains("partial_count"), scale.take(3000))
   }
 
   test("phash attaches dup-group sizes via a bounded broadcast, never a corpus window") {

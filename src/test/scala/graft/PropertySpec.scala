@@ -5,7 +5,8 @@ import scala.util.Random
 
 /** Seeded randomized property checks for the operators whose value IS a
   * guarantee: the winnowing recall bound, URL-canonicalization idempotence,
-  * partial-aggregate merge equivalence, and PageRank mass invariants. A
+  * partial-aggregate merge equivalence, PageRank mass invariants, and the
+  * one-task paths' equivalence with the distributed plans they replace. A
   * fixed seed keeps every run identical (no flaky CI), while the random
   * structure covers shapes no hand-written fixture would. */
 class PropertySpec extends SparkSpec {
@@ -315,5 +316,72 @@ class PropertySpec extends SparkSpec {
     intercept[Exception](Clusters.pageRankRounds(e, 10, 850).collect())
     intercept[Exception](Clusters.pageRankWeighted(e, "src", "dst", "w")
       .collect())
+  }
+
+  test("PROPERTY shingle pairs: the one-task kernel returns the self-join's rows (random corpora)") {
+    // Seeded random corpora with duplicate and null doc ids (long ids, and
+    // string ids whose UTF-8 and UTF-16 orders differ); null, empty, one-
+    // and two-token texts; double and trailing spaces; shingles repeated
+    // inside a document; non-ASCII words. Each runs with n = 1, 2, 3 under
+    // a fraction guard that drops the commonest shingles (its cap,
+    // ⌈0.25·N⌉ for N = 20..39 rows, moves with every row counted), an
+    // absolute maxShingleDf, and no guard; plus the empty corpus.
+    import graft.operators.Dedup
+    import org.apache.spark.sql.DataFrame
+    val rnd = freshRandom(9)
+    val vocab = IndexedSeq("a", "b", "c", "d", "e", "é", "日本", "straße",
+      "a", "b", "") // "" joins as a double (or trailing) space
+    def text(): Option[String] = rnd.nextInt(10) match {
+      case 0 => None
+      case 1 => Some("")
+      case 2 => Some(randTokens(rnd, 1, vocab).mkString(" "))
+      case 3 => Some(randTokens(rnd, 2, vocab).mkString(" "))
+      case _ => Some(randTokens(rnd, 3 + rnd.nextInt(10), vocab).mkString(" "))
+    }
+    val stringIds = IndexedSeq("a", "b", "é", "\uFF21", "\uD834\uDD1E", "日")
+    def corpus(strings: Boolean): DataFrame = {
+      val docs = Seq.fill(20 + rnd.nextInt(20)) {
+        val id = if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(15))
+        (id, text())
+      }
+      if (strings) docs.map { case (id, t) =>
+        (id.map(i => stringIds(i % stringIds.size) + (i / stringIds.size)), t)
+      }.toDF("doc_id", "text")
+      else docs.map { case (id, t) => (id.map(_.toLong), t) }
+        .toDF("doc_id", "text")
+    }
+    val corpora = Seq(corpus(false), corpus(false), corpus(true),
+      corpus(true), Seq.empty[(Option[Long], Option[String])]
+        .toDF("doc_id", "text"))
+    val guards = Seq((Long.MaxValue, Some(0.25)), (3L, None),
+      (Long.MaxValue, None))
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    // a zero Jaccard denominator (duplicate ids) throws under ANSI: then
+    // both paths must throw
+    def outcome(df: DataFrame) = scala.util.Try(rows(df)).toOption
+    var guardBit = false
+    for ((docs, caseIdx) <- corpora.zipWithIndex; n <- 1 to 3) {
+      val keys = Dedup.shingleKeys(docs, "text", "doc_id", n)
+      for ((maxDf, frac) <- guards) {
+        val at = s"corpus $caseIdx n=$n maxShingleDf=$maxDf fraction=$frac"
+        val one = Dedup.pairCountsOneTask(keys, maxDf, frac)
+        val join = Dedup.pairCountsJoin(keys, maxDf, frac)
+        val counts = rows(join.select("a_id", "b_id", "i", "ca", "cb"))
+        assert(rows(one) === counts, at)
+        assert(outcome(Dedup.jaccard(one, 0.0)) ===
+          outcome(Dedup.jaccard(join, 0.0)), at)
+        assert(rows(Dedup.containment(one, 0.3)) ===
+          rows(Dedup.containment(join, 0.3)), at)
+        if (frac.nonEmpty) guardBit ||= counts !=
+          rows(Dedup.pairCountsJoin(keys, Long.MaxValue, None)
+            .select("a_id", "b_id", "i", "ca", "cb"))
+      }
+      // the public operator (dispatching to one task here) agrees too
+      assert(outcome(Dedup.ngramJaccardPairs(docs, "text", "doc_id", n, 0.2,
+          maxShingleDfFraction = Some(0.25))) ===
+        outcome(Dedup.jaccard(Dedup.pairCountsJoin(keys, Long.MaxValue,
+          Some(0.25)), 0.2)), s"corpus $caseIdx n=$n")
+    }
+    assert(guardBit, "the fraction guard never dropped a shingle")
   }
 }
