@@ -75,7 +75,8 @@ object TextFunctions {
     * with no common-subexpression elimination, and the naive
     * `transform(sequence(...), i -> concat(slice(tokens, i, n)))` re-splits
     * the document once per shingle index — measured ~100× slower over the
-    * sf0.1 corpus. */
+    * sf0.1 corpus. A consumer that only hashes the distinct shingles uses
+    * [[shingleHashes]], the one-pass kernel of exactly that. */
   def wordShingles(text: Column, n: Int): Column = {
     val ws = tokens(text)
     val m = greatest(size(ws) - (n - 1), lit(0))
@@ -85,6 +86,15 @@ object TextFunctions {
       transform(zipped,
         s => concat_ws(" ", (0 until n).map(k => s.getField(s"w$k")): _*)))
       .otherwise(array().cast("array<string>"))
+  }
+
+  /** `transform(array_distinct(wordShingles(text, n)), s -> xxhash64(s))`
+    * in one kernel pass over a UTF8_BINARY string: the same values in the
+    * same order. See [[graft.expressions.ShingleHashes]] for why this is a
+    * kernel and the bit-compat contract. */
+  def shingleHashes(text: Column, n: Int): Column = {
+    import org.apache.spark.sql.graft.Bridge
+    Bridge.column(graft.expressions.ShingleHashes(Bridge.expression(text), n))
   }
 
   /** All MinHash values [firstHash, firstHash + numHashes) in one kernel

@@ -21,11 +21,14 @@ import graft.functions.TextFunctions
   *   drops them (they carry no discriminative signal). This is the exact
   *   verifier; `nearMinhashLsh` is the sub-quadratic candidate generator.
   *   Size dispatch (with `containmentPairs`): each document is shingled
-  *   once; up to `OneTask.MaxRows` (document, shingle) rows the pair
-  *   counts come from ONE task (per-document ScanCount), above it from the
-  *   distributed self-join. Both do Σ df² pair instances over the kept
-  *   shingles — the self-join's sort-merge join already runs each
-  *   shingle's whole posting in one task — and return identical rows.
+  *   once, by one kernel pass per text (`ShingleHashes`: hashed distinct
+  *   word n-grams, linear in the text's bytes); up to `OneTask.MaxRows`
+  *   (document, shingle) rows the pair counts come from ONE task
+  *   (per-document ScanCount), above it from the distributed self-join.
+  *   Both do Σ df² pair instances over the kept shingles — the self-join's
+  *   sort-merge join already runs each shingle's whole posting in one
+  *   task — and return identical rows. The one task emits only the pairs
+  *   that can pass the threshold, not every co-shingled pair.
   * - `nearMinhashLsh`: banded MinHash built from codegen'd built-ins —
   *   AND-amplification inside each band (all `rowsPerBand` minhashes must
   *   match), OR across `numBands` bands. Candidate pairs come from an
@@ -130,7 +133,7 @@ object Dedup {
       maxShingleDf: Long = Long.MaxValue,
       maxShingleDfFraction: Option[Double] = None): DataFrame =
     jaccard(shinglePairCounts(df, textCol, idCol, n, maxShingleDf,
-      maxShingleDfFraction), threshold)
+      maxShingleDfFraction, threshold), threshold)
 
   /** Exact shingle CONTAINMENT pairs: `C = |A∩B| / min(|A|, |B|)` — the
     * inclusion metric Jaccard structurally misses: a 50-shingle quote
@@ -146,7 +149,7 @@ object Dedup {
       maxShingleDf: Long = Long.MaxValue,
       maxShingleDfFraction: Option[Double] = None): DataFrame =
     containment(shinglePairCounts(df, textCol, idCol, n, maxShingleDf,
-      maxShingleDfFraction), threshold)
+      maxShingleDfFraction, threshold), threshold)
 
   /** The Jaccard tail over `(a_id, b_id, i, ca, cb)` pair counts. */
   private[graft] def jaccard(pairs: DataFrame, threshold: Double): DataFrame =
@@ -168,15 +171,18 @@ object Dedup {
   /** The shared guarded pair-generation core of the exact shingle-overlap
     * family: `(a_id, b_id, i, ca, cb)` — intersection size plus both
     * distinct-shingle counts — for every co-shingled pair, from the
-    * one-task kernel or the distributed self-join by input size. */
+    * one-task kernel or the distributed self-join by input size. The
+    * one-task kernel leaves out pairs that cannot pass either tail at
+    * `threshold`. */
   private def shinglePairCounts(df: DataFrame, textCol: String, idCol: String,
-      n: Int, maxShingleDf: Long,
-      maxShingleDfFraction: Option[Double]): DataFrame = {
+      n: Int, maxShingleDf: Long, maxShingleDfFraction: Option[Double],
+      threshold: Double): DataFrame = {
     val keys = shingleKeys(df, textCol, idCol, n)
     // a document without shingles is one row, so the check also bounds N
     val oneTask = OneTask.KeyTypes(keys.schema("doc").dataType) &&
       OneTask.fits(keys.select(explode_outer(col("gs"))))
-    if (oneTask) pairCountsOneTask(keys, maxShingleDf, maxShingleDfFraction)
+    if (oneTask)
+      pairCountsOneTask(keys, maxShingleDf, maxShingleDfFraction, threshold)
     else pairCountsJoin(keys, maxShingleDf, maxShingleDfFraction)
   }
 
@@ -188,18 +194,33 @@ object Dedup {
     * grows with shingle width). Exactness: results differ from string keys
     * only on an xxhash64 collision within one corpus's shingle set — ~2⁻⁴⁵
     * odds at 10⁹ distinct shingles — the standard shingle-hashing posture
-    * every at-scale near-dup system takes. Materialized once (lazily, by
-    * the size check's job, which runs in parallel), so both pair-counting
-    * paths read it without shingling again. localCheckpoint trades fault
-    * tolerance for speed (blocks die with their executor) — the right
-    * local/test choice; a long-running production job would use reliable
-    * checkpoint() or replicated persist here. */
+    * every at-scale near-dup system takes.
+    *
+    * `gs` is `transform(array_distinct(wordShingles(text, n)), xxhash64)`.
+    * For UTF8_BINARY text one kernel computes it
+    * ([[TextFunctions.shingleHashes]]): the formula's interpreted lambdas,
+    * string concats and string `array_distinct` cost about 2.9 µs of task
+    * time per shingle at sf0.1. The kernel returns the same
+    * values in the same order (null, short, space-edged and invalid UTF-8
+    * texts included; a seeded property spec compares them). Collated text
+    * compares and hashes by its collation, so it keeps the formula.
+    *
+    * Materialized once (lazily, by the size check's job, which runs in
+    * parallel), so both pair-counting paths read it without shingling
+    * again. localCheckpoint trades fault tolerance for speed (blocks die
+    * with their executor) — the right local/test choice; a long-running
+    * production job would use reliable checkpoint() or replicated persist
+    * here. */
   private[graft] def shingleKeys(df: DataFrame, textCol: String,
-      idCol: String, n: Int): DataFrame =
-    df.select(col(idCol).as("doc"),
-        transform(array_distinct(TextFunctions.wordShingles(col(textCol), n)),
-          s => xxhash64(s)).as("gs"))
+      idCol: String, n: Int): DataFrame = {
+    val text = col(textCol)
+    val gs = if (df.select(text).schema.head.dataType == StringType)
+      TextFunctions.shingleHashes(text, n)
+    else transform(array_distinct(TextFunctions.wordShingles(text, n)),
+      s => xxhash64(s))
+    df.select(col(idCol).as("doc"), gs.as("gs"))
       .localCheckpoint(eager = false)
+  }
 
   /** The fraction guard's df cap on a corpus of `rows` documents:
     * max(5, ⌈fraction × rows⌉) capped at 10 000. The Column form runs in
@@ -272,9 +293,20 @@ object Dedup {
     *    multiplicity (its `c` sums over all of its rows);
     *  - a null id counts toward `N` and df only, never toward a pair;
     *  - `a_id < b_id` in SQL order (numeric, or UTF-8 byte order for
-    *    strings). */
+    *    strings).
+    * Bound: a pair is emitted only if `i > max(ca, cb)` or its containment
+    * `i / min(ca, cb)` is at least `min(threshold, 1)`, so only pairs that
+    * can pass the [[jaccard]] or [[containment]] tail at `threshold` leave
+    * the task (q_ngram_jaccard at sf0.1: 590 of its 1.13M co-shingled
+    * pairs pass the Jaccard tail). Nothing either tail keeps or throws on
+    * is dropped: when `i ≤ max(ca, cb)` the Jaccard denominator
+    * `ca + cb − i` is at least `min(ca, cb) ≥ 1`, so Jaccard ≤ containment,
+    * in doubles too (same numerator, larger denominator, monotone
+    * correctly rounded division); every other pair, including the
+    * zero-denominator pairs duplicate ids make (which throw under ANSI),
+    * has `i > max(ca, cb)` and is kept. A threshold ≤ 0 keeps every pair. */
   private[graft] def pairCountsOneTask(keys: DataFrame, maxShingleDf: Long,
-      maxShingleDfFraction: Option[Double]): DataFrame = {
+      maxShingleDfFraction: Option[Double], threshold: Double): DataFrame = {
     val idType = keys.schema("doc").dataType
     val schema = new StructType()
       .add("a_id", idType).add("b_id", idType)
@@ -357,6 +389,7 @@ object Dedup {
       val cur = postStart.clone()
       val cnt = new Array[Long](nDocs)
       val touched = new Array[Int](nDocs)
+      val minContainment = math.min(threshold, 1.0)
       Iterator.range(0, nDocs).flatMap { a =>
         var nt = 0
         for (p <- docStart(a) until docStart(a + 1)) {
@@ -372,12 +405,16 @@ object Dedup {
             q += 1
           }
         }
-        Array.tabulate(nt) { t =>
+        val out = mutable.ArrayBuffer.empty[Row]
+        for (t <- 0 until nt) {
           val b = touched(t)
           val i = cnt(b)
           cnt(b) = 0
-          Row(ids(byRank(a)), ids(byRank(b)), i, c(a), c(b))
+          if (i > math.max(c(a), c(b)) ||
+              i.toDouble / math.min(c(a), c(b)) >= minContainment)
+            out += Row(ids(byRank(a)), ids(byRank(b)), i, c(a), c(b))
         }
+        out
       }
     }(Encoders.row(schema))
   }

@@ -21,14 +21,16 @@ private[graft] object OneTask {
     * near-dup). */
   val MaxRows = 4000000
 
-  /** Whether `df` has at most [[MaxRows]] rows. A `limit(cap+1).count()`,
-    * not a full count (the PQ hard-cap idiom): it short-circuits the moment
-    * cap+1 rows exist, so the small case pays a few partitions and the
-    * 100 TB case never pays a full pass over an input it is about to
-    * shuffle anyway. The exact size is irrelevant — only which side of the
-    * cap. */
+  /** Whether `df` has at most [[MaxRows]] rows: a count of its rows in
+    * ONE job of one stage that writes no shuffle (`toRdd.count()`).
+    * Every caller passes a frame over a lazily checkpointed input, so the
+    * pass is the one that materializes the checkpoint both paths then
+    * read: above the cap it is still one full pass over the input, but
+    * never a shuffle. A `limit(cap+1).count()` is not cheaper: it plans a
+    * SinglePartition exchange behind a local limit, two jobs with each map
+    * task writing up to cap+1 rows to one reducer. */
   def fits(df: DataFrame): Boolean =
-    df.limit(MaxRows + 1).count() <= MaxRows
+    df.queryExecution.toRdd.count() <= MaxRows
 
   /** Key types whose JVM equality (`Row.get`) is SQL equality — the ones a
     * one-task path can key a hash map by. Doubles (−0.0, NaN), binary and

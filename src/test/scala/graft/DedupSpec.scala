@@ -206,6 +206,34 @@ class DedupSpec extends SparkSpec {
     assert(jobs.get <= 6, s"${jobs.get} jobs")
   }
 
+  test("OneTask.fits counts a multi-partition frame in one job with no shuffle") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    import graft.operators.OneTask
+    val frame = spark.sparkContext.parallelize(0 until 1000, 4).toDF("x")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null)
+          shuffled.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      assert(OneTask.fits(frame))
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get === 1, s"${jobs.get} jobs")
+    assert(shuffled.get === 0L, s"${shuffled.get} shuffle bytes written")
+    // both sides of the cap
+    assert(OneTask.fits(spark.range(0, OneTask.MaxRows, 1, 4).toDF()))
+    assert(!OneTask.fits(spark.range(0, OneTask.MaxRows + 1L, 1, 4).toDF()))
+  }
+
   test("containment finds the embedded quote Jaccard misses") {
     // A short doc quoted VERBATIM inside a long one: Jaccard is diluted by
     // the long doc's union, containment is ~1 — exactly the inclusion case

@@ -445,7 +445,8 @@ class PlanSpec extends SparkSpec {
     // explode formulation measured 2.8x slower at sf0.1), and only each
     // replicate's straddling band is ranked. The plan is where the shape
     // is observable; pin it. Straddle candidates broadcast.
-    val p = planString(graft.queries.StatOps.qSubsampleCi(spark, sf))
+    val q = graft.queries.StatOps.qSubsampleCi(spark, sf)
+    val p = planString(q)
     assert(!p.contains("CartesianProduct"), p.take(2000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
     assert(!p.contains("explode(sequence"),
@@ -457,9 +458,27 @@ class PlanSpec extends SparkSpec {
     // (b = -1 OR substr(h, ...)) and the rank-at-position pick filter
     assert("BroadcastHashJoin.*substr\\(h#".r.findFirstIn(p).isDefined,
       s"membership-filtered straddle broadcast join missing:\n${p.take(4000)}")
-    assert("Filter \\(\\(off#\\d+L \\+ cast\\(_we".r.findFirstIn(p).isDefined
-      || p.contains("= pos#"),
-      s"rank-at-position pick filter missing:\n${p.take(4000)}")
+    // pick: an equality Filter directly over a row_number Window per
+    // (flag, b) ordered by cents, comparing the window's rank plus `off`
+    // with `pos`
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo,
+      RowNumber}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val picks = q.queryExecution.sparkPlan.collect {
+      case f @ FilterExec(cond: EqualTo, w: WindowExec)
+          if w.orderSpec.map(_.child).collect { case a: Attribute => a.name }
+            == Seq("cents") &&
+            w.partitionSpec.collect { case a: Attribute => a.name }
+            == Seq("flag", "b") &&
+            w.windowExpression.exists(_.find(_.isInstanceOf[RowNumber])
+              .isDefined) &&
+            w.windowExpression.map(_.toAttribute)
+              .exists(cond.references.contains) &&
+            Set("off", "pos").subsetOf(cond.references.map(_.name).toSet) => f
+    }
+    assert(picks.nonEmpty,
+      s"rank-at-position pick filter missing:\n${q.queryExecution.sparkPlan}")
     // q_communities' final rollup: keyed aggregate + TakeOrdered only
     // (the round-loop plans are behind their per-round localCheckpoints;
     // the loop shape itself is asserted behaviorally in CorpusOpsSpec)

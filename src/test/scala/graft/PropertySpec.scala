@@ -318,6 +318,55 @@ class PropertySpec extends SparkSpec {
       .collect())
   }
 
+  test("PROPERTY shingle hashes: the kernel returns the formula's values in order (random texts)") {
+    // Seeded random texts: null, empty, one- and two-token rows, leading,
+    // doubled and trailing spaces, non-ASCII words (a surrogate pair too),
+    // shingles repeated inside a text; plus invalid UTF-8, which `split`
+    // decodes to U+FFFD. For n = 1..4 the kernel equals
+    // transform(array_distinct(wordShingles(text, n)), xxhash64), value for
+    // value and in order.
+    import graft.functions.TextFunctions
+    import graft.operators.Dedup
+    val rnd = freshRandom(10)
+    val vocab = IndexedSeq("a", "b", "c", "é", "日本", "straße",
+      "\uD834\uDD1E", "a", "b", "") // "" joins as a double or edge space
+    def text(): Option[String] = rnd.nextInt(8) match {
+      case 0 => None
+      case 1 => Some("")
+      case 2 => Some(randTokens(rnd, 1, vocab).mkString(" "))
+      case 3 => Some(randTokens(rnd, 2, vocab).mkString(" "))
+      case _ => Some(randTokens(rnd, 3 + rnd.nextInt(20), vocab).mkString(" "))
+    }
+    // a lone 0xFF, a truncated sequence, an encoded surrogate, a lone
+    // continuation byte — each beside spaces and repeats
+    val invalid = Seq("61FF2062", "FF20FF20FF2061", "E282", "2061E28220E282",
+      "EDA08020EDA080", "80206120802061")
+      .toDF("h").select(expr("cast(unhex(h) as string)").as("text"))
+    val texts = Seq.fill(300)(text()).toDF("text").union(invalid)
+    def formula(text: org.apache.spark.sql.Column, n: Int) =
+      transform(array_distinct(TextFunctions.wordShingles(text, n)),
+        s => xxhash64(s))
+    for (n <- 1 to 4) {
+      val got = texts.select(col("text"),
+          TextFunctions.shingleHashes(col("text"), n).as("kernel"),
+          formula(col("text"), n).as("formula"))
+        .as[(Option[String], Seq[Long], Seq[Long])].collect()
+      for ((t, kernel, want) <- got) assert(kernel === want, s"n=$n text=$t")
+      assert(got.exists(_._3.nonEmpty), s"n=$n")
+    }
+    // collated text compares and hashes by its collation: shingleKeys
+    // keeps the formula for it
+    val docs = Seq((1L, "A b a B a b"), (2L, "x Y x y")).toDF("doc_id", "text")
+      .select(col("doc_id"), collate(col("text"), "UTF8_LCASE").as("text"))
+    for (n <- 1 to 2) {
+      val keys = Dedup.shingleKeys(docs, "text", "doc_id", n)
+        .orderBy("doc").select("gs").as[Seq[Long]].collect().toSeq
+      val want = docs.orderBy("doc_id").select(formula(col("text"), n))
+        .as[Seq[Long]].collect().toSeq
+      assert(keys === want, s"collated n=$n")
+    }
+  }
+
   test("PROPERTY shingle pairs: the one-task kernel returns the self-join's rows (random corpora)") {
     // Seeded random corpora with duplicate and null doc ids (long ids, and
     // string ids whose UTF-8 and UTF-16 orders differ); null, empty, one-
@@ -325,7 +374,10 @@ class PropertySpec extends SparkSpec {
     // inside a document; non-ASCII words. Each runs with n = 1, 2, 3 under
     // a fraction guard that drops the commonest shingles (its cap,
     // ⌈0.25·N⌉ for N = 20..39 rows, moves with every row counted), an
-    // absolute maxShingleDf, and no guard; plus the empty corpus.
+    // absolute maxShingleDf, and no guard; plus the empty corpus and one
+    // whose duplicate ids make zero Jaccard denominators. The raw
+    // counts compare with the kernel's pair bound off; the public operators
+    // then run it at thresholds 0, 0.2, 0.3, 1, 1.5 and NaN.
     import graft.operators.Dedup
     import org.apache.spark.sql.DataFrame
     val rnd = freshRandom(9)
@@ -350,21 +402,25 @@ class PropertySpec extends SparkSpec {
       else docs.map { case (id, t) => (id.map(_.toLong), t) }
         .toDF("doc_id", "text")
     }
+    // duplicate ids 1 and 2 share every shingle twice over: i = ca + cb
+    val zeroDenominator = Seq((1L, "a b"), (1L, "a b"), (2L, "a b"),
+      (2L, "a b"), (3L, "a b c")).toDF("doc_id", "text")
     val corpora = Seq(corpus(false), corpus(false), corpus(true),
       corpus(true), Seq.empty[(Option[Long], Option[String])]
-        .toDF("doc_id", "text"))
+        .toDF("doc_id", "text"), zeroDenominator)
     val guards = Seq((Long.MaxValue, Some(0.25)), (3L, None),
       (Long.MaxValue, None))
     def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
     // a zero Jaccard denominator (duplicate ids) throws under ANSI: then
     // both paths must throw
     def outcome(df: DataFrame) = scala.util.Try(rows(df)).toOption
-    var guardBit = false
+    var (guardBit, boundBit, throwBit) = (false, false, false)
     for ((docs, caseIdx) <- corpora.zipWithIndex; n <- 1 to 3) {
       val keys = Dedup.shingleKeys(docs, "text", "doc_id", n)
       for ((maxDf, frac) <- guards) {
         val at = s"corpus $caseIdx n=$n maxShingleDf=$maxDf fraction=$frac"
-        val one = Dedup.pairCountsOneTask(keys, maxDf, frac)
+        val one =
+          Dedup.pairCountsOneTask(keys, maxDf, frac, Double.NegativeInfinity)
         val join = Dedup.pairCountsJoin(keys, maxDf, frac)
         val counts = rows(join.select("a_id", "b_id", "i", "ca", "cb"))
         assert(rows(one) === counts, at)
@@ -381,7 +437,29 @@ class PropertySpec extends SparkSpec {
           maxShingleDfFraction = Some(0.25))) ===
         outcome(Dedup.jaccard(Dedup.pairCountsJoin(keys, Long.MaxValue,
           Some(0.25)), 0.2)), s"corpus $caseIdx n=$n")
+      // so do both public operators (whose one-task kernel emits only the
+      // pairs that can pass the threshold) against the tails over the join,
+      // throws included; unguarded, so duplicate ids keep the keys that
+      // make zero Jaccard denominators
+      val join = Dedup.pairCountsJoin(keys, Long.MaxValue, None)
+      val unbounded = rows(Dedup.pairCountsOneTask(keys, Long.MaxValue, None,
+        Double.NegativeInfinity)).toSet
+      for (t <- Seq(0.0, 0.2, 0.3, 1.0, 1.5, Double.NaN)) {
+        val at = s"corpus $caseIdx n=$n threshold=$t"
+        val jaccardJoin = outcome(Dedup.jaccard(join, t))
+        assert(outcome(Dedup.ngramJaccardPairs(docs, "text", "doc_id", n, t))
+          === jaccardJoin, at)
+        assert(outcome(Dedup.containmentPairs(docs, "text", "doc_id", n, t))
+          === outcome(Dedup.containment(join, t)), at)
+        throwBit ||= jaccardJoin.isEmpty
+        val bounded =
+          rows(Dedup.pairCountsOneTask(keys, Long.MaxValue, None, t)).toSet
+        assert(bounded.subsetOf(unbounded), at)
+        boundBit ||= bounded.size < unbounded.size
+      }
     }
     assert(guardBit, "the fraction guard never dropped a shingle")
+    assert(boundBit, "the pair bound never dropped a pair")
+    assert(throwBit, "no zero Jaccard denominator was thrown on")
   }
 }
