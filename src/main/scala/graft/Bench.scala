@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query steady-state seconds.
   *
@@ -11,7 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSession.cpus
     // Bounded low-core mode (optimization r15, VERDICT r14 item 3): the
     // driver ALSO runs the bench at a low core count for scaling evidence,
     // and the full 1-warmup + 2-timed-pass protocol cannot finish inside
@@ -32,27 +31,8 @@ object Bench {
           s"$name must be an integer, got '$v'")))
     val warmups = envCount("SPARK_GRAFT_BENCH_WARMUP", 1)
     val passes = math.max(envCount("SPARK_GRAFT_BENCH_PASSES",
-      if (cpus.toInt <= 8) 1 else 2), 1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // MEASURED AND REJECTED (optimization r14, guide §3.1): preferring
-      // shuffled-hash join (`spark.sql.join.preferSortMergeJoin=false` +
-      // `spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=64m`).
-      // jstack put the heavy pair/graph queries' time in SMJ TimSort +
-      // per-key row buffering, but the paired A/B went the other way:
-      // q_triangles 20.3 s (SMJ) vs 42.0 s (SHJ) adjacent-run, and the
-      // 13-query join-heavy set regressed broadly (q_basket_pairs 1.8x,
-      // q_ppjoin 1.4x, q_containment 1.35x). These joins are
-      // duplicate-key-dense (wedges, shingle bands, basket pairs): SMJ
-      // streams each sorted duplicate group once, while SHJ re-probes a
-      // per-partition map whose buckets hold the same heavy groups —
-      // sort cost < probe-chain cost on this shape. Kept default ON.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      if (cpus <= 8) 1 else 2), 1)
+    val spark = LocalSession()
     // optional first arg: comma-separated query filter for targeted timing
     // during development; the driver invokes with no args → full suite.
     val (names, badFilter) = args.headOption match {
@@ -144,7 +124,7 @@ object Bench {
         case (name, t, None) if baseline.get(name).exists(_ > 0.2) =>
           t / baseline(name)
       }
-    val hostDrift = BenchGate.hostDrift(ratios, cpus.toInt, ledgerCpus)
+    val hostDrift = BenchGate.hostDrift(ratios, cpus, ledgerCpus)
     val norm = math.max(hostDrift.getOrElse(1.0), 1.0)
     // The normalization is blind to a GENUINE uniform regression by
     // construction (it cancels uniform drift, whatever its cause) — so an
@@ -156,7 +136,7 @@ object Bench {
     // recording read warm, inflating 2x+ on fit-heavy queries — the gate
     // (and its retry pass) only runs at the recording condition.
     val gateActive =
-      BenchGate.gateActive(sfDir, args.isEmpty, cpus.toInt, ledgerCpus)
+      BenchGate.gateActive(sfDir, args.isEmpty, cpus, ledgerCpus)
     val firstFlags =
       if (!gateActive) Seq.empty
       else BenchGate.regressions(timed, baseline, norm)

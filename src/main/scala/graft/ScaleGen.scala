@@ -55,15 +55,7 @@ object ScaleGen {
     val Array(srcDir, outDir, repStr) = args
     val reps = repStr.toInt
     require(reps >= 1 && reps <= 100, s"replicas out of range: $reps")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     generate(spark, srcDir, outDir, reps)
     spark.stop()
   }

@@ -29,10 +29,9 @@ object CorpusOps extends QueryFamily {
     * never emitted. Isolated documents are their own cluster (left join +
     * coalesce — the component loop never sees them). */
   def qDupClusters(s: SparkSession, dir: String): DataFrame = {
-    // Tables.parallel (optimization r15, guide §2.5): shingle explode +
-    // hashing ride the scan; components and the doc_id-keyed label join
-    // are order-immune, final orderBy a total order.
-    val docs = Tables.parallel(Tables.documents(s, dir))
+    // Tables.parallel MEASURED AND REJECTED here, as for q_ngram_jaccard
+    // (same edge machinery): median B/A 0.858 without it.
+    val docs = Tables.documents(s, dir)
     val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
       n = 3, threshold = 0.05, maxShingleDfFraction = Some(0.01))
     val comp = Clusters.connectedComponents(pairs, "a_id", "b_id")
@@ -52,10 +51,10 @@ object CorpusOps extends QueryFamily {
     * docs). Degree-ordered wedge orientation bounds the self-join at
     * O(Σ√m·deg) — the power-law-safe shape. Full-oracle. */
   def qDupGraph(s: SparkSession, dir: String): DataFrame =
-    // Tables.parallel: same scan-stage repair as q_dup_clusters (shared
-    // edge machinery); the triangle census is order-immune.
+    // Tables.parallel MEASURED AND REJECTED here, as for q_ngram_jaccard
+    // (same edge machinery): median B/A 0.910 without it.
     Clusters.triangleStats(
-        Dedup.ngramJaccardPairs(Tables.parallel(Tables.documents(s, dir)),
+        Dedup.ngramJaccardPairs(Tables.documents(s, dir),
           "text", "doc_id",
           n = 3, threshold = 0.05, maxShingleDfFraction = Some(0.01)),
         "a_id", "b_id")

@@ -219,11 +219,13 @@ object LlmOps extends QueryFamily {
     * one-row count — no driver-side action); the identical formula runs in
     * the DuckDB oracle. */
   def qNgramJaccard(s: SparkSession, dir: String): DataFrame =
-    // Tables.parallel (optimization r15, guide §2.5): the tokenize +
-    // shingle explode + xxhash64 ride the scan stage, single-task on the
-    // one-row-group test parquet; pair outputs are a pure function of the
-    // input multiset (order-immune), final orderBy is a total order.
-    Dedup.ngramJaccardPairs(Tables.parallel(Tables.documents(s, dir)),
+    // Tables.parallel MEASURED AND REJECTED here (paired A/B at sf0.1,
+    // 4 vCPUs, 6 pairs: dropping it gave median B/A 0.836). With the
+    // ShingleHashes kernel, shingling in the one scan task (the size
+    // check's job, which also materializes the shingle checkpoint) costs
+    // less than the repair: an extra job writing a round-robin shuffle,
+    // a planning pass for `getNumPartitions`, an AQE stage boundary.
+    Dedup.ngramJaccardPairs(Tables.documents(s, dir),
         "text", "doc_id",
         n = 3, threshold = 0.05, maxShingleDfFraction = Some(0.01))
       .orderBy("a_id", "b_id")
@@ -547,10 +549,10 @@ object LlmOps extends QueryFamily {
     * has tiny Jaccard but containment ~1). Same guarded machinery as
     * q_ngram_jaccard, full-oracle. */
   def qContainment(s: SparkSession, dir: String): DataFrame =
-    // Tables.parallel: same scan-stage repair (and rationale) as
-    // q_ngram_jaccard — identical guarded shingle machinery.
+    // Tables.parallel MEASURED AND REJECTED here, as for q_ngram_jaccard
+    // (same shingle machinery): median B/A 0.903 without it.
     graft.operators.Dedup.containmentPairs(
-        Tables.parallel(Tables.documents(s, dir)), "text", "doc_id",
+        Tables.documents(s, dir), "text", "doc_id",
         n = 3, threshold = 0.6,
         maxShingleDfFraction = Some(0.01))
       .orderBy("a_id", "b_id")

@@ -183,27 +183,27 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ngramJaccardPairs on a 300-document corpus runs at most 6 jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // 100 families of 3 near-duplicates: 12 family words, the last one
     // replaced per document
     val corpus = (0 until 300).map { i =>
       (i.toLong, ((0 until 11).map(j => s"g${i / 3}_$j") :+ s"x$i")
         .mkString(" "))
     }.toDF("doc_id", "text")
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try {
+    val jobs = jobsDuring {
       assert(Dedup.ngramJaccardPairs(corpus, "text", "doc_id", 3, 0.05,
         maxShingleDfFraction = Some(0.01)).collect().nonEmpty)
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(l)
-    assert(jobs.get <= 6, s"${jobs.get} jobs")
+    }
+    assert(jobs <= 6, s"$jobs jobs")
+  }
+
+  test("a repeated q_ngram_jaccard in one session runs 2 jobs: size check, then kernel") {
+    val q = graft.queries.LlmOps.qNgramJaccard(spark, sf).count()
+    // The schema is already known and shingling rides the check's scan
+    // task: no inference job, no round-robin shuffle job.
+    val jobs = jobsDuring {
+      assert(graft.queries.LlmOps.qNgramJaccard(spark, sf).count() === q)
+    }
+    assert(jobs === 2, s"$jobs jobs")
   }
 
   test("OneTask.fits counts a multi-partition frame in one job with no shuffle") {

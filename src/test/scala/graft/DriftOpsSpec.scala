@@ -199,26 +199,13 @@ class DriftOpsSpec extends SparkSpec {
 
   test("pageRankWeighted on a small graph runs the same jobs for 2 and 10 rounds") {
     import graft.operators.Clusters
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // 5 nodes, all 25 ordered pairs: the q_pagerank transition-graph shape
     val ids = Seq("a", "b", "c", "d", "e")
     val e = (for (x <- ids; y <- ids) yield (x, y, 1L + x.head - y.head + 5))
       .toDF("src", "dst", "w")
-    def jobs(iterations: Int): Int = {
-      val sc = spark.sparkContext
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.addSparkListener(l)
-      try {
-        assert(Clusters.pageRankWeighted(e, "src", "dst", "w",
-          iterations = iterations).collect().length === 5)
-        org.apache.spark.ListenerBusDrain(sc)
-      } finally sc.removeSparkListener(l)
-      n.get
+    def jobs(iterations: Int): Int = jobsDuring {
+      assert(Clusters.pageRankWeighted(e, "src", "dst", "w",
+        iterations = iterations).collect().length === 5)
     }
     val (two, ten) = (jobs(2), jobs(10))
     assert(two === ten, s"jobs grew with rounds: $two at 2, $ten at 10")

@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Shared session harness: one local session per suite, conf identical to
-  * the Verify/Bench mains (UTC, nanosAsLong, small shuffle fan-out). */
+  * the mains' `LocalSession` (UTC, nanosAsLong, small shuffle fan-out) at a
+  * fixed 4 threads, plus the Graft extensions. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,6 +20,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. The listener bus is drained
+    * before and after, so no earlier job is counted and none of `body`'s is
+    * missed. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(l)
+    n.get
+  }
 
   override def afterAll(): Unit = {
     // Shared across suites in one JVM (getOrCreate) — do not stop.

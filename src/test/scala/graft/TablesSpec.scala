@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Schema-drift guard for the driver-generated testdata.
   *
@@ -54,6 +54,50 @@ class TablesSpec extends SparkSpec {
     checks.foreach { case (name, df, key) =>
       assert(df.columns.contains(key), s"$name missing key column $key (has: ${df.columns.mkString(",")})")
       assert(df.limit(1).count() == 1, s"$name is empty")
+    }
+    // The schema a load reads with, inferred earlier or kept, is the one a
+    // fresh inference returns.
+    checks.map(_._1).foreach { name =>
+      assert(Tables.load(spark, sf, name).schema ==
+        spark.read.parquet(s"$sf/$name.parquet").schema, name)
+    }
+  }
+
+  test("a second load of a table in one session runs no Spark job") {
+    Tables.documents(spark, sf)
+    val jobs = jobsDuring {
+      assert(Tables.documents(spark, sf).columns.contains("doc_id"))
+    }
+    assert(jobs === 0, s"$jobs jobs")
+  }
+
+  test("a table rewritten at the same path with another schema is seen by the next load") {
+    import spark.implicits._
+    val dir = graft.operators.Scratch.dir("tables_rewrite")
+    try {
+      Seq(1L, 2L).toDF("a").write.mode("overwrite").parquet(s"$dir/t.parquet")
+      assert(Tables.load(spark, dir, "t").columns.toSeq === Seq("a"))
+      assert(Tables.load(spark, dir, "t").columns.toSeq === Seq("a"))
+      Seq(("x", 1), ("y", 2), ("z", 3)).toDF("b", "c")
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val t = Tables.load(spark, dir, "t")
+      assert(t.schema == spark.read.parquet(s"$dir/t.parquet").schema)
+      assert(t.as[(String, Int)].collect().sorted.toSeq ===
+        Seq(("x", 1), ("y", 2), ("z", 3)))
+    } finally graft.operators.Scratch.delete(spark, dir)
+  }
+
+  test("a load after toggling inferTimestampNTZ gets the schema a fresh read infers") {
+    // events.ts is TIMESTAMP(MICROS, isAdjustedToUTC=false) with no Spark
+    // schema in the footer, so the setting decides its type. A session of
+    // its own: the setting is per session, the kept schemas are not.
+    val s = spark.newSession()
+    def fresh = s.read.parquet(s"$sf/events.parquet").schema
+    Seq("true", "false", "true").foreach { on =>
+      s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", on)
+      val ts = Tables.load(s, sf, "events").schema("ts").dataType
+      assert(ts == (if (on == "true") TimestampNTZType else TimestampType), on)
+      assert(Tables.load(s, sf, "events").schema == fresh, on)
     }
   }
 }
