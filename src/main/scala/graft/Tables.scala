@@ -2,7 +2,7 @@ package graft
 
 import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
@@ -78,18 +78,19 @@ object Tables {
 
   /** Every file under `path` (or `path` itself) as (path, length,
     * modification time), sorted; None when `path` does not exist, so the
-    * bare read raises Spark's own error. */
-  private def leafFiles(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    * bare read raises Spark's own error. The same files as
+    * `listFiles(path, recursive = true)`, hidden ones included, but walked
+    * with `listStatus`: `listFiles` builds a `LocatedFileStatus`, which
+    * reads each file's permissions, and without native Hadoop that starts
+    * one `ls -ld` process per file. */
+  private[graft] def leafFiles(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
     val p = new Path(path)
-    try {
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-      val files = Seq.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      Some(files.result().sorted)
-    } catch { case _: FileNotFoundException => None }
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(s: FileStatus): Seq[(String, Long, Long)] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk)
+      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+    try Some(walk(fs.getFileStatus(p)).sorted)
+    catch { case _: FileNotFoundException => None }
   }
 
   /** Scan-parallelism repair (optimization r14, guide §2.5 "input skew: one

@@ -54,13 +54,4 @@ object VectorFunctions {
     * distance (see [[graft.operators.DetQuantizer]]). */
   def longL2Sq(a: Column, b: Column): Column =
     Bridge.column(LongL2Sq(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Euclidean distance in double. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0), (acc, v) => acc + v))
 }

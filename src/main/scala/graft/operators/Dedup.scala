@@ -27,8 +27,11 @@ import graft.functions.TextFunctions
   *   (per-document ScanCount), above it from the distributed self-join.
   *   Both do Σ df² pair instances over the kept shingles — the self-join's
   *   sort-merge join already runs each shingle's whole posting in one
-  *   task — and return identical rows. The one task emits only the pairs
-  *   that can pass the threshold, not every co-shingled pair.
+  *   task — and return identical rows. Apart from that walk the one task
+  *   is linear: one hash probe per (document, shingle) element numbers
+  *   the keys, with no sort. It emits exactly the pairs the tail keeps
+  *   (plus the degenerate `i > max(ca, cb)` ones the tail decides on), not
+  *   every co-shingled pair.
   * - `nearMinhashLsh`: banded MinHash built from codegen'd built-ins —
   *   AND-amplification inside each band (all `rowsPerBand` minhashes must
   *   match), OR across `numBands` bands. Candidate pairs come from an
@@ -132,8 +135,8 @@ object Dedup {
       n: Int, threshold: Double,
       maxShingleDf: Long = Long.MaxValue,
       maxShingleDfFraction: Option[Double] = None): DataFrame =
-    jaccard(shinglePairCounts(df, textCol, idCol, n, maxShingleDf,
-      maxShingleDfFraction, threshold), threshold)
+    shinglePairs(df, textCol, idCol, n, maxShingleDf, maxShingleDfFraction,
+      PairTail.Jaccard(threshold))
 
   /** Exact shingle CONTAINMENT pairs: `C = |A∩B| / min(|A|, |B|)` — the
     * inclusion metric Jaccard structurally misses: a 50-shingle quote
@@ -148,42 +151,70 @@ object Dedup {
       n: Int, threshold: Double,
       maxShingleDf: Long = Long.MaxValue,
       maxShingleDfFraction: Option[Double] = None): DataFrame =
-    containment(shinglePairCounts(df, textCol, idCol, n, maxShingleDf,
-      maxShingleDfFraction, threshold), threshold)
+    shinglePairs(df, textCol, idCol, n, maxShingleDf, maxShingleDfFraction,
+      PairTail.Containment(threshold))
 
-  /** The Jaccard tail over `(a_id, b_id, i, ca, cb)` pair counts. */
-  private[graft] def jaccard(pairs: DataFrame, threshold: Double): DataFrame =
-    pairs
-      .withColumn("jaccard",
-        col("i").cast("double") / (col("ca") + col("cb") - col("i")))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
+  /** A tail over `(a_id, b_id, i, ca, cb)` pair counts: the pairs whose
+    * `name` value is at least `threshold`, as `(a_id, b_id, name)`. The
+    * value is written twice, side by side: [[column]], the SQL the tail
+    * applies, and [[value]], the same IEEE operations on longs, which the
+    * one-task kernel evaluates per counted pair without boxing. */
+  private[graft] sealed abstract class PairTail(val name: String)
+      extends Serializable {
+    def threshold: Double
+    def value(i: Long, ca: Long, cb: Long): Double
+    def column(i: Column, ca: Column, cb: Column): Column
 
-  /** The containment tail over `(a_id, b_id, i, ca, cb)` pair counts. */
-  private[graft] def containment(pairs: DataFrame,
-      threshold: Double): DataFrame =
-    pairs
-      .withColumn("containment",
-        col("i").cast("double") / least(col("ca"), col("cb")))
-      .filter(col("containment") >= threshold)
-      .select("a_id", "b_id", "containment")
+    /** Whether the one-task kernel emits a pair: iff `i > max(ca, cb)` or
+      * the tail keeps it. When `i ≤ max(ca, cb)` every denominator is at
+      * least `min(ca, cb) ≥ 1`, so [[value]] is the double [[column]]
+      * computes, never NaN, and `>=` on it agrees with SQL's (a NaN
+      * threshold is false in both). Otherwise a denominator can be zero or
+      * negative: the pair is emitted and the SQL tail decides, ANSI throw
+      * included. */
+    final def emits(i: Long, ca: Long, cb: Long): Boolean =
+      i > math.max(ca, cb) || value(i, ca, cb) >= threshold
 
-  /** The shared guarded pair-generation core of the exact shingle-overlap
-    * family: `(a_id, b_id, i, ca, cb)` — intersection size plus both
-    * distinct-shingle counts — for every co-shingled pair, from the
-    * one-task kernel or the distributed self-join by input size. The
-    * one-task kernel leaves out pairs that cannot pass either tail at
-    * `threshold`. */
-  private def shinglePairCounts(df: DataFrame, textCol: String, idCol: String,
+    def apply(pairs: DataFrame): DataFrame =
+      pairs.withColumn(name, column(col("i"), col("ca"), col("cb")))
+        .filter(col(name) >= threshold)
+        .select("a_id", "b_id", name)
+  }
+
+  private[graft] object PairTail {
+    /** `i / (ca + cb − i)`: intersection over union. */
+    final case class Jaccard(threshold: Double) extends PairTail("jaccard") {
+      def value(i: Long, ca: Long, cb: Long): Double =
+        i.toDouble / (ca + cb - i)
+      def column(i: Column, ca: Column, cb: Column): Column =
+        i.cast("double") / (ca + cb - i)
+    }
+
+    /** `i / min(ca, cb)`: intersection over the smaller set. */
+    final case class Containment(threshold: Double)
+        extends PairTail("containment") {
+      def value(i: Long, ca: Long, cb: Long): Double =
+        i.toDouble / math.min(ca, cb)
+      def column(i: Column, ca: Column, cb: Column): Column =
+        i.cast("double") / least(ca, cb)
+    }
+  }
+
+  /** The shared guarded core of the exact shingle-overlap family: the
+    * `(a_id, b_id, i, ca, cb)` pair counts — intersection size plus both
+    * distinct-shingle counts — from the one-task kernel or the distributed
+    * self-join by input size, through `tail`. */
+  private def shinglePairs(df: DataFrame, textCol: String, idCol: String,
       n: Int, maxShingleDf: Long, maxShingleDfFraction: Option[Double],
-      threshold: Double): DataFrame = {
+      tail: PairTail): DataFrame = {
     val keys = shingleKeys(df, textCol, idCol, n)
     // a document without shingles is one row, so the check also bounds N
     val oneTask = OneTask.KeyTypes(keys.schema("doc").dataType) &&
       OneTask.fits(keys.select(explode_outer(col("gs"))))
-    if (oneTask)
-      pairCountsOneTask(keys, maxShingleDf, maxShingleDfFraction, threshold)
-    else pairCountsJoin(keys, maxShingleDf, maxShingleDfFraction)
+    tail(
+      if (oneTask)
+        pairCountsOneTask(keys, maxShingleDf, maxShingleDfFraction, tail)
+      else pairCountsJoin(keys, maxShingleDf, maxShingleDfFraction))
   }
 
   /** `(doc, gs)`: one row per input row, `gs` its distinct word n-gram
@@ -282,41 +313,42 @@ object Dedup {
   }
 
   /** [[pairCountsJoin]]'s rows computed inside ONE task over [[shingleKeys]]
-    * (doc of a [[OneTask.KeyTypes]] type): one pass counts the rows `N` and
-    * each key's df, the guard drops keys above its cap, then ScanCount per
-    * document (the inverted-list merge of approximate string search, Li,
-    * Lu & Lu, ICDE 2008): for each document `a`, walk the postings of its
-    * kept keys and count every later document `b` in a dense counter. The
-    * self-join's relational semantics carry over exactly:
+    * (doc of a [[OneTask.KeyTypes]] type), keeping only the rows `tail`
+    * keeps or decides on. Linear in the (doc, key) elements, plus
+    * ScanCount's Σ df² walk:
+    *  - one ingest pass counts the rows `N` and numbers each 64-bit key on
+    *    first sight with one probe of a primitive table ([[KeyIndex]]),
+    *    which also counts its df; the guard then drops keys above its cap;
+    *  - ScanCount per document (the inverted-list merge of approximate
+    *    string search, Li, Lu & Lu, ICDE 2008): for each document `a`,
+    *    walk the postings of its kept keys and count every later document
+    *    `b` in a dense counter.
+    * The self-join's relational semantics carry over exactly:
     *  - every array element counts, so a key repeated inside one row (a
     *    hash collision) counts twice, and a duplicate id counts with its
     *    multiplicity (its `c` sums over all of its rows);
     *  - a null id counts toward `N` and df only, never toward a pair;
     *  - `a_id < b_id` in SQL order (numeric, or UTF-8 byte order for
     *    strings).
-    * Bound: a pair is emitted only if `i > max(ca, cb)` or its containment
-    * `i / min(ca, cb)` is at least `min(threshold, 1)`, so only pairs that
-    * can pass the [[jaccard]] or [[containment]] tail at `threshold` leave
-    * the task (q_ngram_jaccard at sf0.1: 590 of its 1.13M co-shingled
-    * pairs pass the Jaccard tail). Nothing either tail keeps or throws on
-    * is dropped: when `i ≤ max(ca, cb)` the Jaccard denominator
-    * `ca + cb − i` is at least `min(ca, cb) ≥ 1`, so Jaccard ≤ containment,
-    * in doubles too (same numerator, larger denominator, monotone
-    * correctly rounded division); every other pair, including the
-    * zero-denominator pairs duplicate ids make (which throw under ANSI),
-    * has `i > max(ca, cb)` and is kept. A threshold ≤ 0 keeps every pair. */
+    * Emission: a counted pair leaves the task iff [[PairTail.emits]], i.e.
+    * `i > max(ca, cb)` or the tail keeps it (q_ngram_jaccard at sf0.1:
+    * 590 of its 1.13M co-shingled pairs). The tail then runs on the
+    * emitted rows as on the join's, so ANSI throws and NaN handling stay in
+    * SQL: the zero-denominator pairs duplicate ids make have
+    * `i > max(ca, cb)` and reach it. */
   private[graft] def pairCountsOneTask(keys: DataFrame, maxShingleDf: Long,
-      maxShingleDfFraction: Option[Double], threshold: Double): DataFrame = {
+      maxShingleDfFraction: Option[Double], tail: PairTail): DataFrame = {
     val idType = keys.schema("doc").dataType
     val schema = new StructType()
       .add("a_id", idType).add("b_id", idType)
       .add("i", LongType).add("ca", LongType).add("cb", LongType)
     keys.coalesce(1).mapPartitions { rows =>
-      // one (doc slot, key) element per array entry; slot -1 = null id
+      // one (doc slot, key index) element per array entry; slot -1 = null id
       val slot = mutable.HashMap.empty[Any, Int]
       val ids = mutable.ArrayBuffer.empty[Any]
       val (elemDoc, elemKey) =
-        (mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Long])
+        (new mutable.ArrayBuilder.ofInt, new mutable.ArrayBuilder.ofInt)
+      val keyIndex = new KeyIndex
       var nRows = 0L
       rows.foreach { r =>
         nRows += 1
@@ -326,62 +358,55 @@ object Dedup {
             val id = r.get(0)
             slot.getOrElseUpdate(id, { ids += id; ids.size - 1 })
           }
-          gs.foreach { g => elemDoc += d; elemKey += g }
+          gs.foreach { g =>
+            elemDoc.addOne(d); elemKey.addOne(keyIndex.add(g)) // unboxed
+          }
         }
       }
       val (ed, ek) = (elemDoc.result(), elemKey.result())
-      // distinct keys (sorted) with their df
-      val uk = ek.clone()
-      java.util.Arrays.sort(uk)
-      val kdf = new Array[Int](uk.length)
-      var nk = 0
-      var e = 0
-      while (e < uk.length) {
-        if (nk == 0 || uk(e) != uk(nk - 1)) { uk(nk) = uk(e); nk += 1 }
-        kdf(nk - 1) += 1
-        e += 1
-      }
+      val (nk, kdf) = (keyIndex.size, keyIndex.df)
       val cap =
         maxShingleDfFraction.fold(maxShingleDf)(fractionCapOf(nRows, _))
+      def kept(e: Int): Boolean = ed(e) >= 0 && kdf(ek(e)) <= cap
       // dense doc index = rank in SQL id order, so `b > a` is `b_id > a_id`
       val byRank = sortedSlots(ids, idType)
       val nDocs = byRank.length
       val rank = new Array[Int](nDocs)
       for (r <- 0 until nDocs) rank(byRank(r)) = r
-      // the kept elements of non-null ids, as (doc rank, key index), then
-      // each doc's keys and each key's postings as one flat array plus
-      // start offsets (CSR)
-      val (keptDoc, keptKey) =
-        (mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Int])
+      // each doc's kept keys (in element order) and each key's postings,
+      // each as one flat array plus start offsets (CSR)
       val c = new Array[Long](nDocs)
       val postStart = new Array[Int](nk + 1)
-      e = 0
+      var e = 0
       while (e < ed.length) {
-        if (ed(e) >= 0) {
-          val k = java.util.Arrays.binarySearch(uk, 0, nk, ek(e))
-          if (kdf(k) <= cap) {
-            val d = rank(ed(e))
-            keptDoc += d; keptKey += k
-            c(d) += 1; postStart(k + 1) += 1
-          }
-        }
+        if (kept(e)) { c(rank(ed(e))) += 1; postStart(ek(e) + 1) += 1 }
         e += 1
       }
-      val (kd, kk) = (keptDoc.result(), keptKey.result())
       val docStart = new Array[Int](nDocs + 1)
       for (d <- 0 until nDocs) docStart(d + 1) = docStart(d) + c(d).toInt
       for (k <- 0 until nk) postStart(k + 1) += postStart(k)
-      val docKeys = new Array[Int](kd.length)
+      val docKeys = new Array[Int](docStart(nDocs))
       val docFill = docStart.clone()
-      for (x <- kd.indices) {
-        docKeys(docFill(kd(x))) = kk(x); docFill(kd(x)) += 1
+      e = 0
+      while (e < ed.length) {
+        if (kept(e)) {
+          val d = rank(ed(e))
+          docKeys(docFill(d)) = ek(e); docFill(d) += 1
+        }
+        e += 1
       }
       // filled in doc order, so each key's postings ascend
-      val post = new Array[Int](kd.length)
+      val post = new Array[Int](docKeys.length)
       val postFill = postStart.clone()
-      for (d <- 0 until nDocs; p <- docStart(d) until docStart(d + 1)) {
-        val k = docKeys(p)
-        post(postFill(k)) = d; postFill(k) += 1
+      var d = 0
+      while (d < nDocs) {
+        var p = docStart(d)
+        while (p < docStart(d + 1)) {
+          val k = docKeys(p)
+          post(postFill(k)) = d; postFill(k) += 1
+          p += 1
+        }
+        d += 1
       }
       // ScanCount, docs in rank order: `cur(k)` is key k's next unvisited
       // posting entry — always one of the current doc's own entries, so
@@ -389,10 +414,12 @@ object Dedup {
       val cur = postStart.clone()
       val cnt = new Array[Long](nDocs)
       val touched = new Array[Int](nDocs)
-      val minContainment = math.min(threshold, 1.0)
+      // (while loops here and above: a `for` over a Range calls a closure
+      // per step, and this walk is the kernel's Σ df² part)
       Iterator.range(0, nDocs).flatMap { a =>
         var nt = 0
-        for (p <- docStart(a) until docStart(a + 1)) {
+        var p = docStart(a)
+        while (p < docStart(a + 1)) {
           val k = docKeys(p)
           cur(k) += 1
           var q = cur(k)
@@ -404,19 +431,64 @@ object Dedup {
             }
             q += 1
           }
+          p += 1
         }
         val out = mutable.ArrayBuffer.empty[Row]
-        for (t <- 0 until nt) {
+        var t = 0
+        while (t < nt) {
           val b = touched(t)
           val i = cnt(b)
           cnt(b) = 0
-          if (i > math.max(c(a), c(b)) ||
-              i.toDouble / math.min(c(a), c(b)) >= minContainment)
+          if (tail.emits(i, c(a), c(b)))
             out += Row(ids(byRank(a)), ids(byRank(b)), i, c(a), c(b))
+          t += 1
         }
         out
       }
     }(Encoders.row(schema))
+  }
+
+  /** Numbers 64-bit keys 0, 1, … in order of first sight and counts each
+    * key's occurrences (`df`): a primitive open-addressing table (linear
+    * probing on a Fibonacci hash, grown at half load), so a key costs one
+    * probe and no boxing. */
+  private final class KeyIndex {
+    private var shift = 54 // 64 − log2(slots)
+    private var slotKey = new Array[Long](1 << 10)
+    private var slotIdx = new Array[Int](1 << 10) // key index + 1; 0 = free
+    var df = new Array[Int](1 << 9) // per key index; half the slots
+    var size = 0
+
+    private def slotOf(key: Long): Int =
+      ((key * 0x9E3779B97F4A7C15L) >>> shift).toInt
+
+    /** `key`'s index, numbering it if new; counts one occurrence. */
+    def add(key: Long): Int = {
+      val mask = slotIdx.length - 1
+      var s = slotOf(key)
+      while (slotIdx(s) != 0 && slotKey(s) != key) s = (s + 1) & mask
+      val k = if (slotIdx(s) != 0) slotIdx(s) - 1 else {
+        slotKey(s) = key; slotIdx(s) = size + 1; size += 1
+        if (2 * size > mask) grow()
+        size - 1
+      }
+      df(k) += 1
+      k
+    }
+
+    private def grow(): Unit = {
+      val (oldKey, oldIdx) = (slotKey, slotIdx)
+      shift -= 1
+      slotKey = new Array[Long](2 * oldKey.length)
+      slotIdx = new Array[Int](2 * oldIdx.length)
+      df = java.util.Arrays.copyOf(df, oldIdx.length)
+      val mask = slotIdx.length - 1
+      for (o <- oldIdx.indices if oldIdx(o) != 0) {
+        var s = slotOf(oldKey(o))
+        while (slotIdx(s) != 0) s = (s + 1) & mask
+        slotKey(s) = oldKey(o); slotIdx(s) = oldIdx(o)
+      }
+    }
   }
 
   /** The slots of `ids` sorted by SQL order of their values: numeric for

@@ -206,6 +206,25 @@ class DedupSpec extends SparkSpec {
     assert(jobs === 2, s"$jobs jobs")
   }
 
+  test("the one-task pair kernel emits exactly the rows the Jaccard tail keeps on unique ids") {
+    // q_ngram_jaccard's settings. With unique ids every pair has
+    // i ≤ min(ca, cb), so the kernel emits a pair iff the tail keeps it;
+    // some counted pairs pass a containment bound but not the Jaccard
+    // tail, and are not emitted.
+    import Dedup.PairTail
+    val docs = graft.Tables.documents(spark, sf)
+    assert(docs.select("doc_id").distinct().count() === docs.count())
+    val keys = Dedup.shingleKeys(docs, "text", "doc_id", 3)
+    def counts(tail: PairTail) =
+      Dedup.pairCountsOneTask(keys, Long.MaxValue, Some(0.01), tail)
+    val all = counts(PairTail.Jaccard(Double.NegativeInfinity))
+    val tail = PairTail.Jaccard(0.05)
+    val kept = tail(all).count()
+    assert(kept > 0)
+    assert(PairTail.Containment(0.05)(all).count() > kept)
+    assert(counts(tail).count() === kept)
+  }
+
   test("OneTask.fits counts a multi-partition frame in one job with no shuffle") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
       SparkListenerTaskEnd}

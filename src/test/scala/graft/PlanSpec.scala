@@ -575,8 +575,8 @@ class PlanSpec extends SparkSpec {
     import graft.operators.Dedup
     val keys = Dedup.shingleKeys(graft.Tables.documents(spark, sf), "text",
       "doc_id", 3)
-    val scale = planString(Dedup.containment(
-      Dedup.pairCountsJoin(keys, Long.MaxValue, Some(0.01)), 0.6))
+    val scale = planString(Dedup.PairTail.Containment(0.6)(
+      Dedup.pairCountsJoin(keys, Long.MaxValue, Some(0.01))))
     val p = planString(graft.queries.LlmOps.qContainment(spark, sf))
     for (plan <- Seq(p, scale))
       assert(!plan.contains("CartesianProduct") &&

@@ -367,6 +367,57 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("PROPERTY pair tails: the kernel's value is the SQL tail's double, and it emits what the tail keeps") {
+    // Random counts (small, mid-sized and above 2^53, where the long to
+    // double casts round) with i ≤ max(ca, cb), plus i > max(ca, cb) with
+    // a non-zero Jaccard denominator (positive or negative), plus pairs
+    // whose value lands exactly on a threshold.
+    import graft.operators.Dedup.PairTail
+    val rnd = freshRandom(11)
+    def count(): Long = rnd.nextInt(3) match {
+      case 0 => 1L + rnd.nextInt(8)
+      case 1 => 1L + rnd.nextInt(100000)
+      case _ => 1L + (rnd.nextLong() >>> 4)
+    }
+    def below(m: Long): Long = 1L + (rnd.nextLong() >>> 1) % m
+    val random = Seq.fill(3000) {
+      val (ca, cb) = (count(), count())
+      val i = if (rnd.nextInt(5) > 0) below(math.max(ca, cb))
+        else math.max(ca, cb) + below(ca + cb) // from max + 1 to 2·(ca + cb)
+      (i, ca, cb)
+    }.filter { case (i, ca, cb) => ca + cb != i }
+    val edges = Seq((1L, 10L, 11L), (3L, 10L, 10L), (1L, 1L, 1L),
+      (5L, 5L, 9L), (9L, 5L, 9L), (1L, 20L, 20L), (3L, 1L, 5L))
+    val triples = (edges ++ random).toIndexedSeq
+    val pairs = triples.zipWithIndex
+      .map { case ((i, ca, cb), a) => (a.toLong, a + 1L, i, ca, cb) }
+      .toDF("a_id", "b_id", "i", "ca", "cb")
+    val thresholds = Seq(0.0, -0.0, 0.05, 0.3, 1.0, 1.5,
+      Double.PositiveInfinity, Double.NaN)
+    val bits = java.lang.Double.doubleToRawLongBits _
+    var (wayAbove, landed) = (0, 0)
+    for (make <- Seq(PairTail.Jaccard(_), PairTail.Containment(_))) {
+      val values = pairs.orderBy("a_id")
+        .select(make(0.0).column(col("i"), col("ca"), col("cb")))
+        .as[Double].collect().toSeq
+      for (((i, ca, cb), v) <- triples.zip(values))
+        assert(bits(make(0.0).value(i, ca, cb)) === bits(v), (i, ca, cb))
+      for (t <- thresholds) {
+        val tail = make(t)
+        val kept = tail(pairs).select("a_id").as[Long].collect().toSet
+        for (((i, ca, cb), a) <- triples.zipWithIndex) {
+          val emits = tail.emits(i, ca, cb)
+          assert(emits === (kept(a.toLong) || i > math.max(ca, cb)),
+            s"$tail ($i, $ca, $cb)")
+          if (i > math.max(ca, cb) && !kept(a.toLong)) wayAbove += 1
+          if (tail.value(i, ca, cb) == t && kept(a.toLong)) landed += 1
+        }
+      }
+    }
+    assert(wayAbove > 0, "no i > max(ca, cb) pair was emitted past the tail")
+    assert(landed > 0, "no value landed exactly on a threshold")
+  }
+
   test("PROPERTY shingle pairs: the one-task kernel returns the self-join's rows (random corpora)") {
     // Seeded random corpora with duplicate and null doc ids (long ids, and
     // string ids whose UTF-8 and UTF-16 orders differ); null, empty, one-
@@ -376,9 +427,11 @@ class PropertySpec extends SparkSpec {
     // ⌈0.25·N⌉ for N = 20..39 rows, moves with every row counted), an
     // absolute maxShingleDf, and no guard; plus the empty corpus and one
     // whose duplicate ids make zero Jaccard denominators. The raw
-    // counts compare with the kernel's pair bound off; the public operators
-    // then run it at thresholds 0, 0.2, 0.3, 1, 1.5 and NaN.
+    // counts compare with the kernel unbounded (a −∞ Jaccard tail emits
+    // every counted pair); the public operators then run it at thresholds
+    // 0, 0.2, 0.3, 1, 1.5 and NaN.
     import graft.operators.Dedup
+    import graft.operators.Dedup.PairTail
     import org.apache.spark.sql.DataFrame
     val rnd = freshRandom(9)
     val vocab = IndexedSeq("a", "b", "c", "d", "e", "é", "日本", "straße",
@@ -419,15 +472,15 @@ class PropertySpec extends SparkSpec {
       val keys = Dedup.shingleKeys(docs, "text", "doc_id", n)
       for ((maxDf, frac) <- guards) {
         val at = s"corpus $caseIdx n=$n maxShingleDf=$maxDf fraction=$frac"
-        val one =
-          Dedup.pairCountsOneTask(keys, maxDf, frac, Double.NegativeInfinity)
+        val one = Dedup.pairCountsOneTask(keys, maxDf, frac,
+          PairTail.Jaccard(Double.NegativeInfinity))
         val join = Dedup.pairCountsJoin(keys, maxDf, frac)
         val counts = rows(join.select("a_id", "b_id", "i", "ca", "cb"))
         assert(rows(one) === counts, at)
-        assert(outcome(Dedup.jaccard(one, 0.0)) ===
-          outcome(Dedup.jaccard(join, 0.0)), at)
-        assert(rows(Dedup.containment(one, 0.3)) ===
-          rows(Dedup.containment(join, 0.3)), at)
+        assert(outcome(PairTail.Jaccard(0.0)(one)) ===
+          outcome(PairTail.Jaccard(0.0)(join)), at)
+        assert(rows(PairTail.Containment(0.3)(one)) ===
+          rows(PairTail.Containment(0.3)(join)), at)
         if (frac.nonEmpty) guardBit ||= counts !=
           rows(Dedup.pairCountsJoin(keys, Long.MaxValue, None)
             .select("a_id", "b_id", "i", "ca", "cb"))
@@ -435,27 +488,29 @@ class PropertySpec extends SparkSpec {
       // the public operator (dispatching to one task here) agrees too
       assert(outcome(Dedup.ngramJaccardPairs(docs, "text", "doc_id", n, 0.2,
           maxShingleDfFraction = Some(0.25))) ===
-        outcome(Dedup.jaccard(Dedup.pairCountsJoin(keys, Long.MaxValue,
-          Some(0.25)), 0.2)), s"corpus $caseIdx n=$n")
+        outcome(PairTail.Jaccard(0.2)(Dedup.pairCountsJoin(keys,
+          Long.MaxValue, Some(0.25)))), s"corpus $caseIdx n=$n")
       // so do both public operators (whose one-task kernel emits only the
-      // pairs that can pass the threshold) against the tails over the join,
-      // throws included; unguarded, so duplicate ids keep the keys that
-      // make zero Jaccard denominators
+      // pairs the tail keeps or decides on) against the tails over the
+      // join, throws included; unguarded, so duplicate ids keep the keys
+      // that make zero Jaccard denominators
       val join = Dedup.pairCountsJoin(keys, Long.MaxValue, None)
       val unbounded = rows(Dedup.pairCountsOneTask(keys, Long.MaxValue, None,
-        Double.NegativeInfinity)).toSet
+        PairTail.Jaccard(Double.NegativeInfinity))).toSet
       for (t <- Seq(0.0, 0.2, 0.3, 1.0, 1.5, Double.NaN)) {
         val at = s"corpus $caseIdx n=$n threshold=$t"
-        val jaccardJoin = outcome(Dedup.jaccard(join, t))
+        val jaccardJoin = outcome(PairTail.Jaccard(t)(join))
         assert(outcome(Dedup.ngramJaccardPairs(docs, "text", "doc_id", n, t))
           === jaccardJoin, at)
         assert(outcome(Dedup.containmentPairs(docs, "text", "doc_id", n, t))
-          === outcome(Dedup.containment(join, t)), at)
+          === outcome(PairTail.Containment(t)(join)), at)
         throwBit ||= jaccardJoin.isEmpty
-        val bounded =
-          rows(Dedup.pairCountsOneTask(keys, Long.MaxValue, None, t)).toSet
-        assert(bounded.subsetOf(unbounded), at)
-        boundBit ||= bounded.size < unbounded.size
+        for (tail <- Seq(PairTail.Jaccard(t), PairTail.Containment(t))) {
+          val bounded = rows(Dedup.pairCountsOneTask(keys, Long.MaxValue,
+            None, tail)).toSet
+          assert(bounded.subsetOf(unbounded), s"$at $tail")
+          boundBit ||= bounded.size < unbounded.size
+        }
       }
     }
     assert(guardBit, "the fraction guard never dropped a shingle")

@@ -87,6 +87,41 @@ class TablesSpec extends SparkSpec {
     } finally graft.operators.Scratch.delete(spark, dir)
   }
 
+  test("the leaf-file walk lists what a recursive listFiles lists, hidden files included") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.hadoop.fs.Path
+    val dir = graft.operators.Scratch.dir("tables_leaves")
+    try {
+      val files = Seq("x", ".hidden", "_meta", ".x.crc", "sub/y", "sub/.h",
+        "sub/deeper/_z", "sub/deeper/w.parquet")
+      for ((f, i) <- files.zipWithIndex) {
+        val p = Paths.get(dir, f)
+        Files.createDirectories(p.getParent)
+        Files.write(p, Array.fill(i)(1.toByte))
+      }
+      Files.createDirectories(Paths.get(dir, "empty", ".hiddendir"))
+      def listFiles(path: String) = {
+        val p = new Path(path)
+        val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listFiles(p, true)
+        val out = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        out.result().sorted
+      }
+      for (path <- Seq(dir, s"$dir/sub", s"$dir/sub/y")) {
+        val walked = Tables.leafFiles(spark, path)
+        assert(walked === Some(listFiles(path)), path)
+        assert(walked.get.nonEmpty, path)
+      }
+      assert(Tables.leafFiles(spark, dir).get.map(_._1)
+        .exists(_.endsWith("sub/.h")))
+      assert(Tables.leafFiles(spark, s"$dir/missing") === None)
+    } finally graft.operators.Scratch.delete(spark, dir)
+  }
+
   test("a load after toggling inferTimestampNTZ gets the schema a fresh read infers") {
     // events.ts is TIMESTAMP(MICROS, isAdjustedToUTC=false) with no Spark
     // schema in the footer, so the setting decides its type. A session of

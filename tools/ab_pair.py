@@ -25,6 +25,7 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RESOURCES = os.path.join(REPO, "src", "main", "resources")
@@ -48,8 +49,12 @@ def run_once(classes, queries, sf_dir, xmx):
     cmd = (["java", f"-Xmx{xmx}"] + JVM_FLAGS +
            ["-cp", f"{classes}:{RESOURCES}:{SPARK_JARS}",
             "graft.Bench", queries])
-    out = subprocess.run(cmd, env=env, capture_output=True, text=True,
-                         cwd=REPO)
+    # Bench writes its JSON to $SPARK_GRAFT_BENCH_OUT, else to
+    # bench_out.json in its working directory: keep it out of the checkout
+    with tempfile.TemporaryDirectory() as tmp:
+        env["SPARK_GRAFT_BENCH_OUT"] = os.path.join(tmp, "bench_out.json")
+        out = subprocess.run(cmd, env=env, capture_output=True, text=True,
+                             cwd=REPO)
     return bench_times(out.stdout, out.returncode, queries.split(","),
                        out.stderr)
 

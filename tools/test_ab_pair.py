@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
-"""Guard test for ab_pair.py: a bench run that erred (non-zero exit,
+"""Guard tests for ab_pair.py: a bench run that erred (non-zero exit,
 n_errors > 0, or a wanted query under errors) must be refused, so no
-time-to-fail enters a B/A ratio; a clean run must load.
+time-to-fail enters a B/A ratio; a clean run must load; and a run must
+write Bench's JSON outside the checkout.
 Run: python3 tools/test_ab_pair.py"""
 import importlib.util
 import json
 import os
+import subprocess
 
 spec = importlib.util.spec_from_file_location(
     "ab_pair", os.path.join(os.path.dirname(__file__), "ab_pair.py"))
@@ -30,3 +32,29 @@ assert run(n_errors=1, errors={"q_y": "boom"}) is None, \
 assert run(errors={"q_x": "boom"}) is None, \
     "a wanted query under errors must refuse"
 print("ab_pair errored-run guard OK")
+
+
+# run_once points Bench's output file at a temporary directory, so the
+# tracked bench_out.json in the repository root is never overwritten
+seen = {}
+
+
+def fake_run(cmd, env=None, cwd=None, **kwargs):
+    seen.update(env=env, cwd=cwd)
+    line = json.dumps({"metric": "total", "value": 1.0, "n_errors": 0,
+                       "queries": {"q_x": 1.0}, "errors": {}})
+    return subprocess.CompletedProcess(cmd, 0, line + "\n", "")
+
+
+real_run, ab.subprocess.run = ab.subprocess.run, fake_run
+try:
+    assert ab.run_once("classes", "q_x", "sf", "1g") == {"q_x": 1.0}
+finally:
+    ab.subprocess.run = real_run
+out = seen["env"].get("SPARK_GRAFT_BENCH_OUT")
+assert out, "run_once must set SPARK_GRAFT_BENCH_OUT"
+repo = os.path.realpath(ab.REPO)
+assert not os.path.realpath(out).startswith(repo + os.sep), out
+assert not os.path.exists(os.path.dirname(out)), \
+    "the temporary output directory must be removed"
+print("ab_pair bench-out guard OK")
