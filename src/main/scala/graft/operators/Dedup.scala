@@ -288,7 +288,9 @@ object Dedup {
     }
     // The (doc, shingle) table feeds four consumers (doc frequencies,
     // per-doc counts, both sides of the pair join); Spark has no plan-level
-    // CSE, so materialize it once (lazily, on first action).
+    // CSE, so materialize it once. Lazily only without a guard: a guard's
+    // aggregate and join are exchanges, whose map stages AQE runs at this
+    // call (see `OneTask.fits`).
     val filtered = filtered0.localCheckpoint(eager = false)
     val counts = filtered.groupBy("doc").agg(count(lit(1)).as("c"))
     // A shingle in exactly ONE document can never produce a pair, so prune
@@ -317,7 +319,7 @@ object Dedup {
     * keeps or decides on. Linear in the (doc, key) elements, plus
     * ScanCount's Σ df² walk:
     *  - one ingest pass counts the rows `N` and numbers each 64-bit key on
-    *    first sight with one probe of a primitive table ([[KeyIndex]]),
+    *    first sight with one probe of a primitive table ([[OneTask.KeyIndex]]),
     *    which also counts its df; the guard then drops keys above its cap;
     *  - ScanCount per document (the inverted-list merge of approximate
     *    string search, Li, Lu & Lu, ICDE 2008): for each document `a`,
@@ -348,7 +350,7 @@ object Dedup {
       val ids = mutable.ArrayBuffer.empty[Any]
       val (elemDoc, elemKey) =
         (new mutable.ArrayBuilder.ofInt, new mutable.ArrayBuilder.ofInt)
-      val keyIndex = new KeyIndex
+      val keyIndex = new OneTask.KeyIndex
       var nRows = 0L
       rows.foreach { r =>
         nRows += 1
@@ -364,7 +366,7 @@ object Dedup {
         }
       }
       val (ed, ek) = (elemDoc.result(), elemKey.result())
-      val (nk, kdf) = (keyIndex.size, keyIndex.df)
+      val (nk, kdf) = (keyIndex.size, keyIndex.counts)
       val cap =
         maxShingleDfFraction.fold(maxShingleDf)(fractionCapOf(nRows, _))
       def kept(e: Int): Boolean = ed(e) >= 0 && kdf(ek(e)) <= cap
@@ -446,49 +448,6 @@ object Dedup {
         out
       }
     }(Encoders.row(schema))
-  }
-
-  /** Numbers 64-bit keys 0, 1, … in order of first sight and counts each
-    * key's occurrences (`df`): a primitive open-addressing table (linear
-    * probing on a Fibonacci hash, grown at half load), so a key costs one
-    * probe and no boxing. */
-  private final class KeyIndex {
-    private var shift = 54 // 64 − log2(slots)
-    private var slotKey = new Array[Long](1 << 10)
-    private var slotIdx = new Array[Int](1 << 10) // key index + 1; 0 = free
-    var df = new Array[Int](1 << 9) // per key index; half the slots
-    var size = 0
-
-    private def slotOf(key: Long): Int =
-      ((key * 0x9E3779B97F4A7C15L) >>> shift).toInt
-
-    /** `key`'s index, numbering it if new; counts one occurrence. */
-    def add(key: Long): Int = {
-      val mask = slotIdx.length - 1
-      var s = slotOf(key)
-      while (slotIdx(s) != 0 && slotKey(s) != key) s = (s + 1) & mask
-      val k = if (slotIdx(s) != 0) slotIdx(s) - 1 else {
-        slotKey(s) = key; slotIdx(s) = size + 1; size += 1
-        if (2 * size > mask) grow()
-        size - 1
-      }
-      df(k) += 1
-      k
-    }
-
-    private def grow(): Unit = {
-      val (oldKey, oldIdx) = (slotKey, slotIdx)
-      shift -= 1
-      slotKey = new Array[Long](2 * oldKey.length)
-      slotIdx = new Array[Int](2 * oldIdx.length)
-      df = java.util.Arrays.copyOf(df, oldIdx.length)
-      val mask = slotIdx.length - 1
-      for (o <- oldIdx.indices if oldIdx(o) != 0) {
-        var s = slotOf(oldKey(o))
-        while (slotIdx(s) != 0) s = (s + 1) & mask
-        slotKey(s) = oldKey(o); slotIdx(s) = oldIdx(o)
-      }
-    }
   }
 
   /** The slots of `ids` sorted by SQL order of their values: numeric for

@@ -74,8 +74,10 @@ object Ranks {
     * offset `_off` (rows in earlier buckets of the same part group). The
     * prefix window runs over the bounded bucket table — the legitimate
     * small-data window user (same posture as [[Packing.shardManifest]]).
-    * Lazily checkpointed: every consumer (totals, candidate prune, rank
-    * attach) reuses the one corpus aggregate instead of re-scanning. */
+    * Checkpointed: every consumer (totals, candidate prune, rank attach)
+    * reuses the one corpus aggregate instead of re-scanning. Not lazily,
+    * although `eager = false`: with AQE on, the map stages of the plan's
+    * exchanges run at the `localCheckpoint` call. */
   def bucketOffsets(df: DataFrame, partCols: Seq[String],
       bucket: Column): DataFrame = {
     requireNoCollision(df, "bucketOffsets")

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Temporal/behavioral operators over an event stream at rest: peak
   * concurrency (sweep line), dyadic-decay smoothing (EWMA), and OHLC
@@ -255,5 +258,193 @@ object Temporal {
         count(lit(1)).as("n_events"),
         sum("v").as("total_micro"))
       .orderBy(col(groupCol), col("day"))
+  }
+
+  /** Per-user state-transition counts: each window of `depth + 1`
+    * consecutive events of one user, in (ts, id) order, counted by its
+    * states — the first-order transition matrix at depth 1, the 3-step
+    * paths at depth 2. Returns (s0, …, s`depth`, n), s0 the oldest state.
+    * Exactly the lag plan
+    * {{{
+    *   SELECT s0, …, sD, count(*) AS n FROM (
+    *     SELECT lag(state, D) OVER w AS s0, …, state AS sD FROM events
+    *     WINDOW w AS (PARTITION BY user ORDER BY ts, id))
+    *   WHERE s0 IS NOT NULL GROUP BY s0, …, sD
+    * }}}
+    * so a window is kept iff its oldest event exists and has a non-null
+    * state; later states may be null and group as null. Null users form one
+    * user; null ts and null ids sort first. Events tied on (user, ts, id)
+    * order arbitrarily, as in the window.
+    *
+    * Size dispatch through [[OneTask.fits]]: a user-keyed window over an
+    * event log whose states are a few event types is bound by its stages,
+    * not its data. Up to [[OneTask.MaxRows]] events with user and state
+    * of a [[OneTask.KeyTypes]] type and integral or timestamp order keys,
+    * ONE task counts the windows ([[transitionsOneTask]]), so the result
+    * is one partition and a consumer's window or sort over it needs no
+    * exchange. Otherwise the lag plan above runs ([[transitionsWindow]]).
+    * Both paths return the same rows.
+    *
+    * On the one-task path the input is evaluated twice, by the size
+    * check's count and by the kernel, with no checkpoint between them:
+    * every caller passes a projection of an event table, which costs one
+    * more scan, while a checkpoint would copy every row into the block
+    * store first.
+    *
+    * MEASURED AND REJECTED (q_pagerank at sf0.1, 4 vCPUs): keeping the lag
+    * plan but hash-repartitioning it to `spark.sql.shuffle.partitions`
+    * parts, so that AQE cannot coalesce the window's shuffle into one
+    * reduce task. It ran 4 window tasks but beat the unpartitioned plan
+    * in only 2 of 6 paired runs. */
+  def transitions(events: DataFrame, userCol: String, tsCol: String,
+      idCol: String, stateCol: String, depth: Int = 1): DataFrame = {
+    require(depth >= 1, s"depth must be >= 1, got $depth")
+    oneTaskKeys(events, userCol, tsCol, idCol, stateCol)
+      .filter(OneTask.fits) match {
+      case Some(keyed) => transitionsOneTask(keyed, depth)
+      case None =>
+        transitionsWindow(events, userCol, tsCol, idCol, stateCol, depth)
+    }
+  }
+
+  /** The (user, ts: bigint, id: bigint, state) input of
+    * [[transitionsOneTask]] — timestamps as epoch micros, integral ids
+    * widened, both order-preserving — or None when a column's type rules
+    * the one-task path out. */
+  private[graft] def oneTaskKeys(events: DataFrame, userCol: String,
+      tsCol: String, idCol: String, stateCol: String): Option[DataFrame] = {
+    def typeOf(c: String): DataType = events.select(col(c)).schema.head.dataType
+    def orderKey(c: String): Option[Column] = typeOf(c) match {
+      case TimestampType => Some(unix_micros(col(c)))
+      case LongType | IntegerType | ShortType | ByteType =>
+        Some(col(c).cast(LongType))
+      case _ => None
+    }
+    for {
+      ts <- orderKey(tsCol)
+      id <- orderKey(idCol)
+      if OneTask.KeyTypes(typeOf(userCol)) && OneTask.KeyTypes(typeOf(stateCol))
+    } yield events.select(col(userCol), ts, id, col(stateCol))
+  }
+
+  /** [[transitions]]' distributed path, the lag plan itself: one
+    * user-keyed shuffle, one sort, every lag in one window pass, one
+    * grouped count. */
+  private[graft] def transitionsWindow(events: DataFrame, userCol: String,
+      tsCol: String, idCol: String, stateCol: String,
+      depth: Int): DataFrame = {
+    val w = Window.partitionBy(userCol).orderBy(tsCol, idCol)
+    events
+      .select((0 to depth).map { j =>
+        val back = depth - j
+        (if (back == 0) col(stateCol) else lag(col(stateCol), back).over(w))
+          .as(s"s$j")
+      }: _*)
+      .filter(col("s0").isNotNull)
+      .groupBy((0 to depth).map(j => col(s"s$j")): _*)
+      .agg(count(lit(1)).as("n"))
+  }
+
+  /** [[transitions]]' rows computed inside ONE task over `keyed` (user,
+    * ts: bigint, id: bigint, state), coalesced to one partition:
+    *  - each user gets a dense index (a null user is index −1) and each
+    *    non-null state a dense index (null is −1);
+    *  - an index array is merge-sorted over the primitive columns by
+    *    (user, ts nulls first, id nulls first) — stable, so ties keep
+    *    input order;
+    *  - each window ending at sorted position p whose oldest event
+    *    (p − depth) has the same user and a non-null state is numbered by
+    *    its states, one [[OneTask.KeyIndex]] probe per later event (level j
+    *    keys the level j−1 index by the next state), and the last level
+    *    counts it. */
+  private[graft] def transitionsOneTask(keyed: DataFrame,
+      depth: Int): DataFrame = {
+    val stateType = keyed.schema(3).dataType
+    val schema = (0 to depth)
+      .foldLeft(new StructType())((st, j) => st.add(s"s$j", stateType))
+      .add("n", LongType, nullable = false)
+    keyed.coalesce(1).mapPartitions { rows =>
+      val (userIndex, stateIndex) =
+        (mutable.HashMap.empty[Any, Int], mutable.HashMap.empty[Any, Int])
+      val stateValues = mutable.ArrayBuffer.empty[Any]
+      val (user, state) =
+        (new mutable.ArrayBuilder.ofInt, new mutable.ArrayBuilder.ofInt)
+      val (ts, id) =
+        (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong)
+      val (tsNull, idNull) =
+        (new mutable.ArrayBuilder.ofBoolean, new mutable.ArrayBuilder.ofBoolean)
+      rows.foreach { r =>
+        user += (if (r.isNullAt(0)) -1
+          else userIndex.getOrElseUpdate(r.get(0), userIndex.size))
+        tsNull += r.isNullAt(1); ts += (if (r.isNullAt(1)) 0L else r.getLong(1))
+        idNull += r.isNullAt(2); id += (if (r.isNullAt(2)) 0L else r.getLong(2))
+        state += (if (r.isNullAt(3)) -1 else stateIndex.getOrElseUpdate(
+          r.get(3), { stateValues += r.get(3); stateValues.size - 1 }))
+      }
+      val (u, t, tn, i, in, s) = (user.result(), ts.result(), tsNull.result(),
+        id.result(), idNull.result(), state.result())
+      val ord = mergeSort(u.length, (a, b) =>
+        if (u(a) != u(b)) u(a) < u(b)
+        else if (tn(a) != tn(b)) tn(a)
+        else if (!tn(a) && t(a) != t(b)) t(a) < t(b)
+        else if (in(a) != in(b)) in(a)
+        else !in(a) && i(a) < i(b))
+      val base = stateValues.size + 1L // a state as a digit: index + 1
+      val levels = Array.fill(depth)(new OneTask.KeyIndex)
+      val last = levels(depth - 1)
+      val newest = new mutable.ArrayBuilder.ofInt // window → its first end
+      var p = depth
+      while (p < ord.length) {
+        val oldest = ord(p - depth)
+        if (s(oldest) >= 0 && u(oldest) == u(ord(p))) {
+          var w = s(oldest).toLong
+          var j = 1
+          while (j <= depth) {
+            w = levels(j - 1).add(w * base + s(ord(p - depth + j)) + 1)
+            j += 1
+          }
+          if (last.counts(w.toInt) == 1) newest += p
+        }
+        p += 1
+      }
+      val ends = newest.result()
+      Iterator.range(0, last.size).map { w =>
+        val states = (0 to depth).map { j =>
+          val k = s(ord(ends(w) - depth + j))
+          if (k < 0) null else stateValues(k)
+        }
+        Row.fromSeq(states :+ last.counts(w).toLong)
+      }
+    }(Encoders.row(schema))
+  }
+
+  /** The positions 0 until `n` stably sorted by `lt`: a bottom-up merge
+    * sort over primitive int arrays. With a boxed `Arrays.sort(Integer[])`
+    * instead, the q_pagerank kernel's job took 131–212 ms at sf0.1, against
+    * 103–149 ms with a primitive merge sort (4 vCPUs). */
+  private def mergeSort(n: Int, lt: (Int, Int) => Boolean): Array[Int] = {
+    var (src, dst) = (Array.range(0, n), new Array[Int](n))
+    var width = 1
+    while (width < n) {
+      var lo = 0
+      while (lo < n) {
+        val mid = math.min(lo + width, n)
+        val hi = math.min(lo + 2 * width, n)
+        var a = lo
+        var b = mid
+        var k = lo
+        while (k < hi) {
+          // take from the left run unless the right head is strictly less
+          if (b >= hi || (a < mid && !lt(src(b), src(a)))) {
+            dst(k) = src(a); a += 1
+          } else { dst(k) = src(b); b += 1 }
+          k += 1
+        }
+        lo = hi
+      }
+      val tmp = src; src = dst; dst = tmp
+      width *= 2
+    }
+    src
   }
 }

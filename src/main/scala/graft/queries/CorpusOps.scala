@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{TextFunctions => T}
-import graft.operators.{Clusters, Dedup, Outliers, Ranking}
+import graft.operators.{Clusters, Dedup, Outliers, Ranking, Temporal}
 
 /** Round-4 corpus-pipeline operators: duplicate-cluster resolution
   * (connected components over near-dup pairs), BM25 keyword ranking, PII
@@ -385,9 +385,12 @@ object CorpusOps extends QueryFamily {
     * oracle replays it as chained CTEs. All integer: probabilities in
     * exact ppm (floor div), mass vectors in micro, one v·p product per
     * edge per round (≤ types² terms — everything after the pair count
-    * is class-cardinality sized). Mass leaks at floor divisions and at
-    * types with no observed outflow — deterministic, mirrored, and
-    * irrelevant to the ranking the vector exists for. */
+    * is class-cardinality sized). The pair count is
+    * [[eventTransitions]]: one task up to the one-task cap, so the matrix
+    * is one partition and its per-state sum needs no exchange. Mass leaks
+    * at floor divisions and at types with no observed outflow —
+    * deterministic, mirrored, and irrelevant to the ranking the vector
+    * exists for. */
   def qMarkovStationary(s: SparkSession, dir: String): DataFrame = {
     val (_, vFinal) = markovChain(s, dir)
     vFinal.select(col("st").as("event_type"),
@@ -400,18 +403,15 @@ object CorpusOps extends QueryFamily {
     * reports can never disagree about the chain they describe. */
   private def markovChain(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val p = Tables.events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-      .filter(col("prev_type").isNotNull)
-      .groupBy(col("prev_type").as("i"), col("event_type").as("j"))
-      .agg(count(lit(1)).as("n"))
+    val p = eventTransitions(s, dir)
+      .select(col("s0").as("i"), col("s1").as("j"), col("n"))
       .withColumn("p_ppm",
         expr("(n * 1000000) div sum(n) over (partition by i)"))
       .select("i", "j", "p_ppm")
-      .localCheckpoint(eager = false) // joined once per unrolled round
+      // joined once per unrolled round; eager, since over the one-task
+      // counts (no exchange) a lazy checkpoint would be filled by the
+      // rounds' concurrent query stages, each running the kernel
+      .localCheckpoint()
     val states = p.select(col("i").as("st"))
       .union(p.select(col("j"))).distinct()
     val v0 = states.crossJoin(broadcast(states.agg(count(lit(1)).as("k"))))
@@ -441,8 +441,8 @@ object CorpusOps extends QueryFamily {
     * `div 1e6` (non-negative, so Spark's truncating div and DuckDB's
     * flooring `//` agree), and the contribution is one more integer
     * product-div. Terminal states (no observed outflow) carry H = 0.
-    * Scale: the q_markov_stationary shape — one user-keyed lag window,
-    * then everything is types²-bounded. */
+    * Scale: the q_markov_stationary shape — the transition counts of
+    * [[eventTransitions]], then everything is types²-bounded. */
   def qMarkovEntropy(s: SparkSession, dir: String): DataFrame = {
     val (p, vFinal) = markovChain(s, dir)
     // p_ppm = 0 is reachable (floor division: an edge rarer than 1 in
@@ -497,46 +497,45 @@ object CorpusOps extends QueryFamily {
       .orderBy("l_returnflag")
 
   /** q_transitions — event-type transition matrix: per user, each event's
-    * predecessor type via one lag window, then (prev, next) counts and the
-    * per-prev transition probability. One user-keyed window + one two-key
-    * aggregate; the probability denominator is a window over the (tiny)
-    * aggregated matrix, not the event stream. */
+    * predecessor type, then (prev, next) counts
+    * ([[graft.operators.Temporal.transitions]], one task up to its cap)
+    * and the per-prev transition probability. The probability denominator
+    * is a window over the (tiny) count matrix, not the event stream. */
   def qTransitions(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val pairs = Tables.events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-      .filter(col("prev_type").isNotNull)
-    val counts = pairs.groupBy("prev_type", "event_type")
-      .agg(count(lit(1)).as("n"))
+    val counts = eventTransitions(s, dir)
+      .select(col("s0").as("prev_type"), col("s1").as("event_type"), col("n"))
     counts
       .withColumn("p", round(col("n").cast("double") /
         sum("n").over(Window.partitionBy("prev_type")), 6))
       .orderBy("prev_type", "event_type")
   }
 
+  /** Per-user event-type transition counts over the events table: each
+    * window of `depth + 1` consecutive events in (ts, event_id) order,
+    * as (s0, …, s`depth`, n). The one sequence source of q_transitions,
+    * q_pagerank, q_markov_stationary, q_markov_entropy and q_path_3gram. */
+  private[queries] def eventTransitions(s: SparkSession, dir: String,
+      depth: Int = 1): DataFrame =
+    Temporal.transitions(Tables.events(s, dir), "user_id", "ts", "event_id",
+      "event_type", depth)
+
   /** q_path_3gram — session path mining: the 20 most common 3-step
-    * event-type paths across users (two stacked lags over one
-    * (user, time) window — ONE shuffle, one sort, both lags in a single
-    * pass), with each path's share of all 3-step paths in permille. The
-    * path extension of q_transitions' first-order matrix: funnels show
-    * WHERE users stop, paths show WHICH ROUTES they actually take. */
+    * event-type paths across users (the depth-2 windows of
+    * [[graft.operators.Temporal.transitions]]: one task up to its cap,
+    * else one user-keyed window with both lags in a single pass), with
+    * each path's share of all 3-step paths in permille. The path
+    * extension of q_transitions' first-order matrix: funnels show WHERE
+    * users stop, paths show WHICH ROUTES they actually take. */
   def qPath3gram(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val tri = Tables.events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("p2", lag(col("event_type"), 2).over(w))
-      .withColumn("p1", lag(col("event_type"), 1).over(w))
-      .filter(col("p2").isNotNull)
-    val counts = tri.groupBy(col("p2").as("s1"), col("p1").as("s2"),
-        col("event_type").as("s3"))
-      .agg(count(lit(1)).as("n"))
-    val tot = counts.agg(sum("n").as("t"))
-    counts.crossJoin(broadcast(tot))
+    val counts = eventTransitions(s, dir, depth = 2)
+      .select(col("s0").as("s1"), col("s1").as("s2"), col("s2").as("s3"),
+        col("n"))
+    // the total as a window over the counts, not a joined aggregate, so the
+    // counts are computed once
+    counts
       .select(col("s1"), col("s2"), col("s3"), col("n"),
-        expr("(1000 * n) div t").as("share_permille"))
+        expr("(1000 * n) div sum(n) over ()").as("share_permille"))
       .orderBy(desc("n"), asc("s1"), asc("s2"), asc("s3"))
       .limit(20)
   }

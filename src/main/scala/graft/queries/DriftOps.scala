@@ -137,22 +137,16 @@ object DriftOps extends QueryFamily {
   }
 
   /** q_pagerank — weighted PageRank over the event-type transition graph
-    * (the same lag-derived edges as q_transitions): which states the
-    * session flow concentrates into. 10 rounds of integer-micro-unit
-    * iteration (in one task: the graph is a few event types) —
+    * (q_transitions' per-user transition counts,
+    * [[CorpusOps.eventTransitions]]): which states the session
+    * flow concentrates into. 10 rounds of integer-micro-unit iteration —
     * bit-reproduced by the unrolled DuckDB oracle, a full cross-engine
-    * check of an ITERATIVE algorithm. */
+    * check of an ITERATIVE algorithm. Up to the one-task cap both the
+    * transition counts and all rounds run in one task each, so the query
+    * runs 3 Spark jobs and no shuffle. */
   def qPagerank(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val e = Tables.events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-      .filter(col("prev_type").isNotNull)
-      .groupBy("prev_type", "event_type").agg(count(lit(1)).as("w"))
-      .select(col("prev_type").as("src"), col("event_type").as("dst"),
-        col("w"))
-    graft.operators.Clusters.pageRankWeighted(e, "src", "dst", "w",
+    val e = CorpusOps.eventTransitions(s, dir)
+    graft.operators.Clusters.pageRankWeighted(e, "s0", "s1", "n",
         iterations = 10)
       .orderBy("node")
   }

@@ -211,6 +211,27 @@ class DriftOpsSpec extends SparkSpec {
     assert(two === ten, s"jobs grew with rounds: $two at 2, $ten at 10")
   }
 
+  test("q_pagerank on the spec tables runs 3 jobs and writes no shuffle") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import graft.queries.DriftOps
+    // warm-up: the first read of a table in a session infers its schema
+    val expected = DriftOps.qPagerank(spark, sf).collect().toSeq
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    var (jobs, rows) = (0, Seq.empty[org.apache.spark.sql.Row])
+    listening(new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m =>
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }) {
+      jobs = jobsDuring { rows = DriftOps.qPagerank(spark, sf).collect().toSeq }
+    }
+    assert(rows.nonEmpty && rows === expected)
+    // the transitions size check, the kernel (filling PageRank's edge
+    // checkpoint through its size check), and the rounds
+    assert(jobs === 3)
+    assert(shuffleBytes.get === 0L)
+  }
+
   // ---- incremental aggregate maintenance ----
 
   test("mergePartialAggs equals the from-scratch aggregate, disjoint keys included") {

@@ -864,4 +864,19 @@ class PlanSpec extends SparkSpec {
     assert(!ov.contains("Window"), ov.take(2000))
     assert(!ov.contains("CartesianProduct"), ov.take(2000))
   }
+
+  test("localCheckpoint(eager = false) runs an exchange's map stages at the call when AQE is on") {
+    // the one-task size checks and the round loops rely on which lazy
+    // checkpoints run jobs when they are taken
+    import org.apache.spark.sql.functions.{count, lit}
+    def grouped = spark.range(0, 1000, 1, 4).groupBy(col("id") % 7)
+      .agg(count(lit(1)).as("n"))
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(jobsDuring(grouped.localCheckpoint(eager = false)) === 1)
+    assert(jobsDuring(spark.range(0, 1000, 1, 4).select(col("id") % 7)
+      .localCheckpoint(eager = false)) === 0) // no exchange: lazy
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try assert(jobsDuring(grouped.localCheckpoint(eager = false)) === 0)
+    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
 }

@@ -517,4 +517,66 @@ class PropertySpec extends SparkSpec {
     assert(boundBit, "the pair bound never dropped a pair")
     assert(throwBit, "no zero Jaccard denominator was thrown on")
   }
+
+  test("PROPERTY transitions: the one-task kernel returns the window plan's rows (random event logs)") {
+    // Seeded random event logs over long and string user ids, spread over 3
+    // partitions in shuffled order: null users, null ts and null event ids
+    // (both sort first), equal ts with distinct ids, null states (as the
+    // current event and as a predecessor), negative ts, single-event users;
+    // plus a fixed log holding each of those and the empty log. Depth 1
+    // and 2; rows compare as multisets.
+    import graft.operators.Temporal
+    import org.apache.spark.sql.DataFrame
+    val rnd = freshRandom(10)
+    type Log = Seq[(Option[Int], Option[Long], Option[Long], Option[String])]
+    val types = IndexedSeq("view", "click", "cart", "buy")
+    def some[T](p: Int, v: => T): Option[T] =
+      if (rnd.nextInt(100) < p) None else Some(v)
+    val random: Seq[Log] = Seq.fill(10) {
+      val nUsers = 1 + rnd.nextInt(8)
+      Seq.fill(rnd.nextInt(40)) {
+        (some(8, rnd.nextInt(nUsers)), some(10, (rnd.nextInt(9) - 4) * 1000000L),
+          some(10, rnd.nextInt(30).toLong), some(12, types(rnd.nextInt(4))))
+      }
+    }
+    val fixed: Log = Seq(
+      (Some(1), Some(5L), Some(1L), Some("view")),
+      (Some(1), None, Some(9L), Some("cart")), // null ts sorts first
+      (Some(1), Some(5L), None, Some("buy")), // null id first among ts 5
+      (Some(1), Some(5L), Some(0L), Some("click")), // equal ts, distinct id
+      (Some(1), Some(7L), Some(2L), None), // null state, then as predecessor
+      (Some(1), Some(8L), Some(3L), Some("view")),
+      (None, Some(2L), Some(4L), Some("view")), // the null user
+      (None, Some(1L), Some(5L), Some("click")),
+      (None, None, None, Some("buy")),
+      (Some(2), Some(3L), Some(6L), Some("cart")), // single-event users
+      (Some(3), None, None, None))
+    // a tie on (user, ts, id) orders arbitrarily in the window plan too
+    val logs = (random :+ fixed :+ Seq.empty)
+      .map(_.distinctBy { case (u, t, i, _) => (u, t, i) })
+    def frame(log: Log, stringUsers: Boolean): DataFrame = {
+      val shuffled = rnd.shuffle(log)
+      val raw = if (stringUsers) shuffled.map { case (u, t, i, st) =>
+          (u.map(x => s"u$x"), t, i, st) }.toDF("user_id", "t", "event_id", "event_type")
+        else shuffled.map { case (u, t, i, st) =>
+          (u.map(_.toLong), t, i, st) }.toDF("user_id", "t", "event_id", "event_type")
+      raw.select(col("user_id"), expr("timestamp_micros(t)").as("ts"),
+          col("event_id"), col("event_type"))
+        .repartition(3)
+    }
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    for ((log, caseIdx) <- logs.zipWithIndex; stringUsers <- Seq(false, true);
+         depth <- 1 to 2) {
+      val at = s"case $caseIdx stringUsers=$stringUsers depth=$depth: $log"
+      val events = frame(log, stringUsers)
+      val window = rows(Temporal.transitionsWindow(events, "user_id", "ts",
+        "event_id", "event_type", depth))
+      val keys = Temporal.oneTaskKeys(events, "user_id", "ts", "event_id",
+        "event_type")
+      assert(keys.nonEmpty, at)
+      assert(rows(Temporal.transitionsOneTask(keys.get, depth)) === window, at)
+      assert(rows(Temporal.transitions(events, "user_id", "ts", "event_id",
+        "event_type", depth)) === window, at)
+    }
+  }
 }

@@ -25,19 +25,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * before and after, so no earlier job is counted and none of `body`'s is
     * missed. */
   def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
     val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
+    listening(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         n.incrementAndGet()
-    }
+    })(body)
+    n.get
+  }
+
+  /** Runs `body` with `l` registered, draining the listener bus before and
+    * after, so `l` sees every event of `body` and none from before it. */
+  def listening(l: SparkListener)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
     org.apache.spark.ListenerBusDrain(sc)
     sc.addSparkListener(l)
     try {
       body
       org.apache.spark.ListenerBusDrain(sc)
     } finally sc.removeSparkListener(l)
-    n.get
   }
 
   override def afterAll(): Unit = {
