@@ -55,9 +55,9 @@ object Bench {
       }
     // Each query is independent; drop its localCheckpoint blocks before
     // the next one runs. Without this the block manager accumulates
-    // every prior query's checkpointed RDDs across the 3 × 221-query
-    // passes and the heavy late-alphabet joins (q_ppjoin, q_triangles)
-    // paid eviction + GC pressure other queries caused — measured ~2x
+    // every prior query's checkpointed RDDs across the passes over all
+    // queries, and a heavy join late in the alphabet (q_triangles) pays
+    // eviction + GC pressure other queries caused — measured ~2x
     // inflation vs a solo run. BLOCKING removal, and OUTSIDE the timed
     // region: the removal of a big checkpoint is itself seconds of work
     // that belongs to the harness, not the query (q_winnow read 3-5x

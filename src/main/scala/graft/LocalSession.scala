@@ -3,16 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session the mains run in (Bench, Verify, Explain,
-  * ScaleGen), so the bench, the oracle dump and the plan dump cannot drift
-  * apart: `local[cpus]` with as many shuffle partitions, a UTC session
+  * ScaleGen), and the one conf the test harness builds on, so the bench,
+  * the oracle dump, the plan dump and the specs cannot drift apart:
+  * `local[cpus]` with as many shuffle partitions, a UTC session
   * (timestamp casts match DuckDB's), raw-nanos parquet timestamps (see
   * `Tables.events`), no UI, WARN logs. */
 object LocalSession {
   /** Worker threads: `SPARK_GRAFT_CPUS`, default 4. */
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
-  def apply(): SparkSession = {
-    val spark = SparkSession.builder()
+  /** The conf at `cpus` worker threads. */
+  def builder(cpus: Int): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
@@ -30,7 +32,9 @@ object LocalSession {
       // streams each sorted duplicate group once, while SHJ re-probes a
       // per-partition map whose buckets hold the same heavy groups —
       // sort cost < probe-chain cost on this shape. Kept default ON.
-      .getOrCreate()
+
+  def apply(): SparkSession = {
+    val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

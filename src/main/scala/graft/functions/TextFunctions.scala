@@ -110,18 +110,6 @@ object TextFunctions {
       Bridge.expression(shingles), firstHash, numHashes))
   }
 
-  /** One MinHash band: min over shingles of md5(band|shingle). */
-  def minhashBand(shingles: Column, band: Int): Column =
-    element_at(minhashSignature(shingles, band, 1), 1)
-
-  /** Rolling-hash document fingerprint: the b-band MinHash signature of the
-    * word n-gram set, as a struct of hex strings — one kernel pass for all
-    * bands. */
-  def fingerprint(text: Column, n: Int, bands: Int): Column = {
-    val sig = minhashSignature(wordShingles(text, n), 0, bands)
-    struct((0 until bands).map(b => element_at(sig, b + 1).as(s"mh$b")): _*)
-  }
-
   /** PII patterns shared by the redactor, the match counters, and the DuckDB
     * oracle. Restricted to syntax with identical semantics in Java regex and
     * RE2 (character classes, bounded repetition, ASCII \b) so both engines

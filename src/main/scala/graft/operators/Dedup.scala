@@ -15,23 +15,20 @@ import graft.functions.TextFunctions
   * - `exact`: one hash-partitioned shuffle on the content digest; identical
   *   to the dedup a production pretraining pipeline runs. No skew risk (the
   *   digest is uniform by construction).
-  * - `ngramJaccardPairs`: exact pairwise Jaccard via a shared-shingle
-  *   self-join — candidate generation is bounded by shingle document
-  *   frequency, so extremely common shingles explode the join; `maxShingleDf`
-  *   drops them (they carry no discriminative signal). This is the exact
-  *   verifier; `nearMinhashLsh` is the sub-quadratic candidate generator.
-  *   Size dispatch (with `containmentPairs`): each document is shingled
-  *   once, by one kernel pass per text (`ShingleHashes`: hashed distinct
-  *   word n-grams, linear in the text's bytes); up to `OneTask.MaxRows`
-  *   (document, shingle) rows the pair counts come from ONE task
-  *   (per-document ScanCount), above it from the distributed self-join.
-  *   Both do Σ df² pair instances over the kept shingles — the self-join's
-  *   sort-merge join already runs each shingle's whole posting in one
-  *   task — and return identical rows. Apart from that walk the one task
-  *   is linear: one hash probe per (document, shingle) element numbers
-  *   the keys, with no sort. It emits exactly the pairs the tail keeps
-  *   (plus the degenerate `i > max(ca, cb)` ones the tail decides on), not
-  *   every co-shingled pair.
+  * - `ngramJaccardPairs` (and `containmentPairs`): exact pairwise overlap
+  *   of hashed word n-gram sets. Each document is shingled once, by one
+  *   kernel pass per text (`ShingleHashes`, linear in the text's bytes).
+  *   Up to `OneTask.MaxRows` (document, shingle) rows the pair counts come
+  *   from ONE task: a linear ingest (one hash probe per element) plus
+  *   ScanCount's Σ df² walk, emitting exactly the pairs the tail keeps.
+  *   Above it the work must be bounded by something other than the task:
+  *   a guarded call drops shingles above its df cap (stop shingles carry
+  *   no signal and explode the self-join), an unguarded Jaccard call with
+  *   threshold > 0 (q_ppjoin, q_dedup_recall) runs the PPJoin/AllPairs
+  *   prefix join, whose candidates touch only the rarest keys of each
+  *   set. The self-join is the remaining any-size path. All paths return
+  *   the rows their tail keeps. This is the exact verifier;
+  *   `nearMinhashLsh` is the sub-quadratic candidate generator.
   * - `nearMinhashLsh`: banded MinHash built from codegen'd built-ins —
   *   AND-amplification inside each band (all `rowsPerBand` minhashes must
   *   match), OR across `numBands` bands. Candidate pairs come from an
@@ -120,17 +117,11 @@ object Dedup {
     * banded MinHash (`minhashPairs`) as the candidate generator instead —
     * its cost is corpus-linear by construction.
     *
-    * Size dispatch: each document is shingled once ([[shingleKeys]]). Up to
-    * [[OneTask.MaxRows]] (document, shingle) rows the pair counts come from
-    * ONE task ([[pairCountsOneTask]], per-document ScanCount over in-task
-    * postings); above it, the guarded self-join ([[pairCountsJoin]]) is the
-    * scale path. The one-task work is Σ df² over kept shingles — the same
-    * pair instances the self-join emits, whose sort-merge join already runs
-    * each shingle's whole posting in one task. Both paths return identical
-    * rows. The cap is measured, not assumed: on corpora whose pair work
-    * grows with the square of their size (sf0.1 documents repeated up to
-    * 15 times, 3.9M rows) the one task stayed 2.7–7.6× faster than the
-    * self-join on 4 cores (SCALE.md, near-dup). */
+    * Size dispatch: [[shinglePairs]]. Its one-task cap is measured, not
+    * assumed: on corpora whose pair work grows with the square of their
+    * size (sf0.1 documents repeated up to 15 times, 3.9M rows) the one
+    * task stayed 2.7–7.6× faster than the self-join on 4 cores (SCALE.md,
+    * near-dup). */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
       n: Int, threshold: Double,
       maxShingleDf: Long = Long.MaxValue,
@@ -175,19 +166,28 @@ object Dedup {
     final def emits(i: Long, ca: Long, cb: Long): Boolean =
       i > math.max(ca, cb) || value(i, ca, cb) >= threshold
 
+    /** The columns a kept pair is returned as. */
+    protected def out: Seq[String] = Seq("a_id", "b_id", name)
+
     def apply(pairs: DataFrame): DataFrame =
       pairs.withColumn(name, column(col("i"), col("ca"), col("cb")))
         .filter(col(name) >= threshold)
-        .select("a_id", "b_id", name)
+        .select(out.map(col): _*)
   }
 
   private[graft] object PairTail {
-    /** `i / (ca + cb − i)`: intersection over union. */
-    final case class Jaccard(threshold: Double) extends PairTail("jaccard") {
+    /** `i / (ca + cb − i)`: intersection over union. With `counts`, a kept
+      * pair is returned as its counts `(a_id, b_id, i, ca, cb)`, for a
+      * caller that computes its own form of the ratio (q_ppjoin's integer
+      * `jacc_ppm`). */
+    final case class Jaccard(threshold: Double, counts: Boolean = false)
+        extends PairTail("jaccard") {
       def value(i: Long, ca: Long, cb: Long): Double =
         i.toDouble / (ca + cb - i)
       def column(i: Column, ca: Column, cb: Column): Column =
         i.cast("double") / (ca + cb - i)
+      override protected def out: Seq[String] =
+        if (counts) Seq("a_id", "b_id", "i", "ca", "cb") else super.out
     }
 
     /** `i / min(ca, cb)`: intersection over the smaller set. */
@@ -200,21 +200,33 @@ object Dedup {
     }
   }
 
-  /** The shared guarded core of the exact shingle-overlap family: the
+  /** The shared core of the exact shingle-overlap family: the
     * `(a_id, b_id, i, ca, cb)` pair counts — intersection size plus both
-    * distinct-shingle counts — from the one-task kernel or the distributed
-    * self-join by input size, through `tail`. */
-  private def shinglePairs(df: DataFrame, textCol: String, idCol: String,
-      n: Int, maxShingleDf: Long, maxShingleDfFraction: Option[Double],
-      tail: PairTail): DataFrame = {
+    * distinct-shingle counts — through `tail`. Each document is shingled
+    * once ([[shingleKeys]]). Up to [[OneTask.MaxRows]] (document, shingle)
+    * rows the counts come from ONE task ([[pairCountsOneTask]]), whose
+    * Σ df² walk is the same pair instances the self-join emits. Above it,
+    * an unguarded Jaccard tail with threshold > 0 takes the prefix join
+    * ([[pairCountsPrefix]]), since nothing else bounds its Σ df² work; a
+    * guarded call, a Containment tail, or a threshold ≤ 0 or NaN (which
+    * no prefix shortens) takes the self-join ([[pairCountsJoin]]). */
+  private[graft] def shinglePairs(df: DataFrame, textCol: String,
+      idCol: String, n: Int, maxShingleDf: Long,
+      maxShingleDfFraction: Option[Double], tail: PairTail): DataFrame = {
     val keys = shingleKeys(df, textCol, idCol, n)
     // a document without shingles is one row, so the check also bounds N
     val oneTask = OneTask.KeyTypes(keys.schema("doc").dataType) &&
       OneTask.fits(keys.select(explode_outer(col("gs"))))
+    val unguarded =
+      maxShingleDf == Long.MaxValue && maxShingleDfFraction.isEmpty
     tail(
       if (oneTask)
         pairCountsOneTask(keys, maxShingleDf, maxShingleDfFraction, tail)
-      else pairCountsJoin(keys, maxShingleDf, maxShingleDfFraction))
+      else tail match {
+        case PairTail.Jaccard(t, _) if unguarded && t > 0 =>
+          pairCountsPrefix(keys, t)
+        case _ => pairCountsJoin(keys, maxShingleDf, maxShingleDfFraction)
+      })
   }
 
   /** `(doc, gs)`: one row per input row, `gs` its distinct word n-gram
@@ -264,7 +276,8 @@ object Dedup {
     math.min(math.max(5L, math.ceil(rows * frac).toLong), 10000L)
 
   /** The distributed pair counting over [[shingleKeys]] — the any-size
-    * scale path: df guard, singleton prune, exchange-reusing self-join. */
+    * path of guarded calls, Containment and thresholds ≤ 0: df guard,
+    * singleton prune, exchange-reusing self-join. */
   private[graft] def pairCountsJoin(keys: DataFrame, maxShingleDf: Long,
       maxShingleDfFraction: Option[Double]): DataFrame = {
     val sh0 = keys.select(col("doc"), explode(col("gs")).as("g"))
@@ -309,9 +322,99 @@ object Dedup {
       .join(paired.select(col("doc").as("b_id"), col("g")), "g")
       .filter(col("a_id") < col("b_id"))
       .groupBy("a_id", "b_id").agg(count(lit(1)).as("i"))
+    withCounts(inter, counts)
+  }
+
+  /** `(a_id, b_id, i)` pairs with each document's count `c` (its
+    * (doc, shingle) rows) as `ca` and `cb`. */
+  private def withCounts(inter: DataFrame, counts: DataFrame): DataFrame =
     inter
       .join(counts.select(col("doc").as("a_id"), col("c").as("ca")), "a_id")
       .join(counts.select(col("doc").as("b_id"), col("c").as("cb")), "b_id")
+
+  /** [[pairCountsJoin]]'s rows (unguarded) for a superset of the pairs a
+    * Jaccard tail with threshold `t > 0` keeps or throws on, from the
+    * PPJoin/AllPairs prefix join (Bayardo et al. 2007; Xiao et al. 2008) —
+    * the above-cap path whose work the filters bound where the self-join's
+    * is Σ df². Over [[shingleKeys]]' rows, as (doc, key, multiplicity k);
+    * a null id never pairs and is dropped. Keys are ordered by (df, key),
+    * rare first, with no global rank: each set's positions come from a
+    * doc-bounded window.
+    *  - A document whose keys all have k = 1 is a set of `m = c` keys. A
+    *    pair of such sets with Jaccard ≥ t overlaps in at least ⌈t·m⌉ keys
+    *    of each, so the smallest shared key lies in both sets' first
+    *    m − ⌈t·m⌉ + 1 keys (the PREFIX, pigeonhole): candidates come from
+    *    an equi-join on prefix keys of df ≥ 2. Two prunes ride the same
+    *    join. LENGTH (AllPairs): ⌈t·max(ma, mb)⌉ ≤ min(ma, mb), both ways.
+    *    POSITIONAL (PPJoin): a pair whose shared key sits at positions
+    *    (ra, rb) overlaps in at most min(ma − ra, mb − rb) + 1 keys from
+    *    there on, and needs ⌈t/(1+t)·(ma + mb)⌉; the smallest shared key
+    *    passes it for every pair the tail keeps.
+    *  - The bounds are doubles at `lo`, t lowered by a relative 10⁻¹²:
+    *    the tail keeps fl(i/u) ≥ t, so i/u ≥ t·(1 − 2⁻⁵³), and each bound's
+    *    own rounding is a few ulps, so no computed bound exceeds the exact
+    *    one. Rounding can only admit a candidate; the tail decides exactly.
+    *  - A document with a key of k > 1 (several rows sharing a key, or a
+    *    key repeated in one row) has counts the pigeonhole bound does not
+    *    cover: `i` can exceed min(ca, cb) and the denominator can be zero.
+    *    It pairs through all of its keys with all of every document's, so
+    *    each such pair reaches the verify and the tail, ANSI throw
+    *    included.
+    * Verify: `i` counts the candidate's (a-row, b-row) key matches, Σ ka·kb
+    * over shared keys, exactly the self-join's count.
+    *
+    * MEASURED AND REJECTED (round 11, in q_ppjoin at t = 0.8): the PPJoin+
+    * one-level SUFFIX filter (Xiao et al. 2008 §4 — bound the suffix
+    * overlap by a median-pivot partition of both sorted suffixes). On this
+    * shared-vocabulary corpus it kills only 26% of the candidates the
+    * length+positional filters admit (667,400 → 492,861 at sf0.1, verified
+    * lossless — oracle still green), far below the paper's corpora, while
+    * the bound arithmetic costs more than the verify join it starves:
+    * Spark's higher-order array functions are interpreted per element
+    * (465 s for the filter stage alone at sf0.1 on int-rank arrays, vs
+    * ~6 s for the whole exploded-join verify), and a custom codegen kernel
+    * would at best convert a 26% cut of a ~6 s stage — under the
+    * measurement noise floor. Same conclusion class as the round-10
+    * rejection of per-pair array_intersect verify: at this
+    * candidate/doc-size ratio the exploded equi-join + count aggregate is
+    * the fastest exact verify. */
+  private[graft] def pairCountsPrefix(keys: DataFrame, t: Double): DataFrame = {
+    val dk = keys.filter(col("doc").isNotNull)
+      .select(col("doc"), explode(col("gs")).as("g"))
+      .groupBy("doc", "g").agg(count(lit(1)).as("k"))
+      .localCheckpoint(eager = false) // ranks, both joins and the verify
+    val docs = dk.groupBy("doc").agg(sum("k").as("c"), count(lit(1)).as("m"))
+    val lo = math.min(t, 1.0) * (1 - 1e-12)
+    def overlap(m: Column): Column = ceil(m * lo)
+    val ranked = dk.join(dk.groupBy("g").agg(count(lit(1)).as("df")), "g")
+      .join(docs, "doc")
+    val prefix = ranked.filter(col("c") === col("m"))
+      .withColumn("rn",
+        row_number().over(Window.partitionBy("doc").orderBy("df", "g")))
+      .filter(col("rn") <= col("m") - overlap(col("m")) + 1 &&
+        col("df") >= 2)
+      .select("doc", "g", "m", "rn")
+    val (a, b) = (prefix.as("a"), prefix.as("b"))
+    val sets = a.join(b, col("a.g") === col("b.g") &&
+        col("a.doc") < col("b.doc") &&
+        overlap(col("a.m")) <= col("b.m") &&
+        overlap(col("b.m")) <= col("a.m") &&
+        least(col("a.m") - col("a.rn"), col("b.m") - col("b.rn")) + 1 >=
+          ceil((col("a.m") + col("b.m")) * (lo / (1 + lo))))
+      .select(col("a.doc").as("a_id"), col("b.doc").as("b_id"))
+    val multi = ranked.filter(col("c") > col("m"))
+      .select(col("doc").as("x"), col("g"))
+      .join(dk.select(col("doc").as("y"), col("g")), "g")
+      .filter(col("x") =!= col("y"))
+      .select(least(col("x"), col("y")).as("a_id"),
+        greatest(col("x"), col("y")).as("b_id"))
+    val inter = sets.union(multi).distinct()
+      .join(dk.select(col("doc").as("a_id"), col("g"), col("k").as("ka")),
+        "a_id")
+      .join(dk.select(col("doc").as("b_id"), col("g"), col("k").as("kb")),
+        Seq("b_id", "g"))
+      .groupBy("a_id", "b_id").agg(sum(col("ka") * col("kb")).as("i"))
+    withCounts(inter, docs)
   }
 
   /** [[pairCountsJoin]]'s rows computed inside ONE task over [[shingleKeys]]

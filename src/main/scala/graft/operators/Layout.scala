@@ -21,11 +21,6 @@ object Layout {
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(table)
 
-  /** Persist partitioned by a low-cardinality column (e.g. event date):
-    * predicate on the partition column prunes directories before any IO. */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-
   /** Skew-safe join of a fact table against a dimension when a handful of
     * fact keys dominate: the fact side gets a deterministic salt derived
     * from `saltSource` (any well-distributed fact column), the dim side is

@@ -59,40 +59,6 @@ object Multimodal {
       .when(magic(payload, 1, 2) === "FFD8", "image/jpeg")
       .otherwise(fallback)
 
-  /** REAL (not stubbed) BMP header parse: (width, height, bpp) from the
-    * BITMAPINFOHEADER fields — null for non-BMP payloads. Little-endian
-    * byte arithmetic on the binary column; no decode library involved. */
-  def parseBmp(payload: Column): Column =
-    when(magic(payload, 1, 2) === "424D" && length(payload) >= 30,
-      struct(
-        leUInt(payload, 19, 4).as("width"),
-        leUInt(payload, 23, 4).as("height"),
-        leUInt(payload, 29, 2).as("bpp")))
-
-  /** REAL (not stubbed) PNG IHDR parse: (width, height, bit_depth,
-    * color_type) from the mandatory first chunk — PNG is big-endian
-    * (network order), and IHDR must open the chunk stream at offset 9
-    * (8-byte signature + 4-byte length), so the fields sit at fixed
-    * offsets. Null for non-PNG payloads. */
-  def parsePng(payload: Column): Column =
-    when(magic(payload, 1, 4) === "89504E47" &&
-      magic(payload, 13, 4) === "49484452" && length(payload) >= 26,
-      struct(
-        beUInt(payload, 17, 4).as("width"),
-        beUInt(payload, 21, 4).as("height"),
-        beUInt(payload, 25, 1).as("bit_depth"),
-        beUInt(payload, 26, 1).as("color_type")))
-
-  /** REAL (not stubbed) WAV/RIFF header parse: (n_channels, sample_rate,
-    * bits_per_sample) from the canonical fmt chunk — null for non-WAV. */
-  def parseWav(payload: Column): Column =
-    when(magic(payload, 1, 4) === "52494646" &&
-      magic(payload, 9, 4) === "57415645" && length(payload) >= 36,
-      struct(
-        leUInt(payload, 23, 2).as("n_channels"),
-        leUInt(payload, 25, 4).as("sample_rate"),
-        leUInt(payload, 35, 2).as("bits_per_sample")))
-
   /** Big-endian unsigned int at a DYNAMIC 1-based position (Column, not
     * literal), `len` bytes wide — PNG chunk fields and pixel offsets live
     * at data-dependent positions. Everything stays inside codegen'd
@@ -472,16 +438,5 @@ object Multimodal {
         })))
       .select(df.columns.toIndexedSeq.map(col) :+ col("frame.frame_idx")
         :+ col("frame.byte_offset") :+ col("frame.bytes").as("frame_bytes"): _*)
-  }
-
-  /** STUB resize: recompute the feature vector at a different "resolution"
-    * (dim count) from the same digest — stands in for image resize +
-    * re-embed. Deterministic; schema `array<float>` of `dims`. Static
-    * projection for the same CSE reason as decodeFeaturesStub. */
-  def resizeFeaturesStub(payload: Column, dims: Int): Column = {
-    val digest = sha2(payload, 512)
-    array((0 until dims).map(i =>
-      (conv(substring(digest, i * 2 + 1, 2), 16, 10)
-        .cast("double") / 255.0).cast("float")): _*)
   }
 }

@@ -172,92 +172,27 @@ object CurateOps extends QueryFamily {
     Profile.keySkew(Tables.events(s, dir), "user_id", topN = 20)
       .orderBy("rnk")
 
-  /** q_ppjoin — prefix-filtered exact set-similarity self-join (the
-    * PPJoin/AllPairs blocking of Bayardo et al. 2007 / Xiao et al. 2008):
-    * documents as DISTINCT word-bigram sets, Jaccard ≥ 0.8. A third
-    * blocking family beside MinHash bands (probabilistic) and SimHash
-    * bands (Hamming): order every set by ascending document frequency
-    * (rare tokens first — ties by token), keep only each set's first
-    * m − ⌈0.8m⌉ + 1 tokens as its PREFIX, and join on prefix tokens
-    * only — any pair with Jaccard ≥ t MUST share a prefix token (pigeonhole
-    * on the (1−t)·m tokens a match may miss), so recall is exactly 100%
-    * while the join touches the rarest ~20% of each set. Candidates are
-    * then verified EXACTLY, which is why the oracle can be the plain
-    * all-pairs computation. No global rank anywhere: the frequency order
-    * is a (df, tok) sort key, per-set prefixes come from a doc-bounded
-    * window, and ⌈0.8m⌉ is the integer (4m+4) div 5 — no float ceil.
-    *
-    * MEASURED AND REJECTED (round 11): the PPJoin+ one-level SUFFIX filter
-    * (Xiao et al. 2008 §4 — bound the suffix overlap by a median-pivot
-    * partition of both sorted suffixes). On this shared-vocabulary corpus
-    * it kills only 26% of the candidates the length+positional filters
-    * admit (667,400 → 492,861 at sf0.1, verified lossless — oracle still
-    * green), far below the paper's corpora, while the bound arithmetic
-    * costs more than the verify join it starves: Spark's higher-order
-    * array functions are interpreted per element (465 s for the filter
-    * stage alone at sf0.1 on int-rank arrays, vs ~6 s for the whole
-    * exploded-join verify), and a custom codegen kernel would at best
-    * convert a 26% cut of a ~6 s stage — under the measurement noise
-    * floor. Same conclusion class as the round-10 rejection of per-pair
-    * array_intersect verify: at this candidate/doc-size ratio the
-    * exploded equi-join + count aggregate is the fastest exact verify. */
-  def qPpjoin(s: SparkSession, dir: String): DataFrame = {
-    val ws = T.tokens(col("text"))
-    val bigrams = when(size(ws) > 1,
-        array_distinct(transform(
-          arrays_zip(
-            slice(ws, lit(1), size(ws) - 1).as("x"),
-            slice(ws, lit(2), size(ws) - 1).as("y")),
-          p => concat(p.getField("x"), lit(" "), p.getField("y")))))
-      .otherwise(array().cast("array<string>"))
-    val td = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(bigrams).as("tok"))
-      .localCheckpoint(eager = false) // df + prefix + verify reads
-    val dfreq = td.groupBy("tok").agg(count(lit(1)).as("df"))
-    val sz = td.groupBy("doc_id").agg(count(lit(1)).as("m"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-      .orderBy("df", "tok")
-    val prefix = td.join(dfreq, Seq("tok")).join(sz, Seq("doc_id"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= col("m") - expr("(4 * m + 4) div 5") + 1)
-      // a df==1 prefix token cannot witness any pair (a shared token has
-      // df >= 2 by definition) — drop it before the self-join, the same
-      // singleton prune every band join in the repo applies
-      .filter(col("df") >= 2)
-      .select("doc_id", "tok", "m", "rn")
-    // Two further PROVABLY-LOSSLESS prunes riding the same equi-join
-    // (both from the cited papers; the prefix alone left 1.5M candidates
-    // of 12.5M possible pairs on this shared-vocabulary corpus and the
-    // verify join dominated the whole bench at 34-48 s):
-    // - AllPairs LENGTH filter (Bayardo et al. 2007): Jaccard >= 0.8
-    //   forces 4*max(|A|,|B|) <= 5*min(|A|,|B|).
-    // - PPJoin POSITIONAL filter (Xiao et al. 2008): a match needs
-    //   overlap >= ceil(t/(1+t)*(ma+mb)) = (4*(ma+mb)+8) div 9, but a
-    //   pair first meeting at prefix positions (rna, rnb) can overlap at
-    //   most min(ma-rna, mb-rnb)+1 — matching on a LATE prefix token
-    //   cannot reach the required overlap, so the pair is dead on
-    //   arrival. Everything integer, no float ceil.
-    val cands = prefix.as("a").join(prefix.as("b"),
-        col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id") &&
-          col("a.m") * 4 <= col("b.m") * 5 &&
-          col("b.m") * 4 <= col("a.m") * 5 &&
-          least(col("a.m") - col("a.rn"), col("b.m") - col("b.rn")) + 1 >=
-            expr("(4 * (a.m + b.m) + 8) div 9"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-    val inter = cands
-      .join(td.select(col("doc_id").as("da"), col("tok")), Seq("da"))
-      .join(td.select(col("doc_id").as("db"), col("tok")), Seq("db", "tok"))
-      .groupBy("da", "db").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sz.select(col("doc_id").as("da"), col("m").as("ma")), Seq("da"))
-      .join(sz.select(col("doc_id").as("db"), col("m").as("mb")), Seq("db"))
-      .withColumn("jacc_ppm",
-        expr("(1000000 * inter) div (ma + mb - inter)"))
+  /** q_ppjoin — exact set-similarity self-join: documents as DISTINCT
+    * word-bigram sets, the pairs with Jaccard ≥ 0.8 as integers
+    * (da, db, inter, jacc_ppm). It is the shared shingle-pair operator
+    * behind `Dedup.ngramJaccardPairs` (n = 2, unguarded, Jaccard ≥ 0.8):
+    * the one-task kernel up to the cap, above it the PPJoin/AllPairs
+    * prefix join with its length and positional filters
+    * (`Dedup.pairCountsPrefix`). The tail here is integer:
+    * jacc_ppm = (10⁶·i) div (ca + cb − i) ≥ 800000, which is 5i ≥ 4u;
+    * such a pair also has i/u ≥ 0.8 in double (rounding is monotone), so
+    * the operator keeps every row this filter keeps. Bigrams compare as
+    * 64-bit hashes, not strings: `Dedup.shingleKeys` states the collision
+    * posture. The oracle is the plain all-pairs join on strings, so a hash
+    * match proves the blocking loses nothing. */
+  def qPpjoin(s: SparkSession, dir: String): DataFrame =
+    Dedup.shinglePairs(Tables.documents(s, dir), "text", "doc_id", 2,
+        Long.MaxValue, None, Dedup.PairTail.Jaccard(0.8, counts = true))
+      .select(col("a_id").as("da"), col("b_id").as("db"),
+        col("i").as("inter"),
+        expr("(1000000 * i) div (ca + cb - i)").as("jacc_ppm"))
       .filter(col("jacc_ppm") >= 800000)
-      .select("da", "db", "inter", "jacc_ppm")
       .orderBy("da", "db")
-  }
 
   /** q_ppl_filter — perplexity-band curation (the CCNet/Wikipedia-LM
     * recipe): score every document under the q_kn_bigram Kneser–Ney LM

@@ -296,7 +296,7 @@ class CorpusOpsSpec extends SparkSpec {
       (1L, 0L) -> 1L, (1L, 2L) -> 1L))
   }
 
-  // ---- real container-header parsing (multimodal) ----
+  // ---- container magic bytes (multimodal) ----
 
   private def le(v: Long, len: Int): Array[Byte] =
     Array.tabulate(len)(i => ((v >> (8 * i)) & 0xff).toByte)
@@ -310,52 +310,16 @@ class CorpusOpsSpec extends SparkSpec {
       le(16, 4) ++ le(1, 2) ++ le(ch, 2) ++ le(rate, 4) ++
       le(rate * ch * bits / 8, 4) ++ le(ch * bits / 8, 2) ++ le(bits, 2)
 
-  test("BMP and WAV headers parse with real byte arithmetic, no media libs") {
-    val df = Seq(
-      (0L, bmpBytes(640, 480, 24)),
-      (1L, wavBytes(2, 44100, 16)),
-      (2L, "plain text bytes".getBytes)
-    ).toDF("id", "payload")
-    val out = df.select(col("id"),
-        graft.operators.Multimodal.parseBmp(col("payload")).as("bmp"),
-        graft.operators.Multimodal.parseWav(col("payload")).as("wav"),
-        graft.operators.Multimodal.detectMime(col("payload"), "text/plain")
-          .as("mime"))
-      .orderBy("id").collect()
-    val bmp = out(0).getStruct(1)
-    assert(bmp.getLong(0) == 640 && bmp.getLong(1) == 480 && bmp.getLong(2) == 24)
-    assert(out(0).getString(3) == "image/bmp" && out(0).isNullAt(2))
-    val wav = out(1).getStruct(2)
-    assert(wav.getLong(0) == 2 && wav.getLong(1) == 44100 && wav.getLong(2) == 16)
-    assert(out(1).getString(3) == "audio/wav" && out(1).isNullAt(1))
-    assert(out(2).isNullAt(1) && out(2).isNullAt(2) &&
-      out(2).getString(3) == "text/plain")
-  }
-
-  test("PNG IHDR parses width/height/depth/color in network byte order") {
-    def be(v: Long, n: Int): Array[Byte] =
-      (0 until n).reverse.map(i => ((v >> (8 * i)) & 0xff).toByte).toArray
-    val sig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
-    val png = sig ++ be(13, 4) ++ "IHDR".getBytes ++
-      be(1920, 4) ++ be(1080, 4) ++ Array(8.toByte, 6.toByte)
-    val out = Seq((0L, png), (1L, "not a png".getBytes))
-      .toDF("id", "payload")
-      .select(col("id"), graft.operators.Multimodal.parsePng(col("payload"))
-        .as("png"))
-      .orderBy("id").collect()
-    val p = out(0).getStruct(1)
-    assert(p.getLong(0) == 1920 && p.getLong(1) == 1080)
-    assert(p.getLong(2) == 8 && p.getLong(3) == 6) // 8-bit RGBA
-    assert(out(1).isNullAt(1))
-  }
-
   test("PNG and JPEG magic bytes sniff their mime types") {
     val png = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
     val jpg = Array(0xff, 0xd8, 0xff, 0xe0).map(_.toByte)
-    val mimes = Seq((0L, png), (1L, jpg)).toDF("id", "payload")
+    val mimes = Seq((0L, png), (1L, jpg), (2L, bmpBytes(640, 480, 24)),
+        (3L, wavBytes(2, 44100, 16)), (4L, "plain text bytes".getBytes))
+      .toDF("id", "payload")
       .select(graft.operators.Multimodal.detectMime(col("payload"), "?"))
       .as[String].collect()
-    assert(mimes.sorted.toSeq == Seq("image/jpeg", "image/png"))
+    assert(mimes.sorted.toSeq ==
+      Seq("?", "audio/wav", "image/bmp", "image/jpeg", "image/png"))
   }
 
   // ---- SQL extension surface ----

@@ -104,21 +104,6 @@ class LayoutSpec extends SparkSpec {
     assert(again === merged)
   }
 
-  test("partitioned layout prunes directories on the partition predicate") {
-    val dir = graft.operators.Scratch.dir("part_layout")
-    val df = Tables.events(spark, sf)
-      .withColumn("event_date", to_date(col("ts")))
-    Layout.writePartitioned(df, dir, "event_date")
-    val someDate = spark.read.parquet(dir).select("event_date")
-      .distinct().orderBy("event_date").as[java.sql.Date].head()
-    val pruned = spark.read.parquet(dir)
-      .filter(col("event_date") === lit(someDate))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") &&
-      plan.contains("event_date"), plan)
-    assert(pruned.count() > 0)
-  }
-
   test("LM layout: stored counts score bit-identically to a fresh fit") {
     import graft.operators.LmScore
     val train = Seq((0L, "a b a c"), (1L, "b a c d")).toDF("doc_id", "text")

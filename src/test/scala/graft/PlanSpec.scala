@@ -392,27 +392,28 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ppjoin candidate join carries the length + positional filters, no product") {
-    // q_ppjoin's 4-6x round-9 win rests on two provably-lossless prunes
-    // riding the prefix-token equi-join (CurateOps.qPpjoin): the AllPairs
-    // LENGTH filter (4*max <= 5*min via m*4 <= m*5 both ways) and the
-    // PPJoin POSITIONAL filter (least(m-rn, m-rn)+1 >= (4*(ma+mb)+8) div 9).
-    // An innocent refactor that drops either silently returns the query to
-    // 34-48 s with every correctness check still green (the filters only
-    // prune candidates the exact verify would reject anyway) — so the plan
-    // itself is the only place the win is observable. Pin it.
-    val p = planString(graft.queries.CurateOps.qPpjoin(spark, sf))
+    // The prefix join (Dedup.pairCountsPrefix: q_ppjoin's path above the
+    // one-task cap) rests on two provably-lossless prunes riding the
+    // prefix-key equi-join: the AllPairs LENGTH filter (ceil(m * lo) <= m,
+    // both ways) and the PPJoin POSITIONAL filter (least(ma - ra, mb - rb)
+    // + 1 >= the required overlap). Dropping either leaves every
+    // correctness check green (the filters only prune candidates the exact
+    // verify rejects anyway) and returns the join to its unpruned cost —
+    // so the plan itself is the only place the win is observable. Pin it.
+    import graft.operators.Dedup
+    val keys = Dedup.shingleKeys(Tables.documents(spark, sf), "text",
+      "doc_id", 2)
+    val p = planString(Dedup.pairCountsPrefix(keys, 0.8))
     assert(!p.contains("CartesianProduct"), p.take(2000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
-    // length filter: both (a.m * 4) <= (b.m * 5) directions survive into
-    // the physical join condition
-    assert("\\* 4\\)".r.findAllIn(p).size >= 2,
+    val cond = p.linesIterator.filter(_.contains("least(")).mkString("\n")
+    // length filter: both CEIL(m * lo) <= m directions survive into the
+    // physical join condition beside the positional least(...) bound
+    assert("CEIL\\(\\(cast\\(m#\\d+L as double\\) \\* 0\\.7".r
+      .findAllIn(cond).size === 2,
       s"AllPairs length filter missing from the plan:\n${p.take(4000)}")
-    // positional filter: the least(...) overlap bound and its div-9
-    // required-overlap arithmetic survive
-    assert(p.contains("least("),
+    assert(cond.contains("Join") && cond.contains("least((m#"),
       s"PPJoin positional filter (least) missing:\n${p.take(4000)}")
-    assert(p.contains("div 9"),
-      s"PPJoin positional filter (div 9 overlap bound) missing:\n${p.take(4000)}")
   }
 
   test("pareto frontier has no global-order window and no product; linkage is equi-joins only") {

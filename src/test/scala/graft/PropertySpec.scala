@@ -396,7 +396,7 @@ class PropertySpec extends SparkSpec {
       Double.PositiveInfinity, Double.NaN)
     val bits = java.lang.Double.doubleToRawLongBits _
     var (wayAbove, landed) = (0, 0)
-    for (make <- Seq(PairTail.Jaccard(_), PairTail.Containment(_))) {
+    for (make <- Seq(PairTail.Jaccard(_: Double), PairTail.Containment(_))) {
       val values = pairs.orderBy("a_id")
         .select(make(0.0).column(col("i"), col("ca"), col("cb")))
         .as[Double].collect().toSeq
@@ -429,7 +429,9 @@ class PropertySpec extends SparkSpec {
     // whose duplicate ids make zero Jaccard denominators. The raw
     // counts compare with the kernel unbounded (a −∞ Jaccard tail emits
     // every counted pair); the public operators then run it at thresholds
-    // 0, 0.2, 0.3, 1, 1.5 and NaN.
+    // 0, 0.2, 0.3, 1, 1.5 and NaN. The prefix join (the unguarded Jaccard
+    // path above the cap) runs at 0.2, 0.3, 0.5, 0.8 and 1.0, against the
+    // same tail over the unguarded join.
     import graft.operators.Dedup
     import graft.operators.Dedup.PairTail
     import org.apache.spark.sql.DataFrame
@@ -467,7 +469,8 @@ class PropertySpec extends SparkSpec {
     // a zero Jaccard denominator (duplicate ids) throws under ANSI: then
     // both paths must throw
     def outcome(df: DataFrame) = scala.util.Try(rows(df)).toOption
-    var (guardBit, boundBit, throwBit) = (false, false, false)
+    var (guardBit, boundBit, throwBit, prefixBit) =
+      (false, false, false, false)
     for ((docs, caseIdx) <- corpora.zipWithIndex; n <- 1 to 3) {
       val keys = Dedup.shingleKeys(docs, "text", "doc_id", n)
       for ((maxDf, frac) <- guards) {
@@ -512,10 +515,19 @@ class PropertySpec extends SparkSpec {
           boundBit ||= bounded.size < unbounded.size
         }
       }
+      val coShingled = join.count()
+      for (t <- Seq(0.2, 0.3, 0.5, 0.8, 1.0)) {
+        val prefix = Dedup.pairCountsPrefix(keys, t)
+        assert(outcome(PairTail.Jaccard(t)(prefix)) ===
+          outcome(PairTail.Jaccard(t)(join)),
+          s"corpus $caseIdx n=$n prefix t=$t")
+        prefixBit ||= prefix.count() < coShingled
+      }
     }
     assert(guardBit, "the fraction guard never dropped a shingle")
     assert(boundBit, "the pair bound never dropped a pair")
     assert(throwBit, "no zero Jaccard denominator was thrown on")
+    assert(prefixBit, "the prefix join never dropped a co-shingled pair")
   }
 
   test("PROPERTY transitions: the one-task kernel returns the window plan's rows (random event logs)") {

@@ -5,17 +5,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared session harness: one local session per suite, conf identical to
-  * the mains' `LocalSession` (UTC, nanosAsLong, small shuffle fan-out) at a
-  * fixed 4 threads, plus the Graft extensions. */
+/** Shared session harness: one local session per suite, the mains'
+  * `LocalSession` conf at a fixed 4 threads, plus the Graft extensions. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = LocalSession.builder(4)
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
     .withExtensions(new GraftExtensions)
     .getOrCreate()
 

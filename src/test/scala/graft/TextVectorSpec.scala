@@ -293,16 +293,6 @@ class TextVectorSpec extends SparkSpec {
       assert(math.abs(got(k) - m) < 1e-9, s"k=$k got=${got(k)} want=$m")
   }
 
-  test("multimodal resize stub: requested dims, deterministic, in range") {
-    val df = Seq((1L, "hello world")).toDF("doc_id", "text")
-    val out = graft.operators.Multimodal.withPayload(df, "text")
-      .select(graft.operators.Multimodal
-        .resizeFeaturesStub(col("payload"), 16).as("f"))
-      .as[Array[Float]].head()
-    assert(out.length === 16)
-    assert(out.forall(v => v >= 0.0f && v <= 1.0f))
-  }
-
   test("multimodal stub: payload round-trip + deterministic features") {
     val df = Seq((1L, "hello world")).toDF("doc_id", "text")
     val out = graft.operators.Multimodal.extract(df, "text")
