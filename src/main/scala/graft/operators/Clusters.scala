@@ -398,12 +398,15 @@ object Clusters {
   }
 
   /** Per-node triangle census over an undirected edge list: degree,
-    * triangle count, and local clustering coefficient (permille) — the
-    * graph-quality report over a near-dup pair graph. High clustering
-    * says the dedup edges form coherent duplicate GROUPS (templates, mass
-    * boilerplate); low clustering with high degree flags hub documents
-    * whose pairings are artifacts (a hot shingle, a degenerate signature)
-    * rather than a real duplicate family.
+    * triangle count, and local clustering coefficient (permille). The one
+    * triangle count of the engine: q_dup_graph runs it over the near-dup
+    * pair graph, q_triangles and q_clustering_coef over the co-purchase
+    * graph. Over near-dup pairs it is a graph-quality report: high
+    * clustering says the dedup edges form coherent duplicate GROUPS
+    * (templates, mass boilerplate); low clustering with high degree flags
+    * hub documents whose pairings are artifacts (a hot shingle, a
+    * degenerate signature) rather than a real duplicate family. Edges may
+    * come in either orientation and repeated; self-loops are dropped.
     *
     * Scale shape: the classic degree-ordered orientation (each edge
     * points from its lower (degree, id) endpoint), which bounds every

@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 /** The one size check shared by every operator with a one-task path
-  * (`Clusters.connectedComponents`, `Clusters.pageRankWeighted`, the
-  * shingle-pair counting behind `Dedup.ngramJaccardPairs` and
-  * `Dedup.containmentPairs`, and `Temporal.transitions`). Up to
+  * (`Clusters.connectedComponents`, `Clusters.pageRankWeighted`,
+  * `PairCounts` behind the shingle-pair and co-purchase queries, and
+  * `Temporal.transitions`). Up to
   * [[MaxRows]] input rows the operator runs its whole computation inside
   * ONE task (`coalesce(1).mapPartitions`): a fixed handful of Spark jobs
   * instead of a distributed plan whose scheduling cost dominates a small
@@ -16,7 +16,7 @@ private[graft] object OneTask {
 
   /** Largest input a one-task path runs, sized like a broadcast
     * threshold: 4M rows ≈ 64 MB of longs. The one cap for every operator
-    * with a one-task path. The shingle-pair kernel's work is superlinear
+    * with a one-task path. The pair-count kernel's work is superlinear
     * (Σ df² pairs), so the cap was measured for it too: the one task beat
     * the distributed join at every size up to 4M rows (SCALE.md,
     * near-dup). */
@@ -24,7 +24,7 @@ private[graft] object OneTask {
 
   /** Whether `df` has at most [[MaxRows]] rows: a count of its rows in
     * ONE job of one stage that writes no shuffle (`toRdd.count()`).
-    * The graph and shingle-pair callers pass a frame over a
+    * The graph and pair-count callers pass a frame over a
     * `localCheckpoint(eager = false)` input, so when the checkpointed plan
     * has no exchange this pass is the one that fills the checkpoint both
     * paths then read. Over an exchange the checkpoint is not lazy with AQE

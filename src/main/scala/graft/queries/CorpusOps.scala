@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{TextFunctions => T}
-import graft.operators.{Clusters, Dedup, Outliers, Ranking, Temporal}
+import graft.operators.{Clusters, Dedup, Outliers, PairCounts, Ranking,
+  Temporal}
+import graft.operators.PairCounts.PairTail
 
 /** Round-4 corpus-pipeline operators: duplicate-cluster resolution
   * (connected components over near-dup pairs), BM25 keyword ranking, PII
@@ -610,8 +612,8 @@ object CorpusOps extends QueryFamily {
       .orderBy("q_id", "rnk")
   }
 
-  /** Distinct (order, part) incidence — the bipartite base both graph
-    * queries below share. */
+  /** Distinct (order, part) incidence — the bipartite base of every
+    * co-purchase query below ([[coPurchase]]). */
   private def orderPartPairs(s: SparkSession, dir: String): DataFrame =
     // Tables.parallel MEASURED AND REJECTED here (optimization r15):
     // paired A/B across all 10 consumer graph queries read medians
@@ -626,80 +628,62 @@ object CorpusOps extends QueryFamily {
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
 
+  /** The co-purchase pairs of `po`'s distinct (o, p) rows: parts
+    * `a_id < b_id` bought together in at least `minSup` orders, as
+    * [[PairCounts]]' `(a_id, b_id, i, ca, cb)` — `i` the orders they
+    * share, `ca` and `cb` each part's order count. */
+  private[graft] def coPurchase(po: DataFrame, minSup: Long): DataFrame =
+    PairCounts(PairCounts.oneKeyPerRow(po, "p", "o"),
+      PairTail.Support(minSup))
+
+  /** The support-pruned co-purchase edge list (co ≥ 2), `(i, j)` both
+    * ways — the graph of q_bfs_hops, q_random_walks, q_communities,
+    * q_kcore, q_assortativity and q_link_predict. Materialized once
+    * (eagerly): most consumers read it more than once in one plan. */
+  private[graft] def prunedEdgesBothWays(s: SparkSession,
+      dir: String): DataFrame =
+    PairCounts.bothWays(coPurchase(orderPartPairs(s, dir), 2))
+      .select(col("a_id").as("i"), col("b_id").as("j"))
+      .localCheckpoint()
+
   /** q_triangles — triangle counting on the co-purchase graph (parts
     * appearing in the same order), the clustering-coefficient primitive
-    * behind community detection and link-prediction features. The count
-    * uses the degree-ordered orientation (Schank & Wagner / Cohen's
-    * MapReduce form): every edge points from its lower-(degree, id)
-    * endpoint to the higher, each triangle then has exactly ONE vertex
-    * with two out-edges, so wedges enumerate once and close with a single
-    * equi-join — Σ out-deg² stays O(m^1.5) on ANY graph, where the naive
-    * wedge join is unbounded on a hot vertex. No global rank is needed:
-    * orientation compares (degree, id) structs edge-locally. Per-order
-    * pair generation is basket-bounded (TPC-H baskets ≤ a few dozen
-    * parts; the same shape as q_basket_pairs).
+    * behind community detection and link-prediction features: the 30
+    * parts in the most triangles. The edges are every co-purchased pair
+    * ([[coPurchase]] at support 1), and the census is
+    * [[Clusters.triangleStats]]' degree-ordered orientation (Schank &
+    * Wagner / Cohen's MapReduce form), which enumerates each triangle
+    * once with Σ out-deg² = O(m^1.5) on any graph.
     *
     * Deliberately NO support prune on the edge list (contrast q_item_cf's
     * co ≥ 2): a triangle census is a census — dropping weak edges changes
     * the answer, where item-CF's prune only trims a ranking it was free to
     * trim. The cost of exactness is bounded by the orientation, not by a
-    * threshold: the suite's most expensive query (~8.6 s at sf0.1) because
-    * the co-purchase pair graph is dense, and that density IS the input. */
-  def qTriangles(s: SparkSession, dir: String): DataFrame = {
-    val po = orderPartPairs(s, dir)
-    val e = po.as("a").join(po.as("b"),
-        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .groupBy(col("a.p").as("x"), col("b.p").as("y"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // read thrice: degrees + both ends
-    val deg = e.select(col("x").as("p")).unionAll(e.select(col("y").as("p")))
-      .groupBy("p").agg(count(lit(1)).as("d"))
-    val o = e
-      .join(deg.select(col("p").as("x"), col("d").as("dx")), Seq("x"))
-      .join(deg.select(col("p").as("y"), col("d").as("dy")), Seq("y"))
-      .select(
-        when(struct(col("dx"), col("x")) < struct(col("dy"), col("y")),
-          col("x")).otherwise(col("y")).as("u"),
-        when(struct(col("dx"), col("x")) < struct(col("dy"), col("y")),
-          col("y")).otherwise(col("x")).as("v"),
-        when(struct(col("dx"), col("x")) < struct(col("dy"), col("y")),
-          struct(col("dy").as("kd"), col("y").as("kp")))
-          .otherwise(struct(col("dx").as("kd"), col("x").as("kp")))
-          .as("kv"))
-      .localCheckpoint(eager = false) // wedge two-sides + closing probe
-    val tri = o.as("w1").join(o.as("w2"),
-        col("w1.u") === col("w2.u") && col("w1.kv") < col("w2.kv"))
-      .select(col("w1.u").as("ta"), col("w1.v").as("tb"),
-        col("w2.v").as("tc"))
-      .join(o.select(col("u").as("tb"), col("v").as("tc")),
-        Seq("tb", "tc"))
-    tri.select(explode(array(col("ta"), col("tb"), col("tc"))).as("part"))
-      .groupBy("part").agg(count(lit(1)).as("n_tri"))
+    * threshold: the co-purchase pair graph is dense, and that density IS
+    * the input. */
+  def qTriangles(s: SparkSession, dir: String): DataFrame =
+    Clusters.triangleStats(coPurchase(orderPartPairs(s, dir), 1),
+        "a_id", "b_id")
+      .filter(col("n_tri") > 0)
+      .select(col("v").as("part"), col("n_tri"))
       .orderBy(desc("n_tri"), asc("part"))
       .limit(30)
-  }
 
   /** q_item_cf — item-item collaborative filtering: for every part, the
     * top-5 most-similar parts by cosine over binary order-incidence
     * vectors (cos² = co²/(nᵢ·nⱼ), kept as an exact integer ppm — cos² is
     * monotone in cosine for non-negative counts, so the ranking is
-    * identical and nothing ever rounds). Co-occurrence counts come from
-    * the basket-bounded per-order pair join; a co ≥ 2 prune keeps the
-    * neighbor lists to genuinely repeated pairings (and bounds the
-    * top-k window partitions). The score arithmetic runs in DECIMAL(38,0)
-    * — 10⁶·co² wraps int64 past co ≈ 3M, and the DuckDB oracle's HUGEINT
-    * would silently diverge from a long-typed engine exactly there. */
+    * identical and nothing ever rounds). Co-occurrence counts and both
+    * parts' order counts nᵢ, nⱼ come from [[coPurchase]], mirrored so each
+    * part ranks its own neighbors; a co ≥ 2 prune keeps the neighbor
+    * lists to genuinely repeated pairings (and bounds the top-k window
+    * partitions). The score arithmetic runs in DECIMAL(38,0) — 10⁶·co²
+    * wraps int64 past co ≈ 3M, and the DuckDB oracle's HUGEINT would
+    * silently diverge from a long-typed engine exactly there. */
   def qItemCf(s: SparkSession, dir: String): DataFrame = {
-    val po = orderPartPairs(s, dir).localCheckpoint(eager = false)
-    val n = po.groupBy("p").agg(count(lit(1)).as("np"))
-    val co = po.as("a").join(po.as("b"),
-        col("a.o") === col("b.o") && col("a.p") =!= col("b.p"))
-      .groupBy(col("a.p").as("i"), col("b.p").as("j"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-    val scored = co
-      .join(n.select(col("p").as("i"), col("np").as("ni")), Seq("i"))
-      .join(n.select(col("p").as("j"), col("np").as("nj")), Seq("j"))
+    val scored = PairCounts.bothWays(coPurchase(orderPartPairs(s, dir), 2))
+      .select(col("a_id").as("i"), col("b_id").as("j"), col("i").as("c"),
+        col("ca").as("ni"), col("cb").as("nj"))
       .withColumn("cos2_ppm",
         expr("(CAST(1000000 AS DECIMAL(38,0)) * c * c) div " +
           "(CAST(ni AS DECIMAL(38,0)) * nj)"))
@@ -712,31 +696,15 @@ object CorpusOps extends QueryFamily {
       .orderBy("part", "rnk")
   }
 
-  /** q_bfs_hops — bounded multi-source BFS over the support-pruned
-    * co-purchase graph: every part reachable within 2 hops of the seed set
-    * (parts < 20), labelled with its minimum hop. THE distributed graph
-    * traversal shape: each round is one frontier equi-join + distinct +
-    * anti-join against the visited set — hash-keyed end to end, no
-    * driver-side frontier, rounds bounded by the hop cap (an unbounded
-    * reachability would switch to the `connectedComponents` loop with its
-    * O(log diameter) convergence). The co ≥ 2 support prune (q_item_cf's
-    * idiom) keeps the traversed graph to repeat relationships — here it
-    * also bounds frontier fan-out. */
-  /** q_random_walks — DeepWalk-style deterministic random-walk corpus
-    * over the co-purchase graph (the q_bfs_hops edge set: co ≥ 2,
-    * directed both ways): 5-step walks from every part < 20, each step
-    * chosen by `md5(seed|walk|step) mod degree` — graph-embedding
-    * training sequences as a pure function of (graph, seed), so the
-    * sample replays identically and the oracle re-derives every step.
-    * See [[graft.operators.Walks.deterministicWalks]]. */
+  /** q_random_walks — DeepWalk-style deterministic random-walk corpus over
+    * the support-pruned co-purchase graph ([[prunedEdgesBothWays]]): 5-step
+    * walks from every part < 20, each step chosen by `md5(seed|walk|step) mod
+    * degree` — graph-embedding training sequences as a pure function of
+    * (graph, seed), so the sample replays identically and the oracle
+    * re-derives every step. See
+    * [[graft.operators.Walks.deterministicWalks]]. */
   def qRandomWalks(s: SparkSession, dir: String): DataFrame = {
-    val po = orderPartPairs(s, dir)
-    val e = po.as("a").join(po.as("b"),
-        col("a.o") === col("b.o") && col("a.p") =!= col("b.p"))
-      .groupBy(col("a.p").as("i"), col("b.p").as("j"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-      .select("i", "j")
+    val e = prunedEdgesBothWays(s, dir)
     val starts = e.select(col("i").as("node")).distinct()
       .filter(col("node") < 20)
     // broadcastFrontier (optimization r15, guide §3.1): starts is the
@@ -749,46 +717,41 @@ object CorpusOps extends QueryFamily {
   }
 
   /** q_communities — synchronous label-propagation community detection
-    * (Raghavan et al. 2007, the deterministic synchronous variant) over
-    * the support-pruned co-purchase graph (the q_bfs_hops edge set:
-    * co ≥ 2, directed both ways). Three rounds; each round every node
-    * adopts the label carried by the PLURALITY of its neighbors (ties →
-    * smallest label); labels initialize to the node id, so the whole
-    * trajectory is a pure function of the graph and the oracle unrolls
-    * the same three rounds (the q_pagerank iterative discipline).
-    * Distinct from connectivity (q_dup_clusters' components) and from
-    * centrality (q_pagerank): plurality voting splits dense regions that
+    * (Raghavan et al. 2007, the deterministic synchronous variant) over the
+    * support-pruned co-purchase graph ([[prunedEdgesBothWays]]). Three
+    * rounds; each round every node adopts the label carried by the PLURALITY
+    * of its neighbors (ties → smallest label); labels initialize to the node
+    * id, so the whole trajectory is a pure function of the graph and the
+    * oracle unrolls the same three rounds (the q_pagerank iterative
+    * discipline). Distinct from connectivity (q_dup_clusters' components) and
+    * from centrality (q_pagerank): plurality voting splits dense regions that
     * connectivity alone cannot — the community primitive behind source
     * clustering and duplicate-family grouping. Per round: one edge×label
     * equi-join, one (node, label) count, one plurality pick via
-    * min(struct(−count, label)) — map-side-partial-friendly, no windows
-    * in the loop, and the label table is node-sized with its per-round
-    * lineage cut by localCheckpoint (the PageRank discipline). */
-  def qCommunities(s: SparkSession, dir: String): DataFrame = {
-    val po = orderPartPairs(s, dir)
-    val e = po.as("a").join(po.as("b"),
-        col("a.o") === col("b.o") && col("a.p") =!= col("b.p"))
-      .groupBy(col("a.p").as("i"), col("b.p").as("j"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-      .select("i", "j")
-    graft.operators.Clusters.labelPropagation(e, "i", "j", rounds = 3)
+    * min(struct(−count, label)) — map-side-partial-friendly, no windows in
+    * the loop, and the label table is node-sized with its per-round lineage
+    * cut by localCheckpoint (the PageRank discipline). */
+  def qCommunities(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Clusters.labelPropagation(prunedEdgesBothWays(s, dir),
+        "i", "j", rounds = 3)
       .groupBy("lbl")
       .agg(count(lit(1)).as("n_members"), min("node").as("min_part"))
       .select(col("lbl").as("community"), col("n_members"), col("min_part"))
       .orderBy(desc("n_members"), asc("community"))
       .limit(30)
-  }
 
+  /** q_bfs_hops — bounded multi-source BFS over the support-pruned
+    * co-purchase graph ([[prunedEdgesBothWays]]): every part reachable
+    * within 2 hops of the seed set (parts < 20), labelled with its minimum
+    * hop. THE distributed graph traversal shape: each round is one
+    * frontier equi-join + distinct + anti-join against the visited set —
+    * hash-keyed end to end, no driver-side frontier, rounds bounded by the
+    * hop cap (an unbounded reachability would switch to the
+    * `connectedComponents` loop with its O(log diameter) convergence). The
+    * co ≥ 2 support prune (q_item_cf's idiom) keeps the traversed graph to
+    * repeat relationships — here it also bounds frontier fan-out. */
   def qBfsHops(s: SparkSession, dir: String): DataFrame = {
-    val po = orderPartPairs(s, dir)
-    val e = po.as("a").join(po.as("b"),
-        col("a.o") === col("b.o") && col("a.p") =!= col("b.p"))
-      .groupBy(col("a.p").as("i"), col("b.p").as("j"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-      .select("i", "j")
-      .localCheckpoint(eager = false) // joined once per hop round
+    val e = prunedEdgesBothWays(s, dir) // joined once per hop round
     // Frontier broadcast hints MEASURED AND REJECTED here (optimization
     // r15, guide §3.1): paired A/B median 1.03x (1.01/1.03/1.05) —
     // neutral. Unlike the 5-step walk loop, only TWO hops join the edge
@@ -808,86 +771,46 @@ object CorpusOps extends QueryFamily {
     h0.unionByName(h1).unionByName(h2).orderBy("part")
   }
 
-  /** The support-pruned co-purchase edge list both directions (i≠j,
-    * co ≥ 2) — the q_bfs_hops/q_communities graph base, factored so the
-    * round-11 graph-analytics additions share ONE definition. */
-  private def prunedEdgesBothWays(s: SparkSession, dir: String): DataFrame = {
-    val po = orderPartPairs(s, dir)
-    po.as("a").join(po.as("b"),
-        col("a.o") === col("b.o") && col("a.p") =!= col("b.p"))
-      .groupBy(col("a.p").as("i"), col("b.p").as("j"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-      .select("i", "j")
-  }
-
   /** q_clustering_coef — per-node local clustering coefficient over the
     * support-pruned co-purchase graph (co ≥ 2, undirected): how tightly
     * each part's neighborhood interlinks — THE node-level cohesion
     * feature behind link prediction and spam-subgraph detection, and the
-    * per-node refinement of q_triangles' census. Same degree-ordered
-    * orientation (Schank & Wagner): each triangle enumerates exactly
-    * once from its unique two-out-edge vertex, Σ out-deg² stays O(m^1.5)
-    * on any skew; the per-node count then explodes the three corners and
-    * re-aggregates — one extra node-keyed shuffle over the census.
+    * per-node refinement of q_triangles' census. Degrees and per-node
+    * triangle counts are [[Clusters.triangleStats]]' (the same
+    * degree-ordered orientation as q_triangles: each triangle enumerates
+    * once, Σ out-deg² = O(m^1.5) on any skew).
     * lcc_ppm = (2·10⁶·tri(v)) div (deg(v)·(deg(v)−1)) in exact integer
-    * arithmetic (DECIMAL(38,0) engine-side, HUGEINT oracle-side); only
-    * deg ≥ 2 nodes emit (lcc undefined below). Unlike q_triangles this
-    * runs on the PRUNED graph: the coefficient of the repeat-purchase
-    * relationship graph is the useful signal, and the prune bounds the
-    * densest wedge fan-out at any scale. */
-  def qClusteringCoef(s: SparkSession, dir: String): DataFrame = {
-    val e2 = prunedEdgesBothWays(s, dir)
-      .filter(col("i") < col("j"))
-      .localCheckpoint(eager = false) // read thrice: degrees + both ends
-    val deg = e2.select(col("i").as("node"))
-      .unionAll(e2.select(col("j").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
-    val lower = struct(col("di"), col("i")) < struct(col("dj"), col("j"))
-    val o = e2
-      .join(deg.select(col("node").as("i"), col("d").as("di")), Seq("i"))
-      .join(deg.select(col("node").as("j"), col("d").as("dj")), Seq("j"))
-      .select(
-        when(lower, col("i")).otherwise(col("j")).as("u"),
-        when(lower, col("j")).otherwise(col("i")).as("v"),
-        when(lower, col("dj")).otherwise(col("di")).as("kd"))
-      .localCheckpoint(eager = false) // wedge two-sides + closing probe
-    val tri = o.as("w1").join(o.as("w2"),
-        col("w1.u") === col("w2.u") &&
-          struct(col("w1.kd"), col("w1.v")) <
-          struct(col("w2.kd"), col("w2.v")))
-      .select(col("w1.u").as("ta"), col("w1.v").as("tb"),
-        col("w2.v").as("tc"))
-      .join(o.select(col("u").as("tb"), col("v").as("tc")), Seq("tb", "tc"))
-    val perNode = tri
-      .select(explode(array(col("ta"), col("tb"), col("tc"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("nt"))
-    deg.join(perNode, Seq("node"), "left")
-      .filter(col("d") >= 2)
-      .select(col("node").as("part"), col("d").as("degree"),
-        coalesce(col("nt"), lit(0L)).as("n_tri"),
-        expr("(CAST(2000000 AS DECIMAL(38,0)) * coalesce(nt, 0)) div " +
-          "(CAST(d AS DECIMAL(38,0)) * (d - 1))").as("lcc_ppm"))
+    * arithmetic (DECIMAL(38,0) engine-side, HUGEINT oracle-side), finer
+    * than triangleStats' own permille; only deg ≥ 2 nodes emit (lcc
+    * undefined below). Unlike q_triangles this runs on the PRUNED graph:
+    * the coefficient of the repeat-purchase relationship graph is the
+    * useful signal, and the prune bounds the densest wedge fan-out at any
+    * scale. */
+  def qClusteringCoef(s: SparkSession, dir: String): DataFrame =
+    Clusters.triangleStats(coPurchase(orderPartPairs(s, dir), 2),
+        "a_id", "b_id")
+      .filter(col("degree") >= 2)
+      .select(col("v").as("part"), col("degree"), col("n_tri"),
+        expr("(CAST(2000000 AS DECIMAL(38,0)) * n_tri) div " +
+          "(CAST(degree AS DECIMAL(38,0)) * (degree - 1))").as("lcc_ppm"))
       .orderBy("part")
-  }
 
-  /** q_kcore — bounded-round k-core peeling (k=3, 4 synchronous rounds)
-    * over the support-pruned co-purchase graph: every node labelled with
-    * the round that removed it (0 = still in after round 4) plus its
-    * initial and final-subgraph degrees — the density-stratification
-    * primitive behind influence cores and graph sampling. Each round is
-    * one degree aggregation over the edge set restricted to survivors
-    * (two node-keyed semi-joins + one groupBy — no windows, no driver
-    * frontier); the survivor table is node-sized and localCheckpoint'd
-    * per round (the q_pagerank iterative discipline). Rounds are FIXED,
-    * not run to convergence — the same bounded-unroll contract as
-    * q_communities/q_pagerank, which is what makes the trajectory a pure
-    * function of the graph and lets the oracle replay it as chained
+  /** q_kcore — bounded-round k-core peeling (k=3, 4 synchronous rounds) over
+    * the support-pruned co-purchase graph ([[prunedEdgesBothWays]]): every
+    * node labelled with the round that removed it (0 = still in after round
+    * 4) plus its initial and final-subgraph degrees — the
+    * density-stratification primitive behind influence cores and graph
+    * sampling. Each round is one degree aggregation over the edge set
+    * restricted to survivors (two node-keyed semi-joins + one groupBy — no
+    * windows, no driver frontier); the survivor table is node-sized and
+    * localCheckpoint'd per round (the q_pagerank iterative discipline).
+    * Rounds are FIXED, not run to convergence — the same bounded-unroll
+    * contract as q_communities/q_pagerank, which is what makes the trajectory
+    * a pure function of the graph and lets the oracle replay it as chained
     * CTEs; an exact core number would switch to the O(peel-depth) loop.
-    * core_deg is the degree inside the round-4 survivor subgraph
-    * (COALESCE 0 for a survivor whose last edges left with round-4
-    * casualties — honest bounded-round semantics, not a convergence
-    * claim). */
+    * core_deg is the degree inside the round-4 survivor subgraph (COALESCE 0
+    * for a survivor whose last edges left with round-4 casualties — honest
+    * bounded-round semantics, not a convergence claim). */
   def qKcore(s: SparkSession, dir: String): DataFrame =
     graft.operators.Clusters.boundedKcore(
         prunedEdgesBothWays(s, dir), "i", "j", k = 3, rounds = 4)
@@ -895,18 +818,18 @@ object CorpusOps extends QueryFamily {
       .orderBy("part")
 
   /** q_assortativity — degree assortativity (Newman 2002) of the
-    * support-pruned co-purchase graph: the Pearson correlation of
-    * endpoint degrees over every directed edge — do hubs co-purchase
-    * with hubs (r > 0) or with the periphery (r < 0)? One edge×degree
-    * double join + ONE global aggregate of exact integer moments
-    * (DECIMAL(38,0) engine / HUGEINT oracle — m·Σxy reaches ~10²⁰ at
-    * sf1, past int64); the only floats are the final mirrored casts of
-    * two identical exact integers and one correctly-rounded IEEE divide,
-    * so the engines cannot drift an ulp (the q_ndcg discipline). Listing
-    * each undirected edge in both directions IS Newman's estimator for
-    * undirected graphs — it symmetrizes the moments, so Σx = Σy and one
-    * moment triple suffices. Map-side-partial everywhere; output is one
-    * row regardless of scale. */
+    * support-pruned co-purchase graph ([[prunedEdgesBothWays]]): the Pearson
+    * correlation of endpoint degrees over every directed edge — do hubs
+    * co-purchase with hubs (r > 0) or with the periphery (r < 0)? One
+    * edge×degree double join + ONE global aggregate of exact integer moments
+    * (DECIMAL(38,0) engine / HUGEINT oracle — m·Σxy reaches ~10²⁰ at sf1,
+    * past int64); the only floats are the final mirrored casts of two
+    * identical exact integers and one correctly-rounded IEEE divide, so the
+    * engines cannot drift an ulp (the q_ndcg discipline). Listing each
+    * undirected edge in both directions IS Newman's estimator for undirected
+    * graphs — it symmetrizes the moments, so Σx = Σy and one moment triple
+    * suffices. Map-side-partial everywhere; output is one row regardless of
+    * scale. */
   def qAssortativity(s: SparkSession, dir: String): DataFrame = {
     val e = prunedEdgesBothWays(s, dir)
     val deg = e.groupBy(col("i").as("node")).agg(count(lit(1)).as("d"))
@@ -945,19 +868,20 @@ object CorpusOps extends QueryFamily {
     * requiring the third side (b,c) frequent too (the full Apriori
     * downward-closure prune) bounds candidates by the frequent-pair
     * count — at 100 TB the infrequent tail (the overwhelming mass) never
-    * reaches the triple join. Everything is basket-bounded equi-joins +
-    * counts; the frequent-pair table is localCheckpoint'd (read three
-    * times: per-order gate twice via self-join, closure prune once). */
+    * reaches the triple join. The frequent pairs come from
+    * [[coPurchase]]; their per-order rows from joining each pair's first
+    * part to its orders and keeping the orders that hold the second, so
+    * no infrequent pair is ever formed. Everything is equi-joins +
+    * counts; the frequent-pair table is materialized once (read twice:
+    * the per-order rows and the closure prune). */
   def qItemsets3(s: SparkSession, dir: String): DataFrame = {
     val minSup = 2
     val po = orderPartPairs(s, dir)
-    val pairs = po.as("a").join(po.as("b"),
-        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .select(col("a.o").as("o"), col("a.p").as("i"), col("b.p").as("j"))
-    val f2 = pairs.groupBy("i", "j").agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minSup).select("i", "j")
-      .localCheckpoint(eager = false)
-    val op2 = pairs.join(f2, Seq("i", "j"))
+    val f2 = coPurchase(po, minSup)
+      .select(col("a_id").as("i"), col("b_id").as("j"))
+      .localCheckpoint()
+    val op2 = po.select(col("o"), col("p").as("i")).join(f2, "i")
+      .join(po.select(col("o"), col("p").as("j")), Seq("o", "j"))
       .localCheckpoint(eager = false) // self-joined below
     op2.as("x").join(op2.as("y"),
         col("x.o") === col("y.o") && col("x.i") === col("y.i") &&
@@ -971,23 +895,21 @@ object CorpusOps extends QueryFamily {
   }
 
   /** q_link_predict — link-prediction candidate scoring over the
-    * support-pruned co-purchase graph: for every 2-hop pair that is NOT
-    * an edge, the three classic neighborhood scores — common-neighbor
-    * count, Jaccard (exact integer ppm), Adamic–Adar (Σ 1/ln(deg(z))
-    * over shared neighbors z, in micro) — the candidate-generation step
-    * of graph-completion / recommendation ("parts bought with both of
-    * these but never together"). Candidates come from the wedge join
-    * (center z × its neighbor pairs), so generation is Σ deg² on the
-    * PRUNED graph — support-bounded, never all-pairs; the non-edge
-    * filter is one anti-join AFTER aggregation (pair-sized, not
-    * wedge-sized). The AA term is rounded ONCE per center (the keyness
-    * ln idiom, shared verbatim with the oracle) and summed as exact
-    * integers, so no float accumulates; a wedge center has deg ≥ 2 by
-    * construction, keeping ln positive. Top-50 by (cn, aa, u, w) — a
-    * total order. */
+    * support-pruned co-purchase graph ([[prunedEdgesBothWays]]): for every
+    * 2-hop pair that is NOT an edge, the three classic neighborhood scores —
+    * common-neighbor count, Jaccard (exact integer ppm), Adamic–Adar (Σ
+    * 1/ln(deg(z)) over shared neighbors z, in micro) — the
+    * candidate-generation step of graph-completion / recommendation ("parts
+    * bought with both of these but never together"). Candidates come from the
+    * wedge join (center z × its neighbor pairs), so generation is Σ deg² on
+    * the PRUNED graph — support-bounded, never all-pairs; the non-edge filter
+    * is one anti-join AFTER aggregation (pair-sized, not wedge-sized). The AA
+    * term is rounded ONCE per center (the keyness ln idiom, shared verbatim
+    * with the oracle) and summed as exact integers, so no float accumulates;
+    * a wedge center has deg ≥ 2 by construction, keeping ln positive. Top-50
+    * by (cn, aa, u, w) — a total order. */
   def qLinkPredict(s: SparkSession, dir: String): DataFrame = {
-    val e = prunedEdgesBothWays(s, dir)
-      .localCheckpoint(eager = false) // wedge two-sides + non-edge probe
+    val e = prunedEdgesBothWays(s, dir) // wedge two-sides + non-edge probe
     val deg = e.groupBy(col("i").as("node")).agg(count(lit(1)).as("d"))
       .localCheckpoint(eager = false) // z-terms + both endpoint joins
     val zt = deg.filter(col("d") >= 2).select(col("node").as("z"),

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Boilerplate, Bpe, Dedup, LmScore, Profile, Vocab}
+import graft.operators.{Boilerplate, Bpe, Dedup, LmScore, PairCounts,
+  Profile, Vocab}
 import graft.functions.{TextFunctions => T}
 
 /** Corpus-curation operators, round 4: tokenizer-training pair statistics
@@ -174,11 +175,11 @@ object CurateOps extends QueryFamily {
 
   /** q_ppjoin — exact set-similarity self-join: documents as DISTINCT
     * word-bigram sets, the pairs with Jaccard ≥ 0.8 as integers
-    * (da, db, inter, jacc_ppm). It is the shared shingle-pair operator
+    * (da, db, inter, jacc_ppm). It is the shared pair-count operator
     * behind `Dedup.ngramJaccardPairs` (n = 2, unguarded, Jaccard ≥ 0.8):
     * the one-task kernel up to the cap, above it the PPJoin/AllPairs
     * prefix join with its length and positional filters
-    * (`Dedup.pairCountsPrefix`). The tail here is integer:
+    * (`PairCounts.pairCountsPrefix`). The tail here is integer:
     * jacc_ppm = (10⁶·i) div (ca + cb − i) ≥ 800000, which is 5i ≥ 4u;
     * such a pair also has i/u ≥ 0.8 in double (rounding is monotone), so
     * the operator keeps every row this filter keeps. Bigrams compare as
@@ -187,7 +188,7 @@ object CurateOps extends QueryFamily {
     * match proves the blocking loses nothing. */
   def qPpjoin(s: SparkSession, dir: String): DataFrame =
     Dedup.shinglePairs(Tables.documents(s, dir), "text", "doc_id", 2,
-        Long.MaxValue, None, Dedup.PairTail.Jaccard(0.8, counts = true))
+        Long.MaxValue, None, PairCounts.PairTail.Jaccard(0.8, counts = true))
       .select(col("a_id").as("da"), col("b_id").as("db"),
         col("i").as("inter"),
         expr("(1000000 * i) div (ca + cb - i)").as("jacc_ppm"))

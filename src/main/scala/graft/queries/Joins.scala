@@ -202,12 +202,13 @@ object Joins extends QueryFamily {
 
   /** q_basket_pairs — market-basket association rules over order baskets:
     * part pairs co-purchased in ≥ 2 orders with support, confidence and
-    * lift. Apriori-pruned BEFORE pairing (see
-    * [[graft.operators.Basket]]); integral-milli scores ⇒ full-oracle. */
+    * lift. Apriori-pruned BEFORE pairing, pairs from the shared pair-count
+    * operator (see [[graft.operators.Basket]]); integral-milli scores ⇒
+    * full-oracle. */
   def qBasketPairs(s: SparkSession, dir: String): DataFrame =
     graft.operators.Basket.frequentPairs(
         Tables.lineitem(s, dir).select("l_orderkey", "l_partkey"),
-        "l_orderkey", "l_partkey", minItemSup = 2L, minPairSup = 2L)
+        "l_orderkey", "l_partkey", minPairSup = 2L)
       .orderBy("a", "b")
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -17,8 +17,4 @@ package object queries {
   /** Decimal-exact sum of a product of two 2-dp columns. */
   def dsumProd(a: Column, b: Column): Column =
     sum(a.cast("decimal(18,2)") * b.cast("decimal(18,2)")).cast("double")
-
-  /** Decimal-exact average surfaced as double (sum/count, no float drift). */
-  def davg(c: Column): Column =
-    (sum(c.cast("decimal(18,2)")) / count(c)).cast("double")
 }

@@ -19,12 +19,24 @@ class CorpusOpsSpec extends SparkSpec {
     val b = Seq((1L, "A"), (1L, "A"), (1L, "B"), (1L, "C"),
       (2L, "A"), (2L, "B"), (3L, "A"), (3L, "B"),
       (4L, "C"), (4L, "D"), (5L, "A")).toDF("ord", "item")
-    val got = Basket.frequentPairs(b, "ord", "item", 2L, 2L)
+    val got = Basket.frequentPairs(b, "ord", "item", 2L)
       .as[(String, String, Long, Long, Long, Long, Long)].collect()
     assert(got.toSeq === Seq(("A", "B", 3L, 4L, 3L, 750L, 1250L)))
     intercept[IllegalArgumentException] {
-      Basket.frequentPairs(b, "ord", "item", 3L, 2L) // pairSup < itemSup
+      Basket.frequentPairs(b, "ord", "item", 0L) // every pair would count
     }
+  }
+
+  test("a repeated pruned co-purchase edge build runs 4 jobs") {
+    // The keys' checkpoint (AQE runs the distinct's map stage at the
+    // call), the one-task size check, the eager checkpoint of the kernel's
+    // mirrored edges, then the collect. The self-join formulation ran 4
+    // jobs too.
+    val q = CorpusOps.prunedEdgesBothWays(spark, sf).count()
+    val jobs = jobsDuring {
+      assert(CorpusOps.prunedEdgesBothWays(spark, sf).collect().length === q)
+    }
+    assert(jobs === 4, s"$jobs jobs")
   }
 
   test("rrfFuse: exact integer contributions, cross-list boost, doc_id tiebreak") {

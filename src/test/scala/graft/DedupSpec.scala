@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, PairCounts}
 import graft.functions.TextFunctions
 
 /** Dedup operator properties (SURVEY.md §5.2 item 3). */
@@ -220,12 +220,12 @@ class DedupSpec extends SparkSpec {
     // i ≤ min(ca, cb), so the kernel emits a pair iff the tail keeps it;
     // some counted pairs pass a containment bound but not the Jaccard
     // tail, and are not emitted.
-    import Dedup.PairTail
+    import PairCounts.PairTail
     val docs = graft.Tables.documents(spark, sf)
     assert(docs.select("doc_id").distinct().count() === docs.count())
     val keys = Dedup.shingleKeys(docs, "text", "doc_id", 3)
     def counts(tail: PairTail) =
-      Dedup.pairCountsOneTask(keys, Long.MaxValue, Some(0.01), tail)
+      PairCounts.pairCountsOneTask(keys, Long.MaxValue, Some(0.01), tail)
     val all = counts(PairTail.Jaccard(Double.NegativeInfinity))
     val tail = PairTail.Jaccard(0.05)
     val kept = tail(all).count()

@@ -372,16 +372,24 @@ class PlanSpec extends SparkSpec {
   }
 
   test("triangle census keeps the degree-ordered orientation: keyed joins only") {
-    // q_triangles is the suite's most expensive query; its safety claim is
-    // the orientation — every join is an equi-join (wedge join keyed on the
-    // oriented apex u; closing join on the (tb, tc) pair key), never a
-    // product, and the corpus never funnels through one partition (the
-    // final limit-30 TakeOrdered is the only single-task stage).
+    // q_triangles' safety claim is the orientation — every join is an
+    // equi-join (wedge join keyed on the oriented apex; closing join on the
+    // (d1, d2) pair key), never a product. Below the one-task cap its
+    // co-purchase pair count runs in one task by design and sits behind
+    // the census' edge checkpoint, so the above-cap path, the pair-count
+    // self-join over the same co-purchase keys, is planned directly. No
+    // plan has a SinglePartition exchange: above the cap nothing funnels
+    // through one partition.
+    import graft.operators.PairCounts
+    val coPurchaseKeys = PairCounts.oneKeyPerRow(Tables.lineitem(spark, sf)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct(), "p", "o")
     for (df <- Seq(graft.queries.CorpusOps.qTriangles(spark, sf),
         graft.operators.Clusters.triangleStats(
           Tables.lineitem(spark, sf)
             .select(col("l_orderkey").as("a"), col("l_partkey").as("b")),
-          "a", "b"))) {
+          "a", "b"),
+        PairCounts.pairCountsJoin(coPurchaseKeys, Long.MaxValue, None))) {
       val p = planString(df)
       assert(!p.contains("CartesianProduct"), p.take(2000))
       assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
@@ -392,18 +400,18 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ppjoin candidate join carries the length + positional filters, no product") {
-    // The prefix join (Dedup.pairCountsPrefix: q_ppjoin's path above the
-    // one-task cap) rests on two provably-lossless prunes riding the
+    // The prefix join (PairCounts.pairCountsPrefix: q_ppjoin's path above
+    // the one-task cap) rests on two provably-lossless prunes riding the
     // prefix-key equi-join: the AllPairs LENGTH filter (ceil(m * lo) <= m,
     // both ways) and the PPJoin POSITIONAL filter (least(ma - ra, mb - rb)
     // + 1 >= the required overlap). Dropping either leaves every
     // correctness check green (the filters only prune candidates the exact
     // verify rejects anyway) and returns the join to its unpruned cost —
     // so the plan itself is the only place the win is observable. Pin it.
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, PairCounts}
     val keys = Dedup.shingleKeys(Tables.documents(spark, sf), "text",
       "doc_id", 2)
-    val p = planString(Dedup.pairCountsPrefix(keys, 0.8))
+    val p = planString(PairCounts.pairCountsPrefix(keys, 0.8))
     assert(!p.contains("CartesianProduct"), p.take(2000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
     val cond = p.linesIterator.filter(_.contains("least(")).mkString("\n")
@@ -573,11 +581,11 @@ class PlanSpec extends SparkSpec {
     // map-side-partial intersection counting. A corpus this small counts
     // its pairs in one task, so the distributed machinery — the path every
     // corpus above the one-task cap takes — is planned directly.
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, PairCounts}
     val keys = Dedup.shingleKeys(graft.Tables.documents(spark, sf), "text",
       "doc_id", 3)
-    val scale = planString(Dedup.PairTail.Containment(0.6)(
-      Dedup.pairCountsJoin(keys, Long.MaxValue, Some(0.01))))
+    val scale = planString(PairCounts.PairTail.Containment(0.6)(
+      PairCounts.pairCountsJoin(keys, Long.MaxValue, Some(0.01))))
     val p = planString(graft.queries.LlmOps.qContainment(spark, sf))
     for (plan <- Seq(p, scale))
       assert(!plan.contains("CartesianProduct") &&

@@ -372,7 +372,7 @@ class PropertySpec extends SparkSpec {
     // double casts round) with i ≤ max(ca, cb), plus i > max(ca, cb) with
     // a non-zero Jaccard denominator (positive or negative), plus pairs
     // whose value lands exactly on a threshold.
-    import graft.operators.Dedup.PairTail
+    import graft.operators.PairCounts.PairTail
     val rnd = freshRandom(11)
     def count(): Long = rnd.nextInt(3) match {
       case 0 => 1L + rnd.nextInt(8)
@@ -429,11 +429,13 @@ class PropertySpec extends SparkSpec {
     // whose duplicate ids make zero Jaccard denominators. The raw
     // counts compare with the kernel unbounded (a −∞ Jaccard tail emits
     // every counted pair); the public operators then run it at thresholds
-    // 0, 0.2, 0.3, 1, 1.5 and NaN. The prefix join (the unguarded Jaccard
+    // 0, 0.2, 0.3, 1, 1.5 and NaN, and the support tail (the co-purchase
+    // queries' tail) at supports 1, 2 and 3, where duplicate ids make
+    // `i` exceed an id's own count. The prefix join (the unguarded Jaccard
     // path above the cap) runs at 0.2, 0.3, 0.5, 0.8 and 1.0, against the
     // same tail over the unguarded join.
-    import graft.operators.Dedup
-    import graft.operators.Dedup.PairTail
+    import graft.operators.{Dedup, PairCounts}
+    import graft.operators.PairCounts.PairTail
     import org.apache.spark.sql.DataFrame
     val rnd = freshRandom(9)
     val vocab = IndexedSeq("a", "b", "c", "d", "e", "é", "日本", "straße",
@@ -469,15 +471,15 @@ class PropertySpec extends SparkSpec {
     // a zero Jaccard denominator (duplicate ids) throws under ANSI: then
     // both paths must throw
     def outcome(df: DataFrame) = scala.util.Try(rows(df)).toOption
-    var (guardBit, boundBit, throwBit, prefixBit) =
-      (false, false, false, false)
+    var (guardBit, boundBit, throwBit, prefixBit, aboveBit) =
+      (false, false, false, false, false)
     for ((docs, caseIdx) <- corpora.zipWithIndex; n <- 1 to 3) {
       val keys = Dedup.shingleKeys(docs, "text", "doc_id", n)
       for ((maxDf, frac) <- guards) {
         val at = s"corpus $caseIdx n=$n maxShingleDf=$maxDf fraction=$frac"
-        val one = Dedup.pairCountsOneTask(keys, maxDf, frac,
+        val one = PairCounts.pairCountsOneTask(keys, maxDf, frac,
           PairTail.Jaccard(Double.NegativeInfinity))
-        val join = Dedup.pairCountsJoin(keys, maxDf, frac)
+        val join = PairCounts.pairCountsJoin(keys, maxDf, frac)
         val counts = rows(join.select("a_id", "b_id", "i", "ca", "cb"))
         assert(rows(one) === counts, at)
         assert(outcome(PairTail.Jaccard(0.0)(one)) ===
@@ -485,21 +487,21 @@ class PropertySpec extends SparkSpec {
         assert(rows(PairTail.Containment(0.3)(one)) ===
           rows(PairTail.Containment(0.3)(join)), at)
         if (frac.nonEmpty) guardBit ||= counts !=
-          rows(Dedup.pairCountsJoin(keys, Long.MaxValue, None)
+          rows(PairCounts.pairCountsJoin(keys, Long.MaxValue, None)
             .select("a_id", "b_id", "i", "ca", "cb"))
       }
       // the public operator (dispatching to one task here) agrees too
       assert(outcome(Dedup.ngramJaccardPairs(docs, "text", "doc_id", n, 0.2,
           maxShingleDfFraction = Some(0.25))) ===
-        outcome(PairTail.Jaccard(0.2)(Dedup.pairCountsJoin(keys,
+        outcome(PairTail.Jaccard(0.2)(PairCounts.pairCountsJoin(keys,
           Long.MaxValue, Some(0.25)))), s"corpus $caseIdx n=$n")
       // so do both public operators (whose one-task kernel emits only the
       // pairs the tail keeps or decides on) against the tails over the
       // join, throws included; unguarded, so duplicate ids keep the keys
       // that make zero Jaccard denominators
-      val join = Dedup.pairCountsJoin(keys, Long.MaxValue, None)
-      val unbounded = rows(Dedup.pairCountsOneTask(keys, Long.MaxValue, None,
-        PairTail.Jaccard(Double.NegativeInfinity))).toSet
+      val join = PairCounts.pairCountsJoin(keys, Long.MaxValue, None)
+      val unbounded = rows(PairCounts.pairCountsOneTask(keys, Long.MaxValue,
+        None, PairTail.Jaccard(Double.NegativeInfinity))).toSet
       for (t <- Seq(0.0, 0.2, 0.3, 1.0, 1.5, Double.NaN)) {
         val at = s"corpus $caseIdx n=$n threshold=$t"
         val jaccardJoin = outcome(PairTail.Jaccard(t)(join))
@@ -509,15 +511,26 @@ class PropertySpec extends SparkSpec {
           === outcome(PairTail.Containment(t)(join)), at)
         throwBit ||= jaccardJoin.isEmpty
         for (tail <- Seq(PairTail.Jaccard(t), PairTail.Containment(t))) {
-          val bounded = rows(Dedup.pairCountsOneTask(keys, Long.MaxValue,
+          val bounded = rows(PairCounts.pairCountsOneTask(keys, Long.MaxValue,
             None, tail)).toSet
           assert(bounded.subsetOf(unbounded), s"$at $tail")
           boundBit ||= bounded.size < unbounded.size
         }
       }
+      for (support <- 1L to 3L) {
+        val at = s"corpus $caseIdx n=$n support=$support"
+        val tail = PairTail.Support(support)
+        val bounded = PairCounts.pairCountsOneTask(keys, Long.MaxValue, None,
+          tail)
+        assert(rows(bounded).toSet.subsetOf(unbounded), at)
+        assert(rows(tail(bounded)) === rows(tail(join)), at)
+        assert(rows(PairCounts(keys, tail)) === rows(tail(join)), at)
+        aboveBit ||= rows(tail(join)).exists(r =>
+          math.min(r.getLong(3), r.getLong(4)) < support)
+      }
       val coShingled = join.count()
       for (t <- Seq(0.2, 0.3, 0.5, 0.8, 1.0)) {
-        val prefix = Dedup.pairCountsPrefix(keys, t)
+        val prefix = PairCounts.pairCountsPrefix(keys, t)
         assert(outcome(PairTail.Jaccard(t)(prefix)) ===
           outcome(PairTail.Jaccard(t)(join)),
           s"corpus $caseIdx n=$n prefix t=$t")
@@ -528,6 +541,71 @@ class PropertySpec extends SparkSpec {
     assert(boundBit, "the pair bound never dropped a pair")
     assert(throwBit, "no zero Jaccard denominator was thrown on")
     assert(prefixBit, "the prefix join never dropped a co-shingled pair")
+    assert(aboveBit, "no kept pair had a support above an id's own count")
+  }
+
+  test("PROPERTY co-purchase pairs: the operator returns the self-join's rows, both ways (random baskets)") {
+    // Seeded random distinct (order, part) tables, long and string parts
+    // (string parts whose UTF-8 and UTF-16 orders differ), int and long
+    // order keys, a few null parts, baskets of 1 to 6 parts over a small
+    // catalogue so that pairs reach support 3. For supports 1, 2 and 3 the
+    // operator's pairs, its self-join path's, and their mirror (the
+    // queries' both-ways edge lists) equal the hand formula every
+    // co-purchase query used to write out: po ⋈ po on o, grouped by
+    // (part, part) and counted, with both parts' order counts.
+    import graft.operators.PairCounts
+    import graft.operators.PairCounts.PairTail
+    import graft.queries.CorpusOps
+    import org.apache.spark.sql.{Column, DataFrame}
+    val rnd = freshRandom(12)
+    val stringParts = IndexedSeq("a", "b", "é", "\uFF21", "\uD834\uDD1E", "日")
+    def baskets(strings: Boolean, intOrders: Boolean): DataFrame = {
+      val parts = 6 + rnd.nextInt(10)
+      val rows = (0 until 20 + rnd.nextInt(30)).flatMap { o =>
+        Seq.fill(1 + rnd.nextInt(6)) {
+          if (rnd.nextInt(25) == 0) None else Some(rnd.nextInt(parts))
+        }.distinct.map(p => (o, p))
+      }
+      val po = if (strings) rows.map { case (o, p) =>
+        (o.toLong, p.map(i => stringParts(i % stringParts.size) +
+          (i / stringParts.size)))
+      }.toDF("o", "p")
+      else rows.map { case (o, p) => (o.toLong, p.map(_.toLong)) }
+        .toDF("o", "p")
+      if (intOrders) po.withColumn("o", col("o").cast("int")) else po
+    }
+    def reference(po: DataFrame, support: Long,
+        pair: (Column, Column) => Column): DataFrame = {
+      val n = po.groupBy("p").agg(count(lit(1)).as("c"))
+      po.as("a").join(po.as("b"),
+          col("a.o") === col("b.o") && pair(col("a.p"), col("b.p")))
+        .groupBy(col("a.p").as("a_id"), col("b.p").as("b_id"))
+        .agg(count(lit(1)).as("i"))
+        .filter(col("i") >= support)
+        .join(n.select(col("p").as("a_id"), col("c").as("ca")), "a_id")
+        .join(n.select(col("p").as("b_id"), col("c").as("cb")), "b_id")
+        .select("a_id", "b_id", "i", "ca", "cb")
+    }
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    var supportBit = false
+    for (((strings, intOrders), caseIdx) <- Seq((false, false),
+        (false, true), (false, false), (true, false), (true, true),
+        (true, false)).zipWithIndex) {
+      val po = baskets(strings, intOrders)
+      val keys = PairCounts.oneKeyPerRow(po, "p", "o")
+      for (support <- 1L to 3L) {
+        val at = s"table $caseIdx support=$support"
+        val pairs = CorpusOps.coPurchase(po, support)
+        val want = rows(reference(po, support, _ < _))
+        assert(rows(pairs) === want, at)
+        assert(rows(PairTail.Support(support)(
+          PairCounts.pairCountsJoin(keys, Long.MaxValue, None))) === want, at)
+        assert(rows(PairCounts.bothWays(pairs)) ===
+          rows(reference(po, support, _ =!= _)), at)
+        supportBit ||= support == 3 && want.nonEmpty
+      }
+    }
+    assert(supportBit, "no pair reached support 3")
   }
 
   test("PROPERTY transitions: the one-task kernel returns the window plan's rows (random event logs)") {

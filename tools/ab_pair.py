@@ -13,11 +13,13 @@ Usage:
       --q q1[,q2...] --pairs 3 [--sf /root/testdata/sf0.1] [--xmx 8g]
 
 A = before snapshot, B = after snapshot (each a compiled classes dir,
-e.g. cp -r target/scala-2.13/classes /tmp/classes_before). Each run is
-`graft.Bench <queries>` in its own JVM (untimed warm-up + min-of-two, the
-identical in-JVM protocol the suite uses). Pair order alternates
-(A,B / B,A / A,B ...) so a monotone host trend cannot masquerade as a win.
-Prints per-pair B/A ratios per query and the median ratio.
+e.g. cp -r target/scala-2.13/classes ../classes_before). Each query is
+timed alone: every pair runs `graft.Bench <query>` once per side, each in
+its own JVM (untimed warm-up + min-of-two, the identical in-JVM protocol
+the suite uses), so no query's figure depends on the query timed before it
+in the same JVM. Pair order alternates (A,B / B,A / A,B ...) so a monotone
+host trend cannot masquerade as a win. Prints per-pair B/A ratios per
+query and the median ratio.
 """
 import argparse
 import json
@@ -96,14 +98,15 @@ def main():
     names = args.q.split(",")
     ratios = {q: [] for q in names}
     times = {q: {"a": [], "b": []} for q in names}
+    print(f"each query timed alone: one JVM per query and side, "
+          f"{args.pairs} pairs, A/B order alternating per pair", flush=True)
     for p in range(args.pairs):
         order = [("a", args.a), ("b", args.b)]
         if p % 2 == 1:
             order.reverse()
-        got = {}
-        for tag, classes in order:
-            got[tag] = run_once(classes, args.q, args.sf, args.xmx)
         for q in names:
+            got = {tag: run_once(classes, q, args.sf, args.xmx)
+                   for tag, classes in order}
             ta, tb = got["a"].get(q), got["b"].get(q)
             if ta is None or tb is None:
                 print(f"pair {p}: {q} missing (a={ta}, b={tb})")
