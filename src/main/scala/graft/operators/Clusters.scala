@@ -4,7 +4,7 @@ import java.math.BigInteger
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -44,26 +44,21 @@ object Clusters {
     * magnitude smaller than the corpus itself, and the iterative loop costs
     * O(log diameter) rounds of full-graph shuffles plus per-round driver
     * scheduling REGARDLESS of size. Up to [[OneTask.MaxRows]] edges the exact
-    * union-find runs inside ONE task via mapPartitions over a coalesced
-    * edge list — one job, no rounds. Above it, the label-propagation loop
-    * is the scale path. Both produce identical (id, min-reachable-id)
-    * output. */
+    * union-find runs inside ONE task ([[componentsOneTask]]) — one job, no
+    * rounds. Above it, the label-propagation loop is the scale path. Both
+    * produce identical (id, min-reachable-id) output. */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25): DataFrame = {
     val e = edges
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .localCheckpoint(eager = false)
-    if (OneTask.fits(e)) componentsOneTask(e) else componentsRounds(e, maxIter)
+    componentsOneTask(e).getOrElse(componentsRounds(e, maxIter))
   }
 
   /** Exact union-find (path halving + union-by-min) over the whole edge
-    * list in one task. Not a driver collect: the work runs inside an
-    * executor task and returns a distributed result — the same shape as any
-    * single-partition aggregate, reserved for inputs that fit one task. */
-  private def componentsOneTask(e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    e.as[(Long, Long)].coalesce(1).mapPartitions { it =>
+    * list in one task ([[OneTask.run]]), or None above the cap. */
+  private def componentsOneTask(e: DataFrame): Option[DataFrame] = {
+    val schema = new StructType().add("id", LongType).add("comp", LongType)
+    OneTask.run(e, schema) { it =>
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x0: Long): Long = {
         var x = x0
@@ -74,15 +69,15 @@ object Clusters {
         }
         x
       }
-      it.foreach { case (a, b) =>
+      it.map(r => (r.getLong(0), r.getLong(1))).foreach { case (a, b) =>
         parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) { // union by min id — the min IS the component label
           if (ra < rb) parent(rb) = ra else parent(ra) = rb
         }
       }
-      parent.keysIterator.map(v => (v, find(v))).toArray.iterator
-    }.toDF("id", "comp").repartition(col("id"))
+      parent.keysIterator.map(v => Row(v, find(v))).toArray.iterator
+    }.map(_.repartition(col("id")))
   }
 
   /** Iterative min-label propagation with path compression — the
@@ -93,10 +88,11 @@ object Clusters {
     * round result is checkpointed ONCE with its change flag, so the
     * convergence probe reads cached blocks instead of re-running the
     * compression join (and the next round re-running it again — Spark has
-    * no plan-level CSE). `e` is (src: bigint, dst: bigint). */
+    * no plan-level CSE). `e` is (src: bigint, dst: bigint), read once. */
   private[graft] def componentsRounds(e: DataFrame, maxIter: Int): DataFrame = {
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    val sym = e.select(explode(array(struct("src", "dst"),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select("e.*").distinct()
       .localCheckpoint(eager = false) // joined every round — materialize once
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
@@ -243,7 +239,7 @@ object Clusters {
     * transition or co-occurrence graph is vocabulary-sized, and the round
     * loop pays a few Spark jobs per round whatever the size. Up to
     * [[OneTask.MaxRows]] edges all rounds run inside ONE task
-    * ([[pageRankOneTask]]) — a fixed job count whatever `iterations` is.
+    * ([[pageRankOneTask]]) — one job whatever `iterations` is.
     * Above the cap the distributed round loop ([[pageRankRounds]]) is the
     * scale path: per round ONE edge⋈rank hash join on src + ONE dst-keyed
     * sum with map-side combine — hot destination nodes are hot COUNTERS,
@@ -260,21 +256,21 @@ object Clusters {
       s"dampingMilli must be in [0, 1000], got $dampingMilli")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("w"))
-      .localCheckpoint(eager = false) // read by the size check and the rank pass
     val nodeType = e.schema("src").dataType
-    val oneTask = nodeType == e.schema("dst").dataType &&
+    val eligible = nodeType == e.schema("dst").dataType &&
       OneTask.KeyTypes(nodeType) &&
-      e.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean &&
-      OneTask.fits(e)
-    if (oneTask) pageRankOneTask(e, iterations, dampingMilli)
-    else pageRankRounds(e, iterations, dampingMilli)
+      e.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+    (if (eligible) pageRankOneTask(e, iterations, dampingMilli) else None)
+      .getOrElse(pageRankRounds(e, iterations, dampingMilli))
   }
 
   /** The distributed round loop of [[pageRankWeighted]] — the any-size
-    * scale path. `e` is (src, dst, w: bigint); `localCheckpoint` truncates
-    * the growing lineage each round exactly like [[connectedComponents]]. */
-  private[graft] def pageRankRounds(e: DataFrame, iterations: Int,
+    * scale path. `e0` is (src, dst, w: bigint), read three times, so it is
+    * materialized once; `localCheckpoint` truncates the growing lineage
+    * each round exactly like [[connectedComponents]]. */
+  private[graft] def pageRankRounds(e0: DataFrame, iterations: Int,
       dampingMilli: Int): DataFrame = {
+    val e = e0.localCheckpoint()
     val outW = e.groupBy("src").agg(sum("w").as("ow"))
     val ew = e.join(outW, "src").localCheckpoint(eager = false)
     val nodes = e.select(col("src").as("node"))
@@ -314,14 +310,14 @@ object Clusters {
     *  - `rank = base + (dampingMilli·Σc) div 1000`; a null node, or one with
     *    no in-edges, gets `base`;
     *  - as under ANSI, a zero `ow` or a long overflow in a sum throws.
-    * Duplicate edges each count. */
+    * Duplicate edges each count. None above the cap ([[OneTask.run]]). */
   private[graft] def pageRankOneTask(e: DataFrame, iterations: Int,
-      dampingMilli: Int): DataFrame = {
+      dampingMilli: Int): Option[DataFrame] = {
     val base = 1000000L - dampingMilli * 1000L
     val schema = new StructType()
       .add("node", e.schema("src").dataType)
       .add("rank_micro", LongType)
-    e.coalesce(1).mapPartitions { rows =>
+    OneTask.run(e, schema) { rows =>
       val index = mutable.HashMap.empty[Any, Int] // non-null node → slot
       var nullNode = false
       def slot(v: Any): Int =
@@ -351,7 +347,7 @@ object Clusters {
       }
       val out = index.iterator.map { case (v, i) => Row(v, rank(i)) }
       if (nullNode) out ++ Iterator(Row(null, base)) else out
-    }(Encoders.row(schema))
+    }
   }
 
   /** `(a·b) div c` with an exact 128-bit product, truncated toward zero,

@@ -167,12 +167,10 @@ object Dedup {
     * texts included; a seeded property spec compares them). Collated text
     * compares and hashes by its collation, so it keeps the formula.
     *
-    * Materialized once (lazily, by the size check's job, which runs in
-    * parallel), so both pair-counting paths read it without shingling
-    * again. localCheckpoint trades fault tolerance for speed (blocks die
-    * with their executor) — the right local/test choice; a long-running
-    * production job would use reliable checkpoint() or replicated persist
-    * here. */
+    * Not materialized: up to the one-task cap the pair-count kernel's
+    * task shingles as it reads (the narrow scan and shingling run inside
+    * that task), and above it [[PairCounts]] materializes its input once
+    * for the distributed paths. */
   private[graft] def shingleKeys(df: DataFrame, textCol: String,
       idCol: String, n: Int): DataFrame = {
     val text = col(textCol)
@@ -181,7 +179,6 @@ object Dedup {
     else transform(array_distinct(TextFunctions.wordShingles(text, n)),
       s => xxhash64(s))
     df.select(col(idCol).as("doc"), gs.as("gs"))
-      .localCheckpoint(eager = false)
   }
 
   /** Near-duplicate pairs via banded MinHash LSH, composed from codegen'd

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType, LongType}
 import graft.expressions.{ConfluentAvroDecode, ConfluentAvroEncode, SchemaRegistryStub}
 
 /** The reference's output data path, rebuilt Spark-first: envelope
@@ -34,7 +33,16 @@ object EnvelopeSink {
   def schemaId: Int = SchemaRegistryStub.register(
     SchemaRegistryStub.subjectFor(schemaJson), schemaJson)
 
-  private val metricsType = MapType(StringType, LongType)
+  /** The snapshot body `props` decoded once, as VARIANT, which writes it
+    * as Go re-marshals the decoded map (keys sorted, `4.0` as `4`). A null
+    * body or one that is not a parseable JSON object becomes `{}`, as a
+    * failed fetch or decode does in the reference. Divergences from Go
+    * (`1e21` → `1.0E21`, repeated keys): SURVEY.md A3, A5. */
+  private def metrics: Column = {
+    val body = col("props")
+    coalesce(when(body.rlike("^[ \t\n\r]*\\{"), try_parse_json(body)),
+      parse_json(lit("{}")))
+  }
 
   /** Envelope projection over the events stream: constant + derived context
     * columns and the ns-precision timestamp, exactly `transformNone`'s
@@ -57,14 +65,13 @@ object EnvelopeSink {
     to_json(struct(
       col("SlaveID"), col("Hostname"), col("Port"), col("Namespace"),
       col("Timestamp"),
-      from_json(col("props"), metricsType).as("Metrics")))
+      metrics.as("Metrics")))
 
   /** Avro transform: payload stays opaque JSON bytes inside the record
     * (/root/reference/syscol/metrics_reporter.go:151-165), then
     * Confluent-framed (magic 0x00 + BE schema id + body). */
   def toAvroValue: Column = {
-    val payload = to_json(from_json(col("props"), metricsType))
-      .cast("binary")
+    val payload = to_json(metrics).cast("binary")
     val env = struct(
       col("SlaveID"), col("Hostname"), col("Port"), col("Namespace"),
       col("Timestamp"), payload.as("Metrics"))
@@ -118,18 +125,21 @@ object EnvelopeSink {
     * trading per-key ordering for uniform random placement. */
   def kafkaRows(events: DataFrame, transform: String,
       keyed: Boolean = true): DataFrame = {
-    val value = transform match {
-      case "none" => toJsonValue.cast("binary")
-      case "avro" => toAvroValue
-      case other =>
-        // invalid transform fails fast at plan build, like the reference's
-        // serializer dispatch (/root/reference/syscol/executor.go:131-141)
-        throw new IllegalArgumentException(s"unknown transform: $other")
-    }
     val key =
       if (keyed) col("SlaveID").cast("binary")
       else lit(null).cast("binary")
     envelope(events)
-      .select(col("event_id"), key.as("key"), value.as("value"))
+      .select(col("event_id"), key.as("key"), value(transform).as("value"))
+  }
+
+  /** The serialized envelope bytes for `transform`: "none" is the JSON
+    * transform ([[toJsonValue]]), "avro" the Confluent Avro one
+    * ([[toAvroValue]]). Any other name fails fast at plan build, like the
+    * reference's serializer dispatch (`syscol/executor.go:131-141`). */
+  def value(transform: String): Column = transform match {
+    case "none" => toJsonValue.cast("binary")
+    case "avro" => toAvroValue
+    case other =>
+      throw new IllegalArgumentException(s"unknown transform: $other")
   }
 }

@@ -1,17 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.util.control.ControlThrowable
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
-/** The one size check shared by every operator with a one-task path
+/** The one entry point of every operator with a one-task path
   * (`Clusters.connectedComponents`, `Clusters.pageRankWeighted`,
-  * `PairCounts` behind the shingle-pair and co-purchase queries, and
-  * `Temporal.transitions`). Up to
-  * [[MaxRows]] input rows the operator runs its whole computation inside
-  * ONE task (`coalesce(1).mapPartitions`): a fixed handful of Spark jobs
-  * instead of a distributed plan whose scheduling cost dominates a small
-  * input. Above the cap the operator's distributed plan is the scale
-  * path. */
+  * `PairCounts` and `Temporal.transitions`): up to [[MaxRows]] input rows
+  * the whole computation runs inside ONE task, one Spark job instead of a
+  * distributed plan whose scheduling cost dominates a small input; above
+  * the cap the operator's distributed plan is the scale path. */
 private[graft] object OneTask {
 
   /** Largest input a one-task path runs, sized like a broadcast
@@ -22,22 +21,29 @@ private[graft] object OneTask {
     * near-dup). */
   val MaxRows = 4000000
 
-  /** Whether `df` has at most [[MaxRows]] rows: a count of its rows in
-    * ONE job of one stage that writes no shuffle (`toRdd.count()`).
-    * The graph and pair-count callers pass a frame over a
-    * `localCheckpoint(eager = false)` input, so when the checkpointed plan
-    * has no exchange this pass is the one that fills the checkpoint both
-    * paths then read. Over an exchange the checkpoint is not lazy with AQE
-    * on: building its RDD executes the adaptive plan, which runs the map
-    * stages at the `localCheckpoint` call, and this count then reads their
-    * shuffle. `Temporal.transitions` passes a table projection without a
-    * checkpoint, so its kernel reads the input a second time. Above the
-    * cap it is still one full pass over the input, but never a shuffle.
-    * A `limit(cap+1).count()` is not cheaper: it plans a SinglePartition
-    * exchange behind a local limit, two jobs with each map task writing up
-    * to cap+1 rows to one reducer. */
-  def fits(df: DataFrame): Boolean =
-    df.queryExecution.toRdd.count() <= MaxRows
+  private object OverCap extends ControlThrowable
+
+  /** `kernel` over all of `input` in ONE task (`coalesce(1).mapPartitions`;
+    * a narrow upstream runs in that task too), its output of `schema`
+    * materialized by an eager `localCheckpoint` in the same job, never
+    * collected to the driver; or None when `input` weighs more than
+    * [[MaxRows]] (a row weighs `weight(row)`). The kernel's read is the
+    * size check: it stops at the row past the cap, so an over-cap input
+    * costs at most `MaxRows + 1` rows of ingest (`kernel` must read all of
+    * its input before it returns), and the task flags it in an
+    * accumulator read after the job, so the check costs no job. */
+  def run(input: DataFrame, schema: StructType, weight: Row => Int = _ => 1)(
+      kernel: Iterator[Row] => Iterator[Row]): Option[DataFrame] = {
+    val over = input.sparkSession.sparkContext.longAccumulator
+    val out = input.coalesce(1).mapPartitions { rows =>
+      var n = 0L
+      val counted = rows.map { r =>
+        n += weight(r); if (n > MaxRows) throw OverCap; r
+      }
+      try kernel(counted) catch { case OverCap => over.add(1); Iterator.empty }
+    }(Encoders.row(schema)).localCheckpoint(eager = true)
+    if (over.isZero) Some(out) else None
+  }
 
   /** Key types whose JVM equality (`Row.get`) is SQL equality — the ones a
     * one-task path can key a hash map by. Doubles (−0.0, NaN), binary and

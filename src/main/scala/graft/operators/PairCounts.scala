@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -93,33 +93,32 @@ private[graft] object PairCounts {
 
   /** The `(a_id, b_id, i, ca, cb)` pair counts of `keys` through `tail`.
     * Up to [[OneTask.MaxRows]] (id, key) elements they come from ONE task
-    * ([[pairCountsOneTask]]). Above it an unguarded Jaccard tail with
-    * threshold > 0 takes the prefix join ([[pairCountsPrefix]]), since
-    * nothing else bounds its Σ df² work; every other call takes the
-    * self-join ([[pairCountsJoin]]). The guard drops keys whose df is above
-    * `maxKeyDf` or the [[fractionCap]] from the pairs and the counts. */
+    * ([[pairCountsOneTask]]). Above it `keys` is materialized once; then
+    * an unguarded Jaccard tail with threshold > 0 takes the prefix join
+    * ([[pairCountsPrefix]]), since nothing else bounds its Σ df² work, and
+    * every other call takes the self-join ([[pairCountsJoin]]). The guard
+    * drops keys whose df is above `maxKeyDf` or the [[fractionCap]] from
+    * the pairs and the counts. */
   def apply(keys: DataFrame, tail: PairTail, maxKeyDf: Long = Long.MaxValue,
       maxKeyDfFraction: Option[Double] = None): DataFrame = {
-    // a row without keys is one row, so the check also bounds N
-    val oneTask = OneTask.KeyTypes(keys.schema("doc").dataType) &&
-      OneTask.fits(keys.select(explode_outer(col("gs"))))
+    val oneTask = if (!OneTask.KeyTypes(keys.schema("doc").dataType)) None
+      else pairCountsOneTask(keys, maxKeyDf, maxKeyDfFraction, tail)
     val unguarded = maxKeyDf == Long.MaxValue && maxKeyDfFraction.isEmpty
-    tail(
-      if (oneTask)
-        pairCountsOneTask(keys, maxKeyDf, maxKeyDfFraction, tail)
-      else tail match {
+    tail(oneTask.getOrElse {
+      val k = keys.localCheckpoint()
+      tail match {
         case PairTail.Jaccard(t, _) if unguarded && t > 0 =>
-          pairCountsPrefix(keys, t)
-        case _ => pairCountsJoin(keys, maxKeyDf, maxKeyDfFraction)
-      })
+          pairCountsPrefix(k, t)
+        case _ => pairCountsJoin(k, maxKeyDf, maxKeyDfFraction)
+      }
+    })
   }
 
   /** [[apply]]'s input from `rows` holding one (id, key) pair each: `doc`
     * is `idCol`, `gs` the one-element array of `keyCol` as a bigint. The
     * key must be integral, so the cast is lossless; a non-integral key
     * hashed into a bigint could collide and change the counts. A null key
-    * shares nothing, and its row is dropped. Materialized once (lazily):
-    * the size check and the path it picks both read it. */
+    * shares nothing, and its row is dropped. */
   def oneKeyPerRow(rows: DataFrame, idCol: String,
       keyCol: String): DataFrame = {
     val keyType = rows.schema(keyCol).dataType
@@ -127,7 +126,6 @@ private[graft] object PairCounts {
       s"key column $keyCol must be integral, got $keyType")
     rows.filter(col(keyCol).isNotNull)
       .select(col(idCol).as("doc"), array(col(keyCol).cast("long")).as("gs"))
-      .localCheckpoint(eager = false)
   }
 
   /** `pairs` in both orientations: each `(a_id, b_id, i, ca, cb)` row, and
@@ -178,7 +176,7 @@ private[graft] object PairCounts {
     // counts, both sides of the pair join); Spark has no plan-level CSE,
     // so materialize it once. Lazily only without a guard: a guard's
     // aggregate and join are exchanges, whose map stages AQE runs at this
-    // call (see `OneTask.fits`).
+    // call (PlanSpec pins both cases).
     val filtered = filtered0.localCheckpoint(eager = false)
     val counts = filtered.groupBy("doc").agg(count(lit(1)).as("c"))
     // A key of exactly ONE document can never produce a pair, so prune
@@ -315,14 +313,17 @@ private[graft] object PairCounts {
     * 590 of its 1.13M co-shingled pairs). The tail then runs on the
     * emitted rows as on the join's, so ANSI throws and NaN handling stay in
     * SQL: the zero-denominator pairs duplicate ids make have
-    * `i > max(ca, cb)` and reach it. */
+    * `i > max(ca, cb)` and reach it. None above the cap ([[OneTask.run]];
+    * a row weighs its elements, a keyless row one, so N is bounded too). */
   def pairCountsOneTask(keys: DataFrame, maxKeyDf: Long,
-      maxKeyDfFraction: Option[Double], tail: PairTail): DataFrame = {
+      maxKeyDfFraction: Option[Double], tail: PairTail): Option[DataFrame] = {
     val idType = keys.schema("doc").dataType
     val schema = new StructType()
       .add("a_id", idType).add("b_id", idType)
       .add("i", LongType).add("ca", LongType).add("cb", LongType)
-    keys.coalesce(1).mapPartitions { rows =>
+    def elements(r: Row): Int =
+      if (r.isNullAt(1)) 1 else math.max(1, r.getSeq[Long](1).size)
+    OneTask.run(keys, schema, elements) { rows =>
       // one (doc slot, key index) element per array entry; slot -1 = null id
       val slot = mutable.HashMap.empty[Any, Int]
       val ids = mutable.ArrayBuffer.empty[Any]
@@ -424,7 +425,7 @@ private[graft] object PairCounts {
         }
         out
       }
-    }(Encoders.row(schema))
+    }
   }
 
   /** The slots of `ids` sorted by SQL order of their values: numeric for

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -276,20 +276,17 @@ object Temporal {
     * user; null ts and null ids sort first. Events tied on (user, ts, id)
     * order arbitrarily, as in the window.
     *
-    * Size dispatch through [[OneTask.fits]]: a user-keyed window over an
+    * Size dispatch through [[OneTask.run]]: a user-keyed window over an
     * event log whose states are a few event types is bound by its stages,
     * not its data. Up to [[OneTask.MaxRows]] events with user and state
     * of a [[OneTask.KeyTypes]] type and integral or timestamp order keys,
     * ONE task counts the windows ([[transitionsOneTask]]), so the result
     * is one partition and a consumer's window or sort over it needs no
     * exchange. Otherwise the lag plan above runs ([[transitionsWindow]]).
-    * Both paths return the same rows.
-    *
-    * On the one-task path the input is evaluated twice, by the size
-    * check's count and by the kernel, with no checkpoint between them:
-    * every caller passes a projection of an event table, which costs one
-    * more scan, while a checkpoint would copy every row into the block
-    * store first.
+    * Both paths return the same rows. The kernel's read of the input is
+    * the size check, so up to the cap the input is read once; above it
+    * the window plan reads it again after a probe of at most
+    * `MaxRows + 1` rows.
     *
     * MEASURED AND REJECTED (q_pagerank at sf0.1, 4 vCPUs): keeping the lag
     * plan but hash-repartitioning it to `spark.sql.shuffle.partitions`
@@ -300,11 +297,9 @@ object Temporal {
       idCol: String, stateCol: String, depth: Int = 1): DataFrame = {
     require(depth >= 1, s"depth must be >= 1, got $depth")
     oneTaskKeys(events, userCol, tsCol, idCol, stateCol)
-      .filter(OneTask.fits) match {
-      case Some(keyed) => transitionsOneTask(keyed, depth)
-      case None =>
-        transitionsWindow(events, userCol, tsCol, idCol, stateCol, depth)
-    }
+      .flatMap(transitionsOneTask(_, depth))
+      .getOrElse(
+        transitionsWindow(events, userCol, tsCol, idCol, stateCol, depth))
   }
 
   /** The (user, ts: bigint, id: bigint, state) input of
@@ -356,14 +351,15 @@ object Temporal {
     *    (p − depth) has the same user and a non-null state is numbered by
     *    its states, one [[OneTask.KeyIndex]] probe per later event (level j
     *    keys the level j−1 index by the next state), and the last level
-    *    counts it. */
+    *    counts it.
+    * None above the cap ([[OneTask.run]]). */
   private[graft] def transitionsOneTask(keyed: DataFrame,
-      depth: Int): DataFrame = {
+      depth: Int): Option[DataFrame] = {
     val stateType = keyed.schema(3).dataType
     val schema = (0 to depth)
       .foldLeft(new StructType())((st, j) => st.add(s"s$j", stateType))
       .add("n", LongType, nullable = false)
-    keyed.coalesce(1).mapPartitions { rows =>
+    OneTask.run(keyed, schema) { rows =>
       val (userIndex, stateIndex) =
         (mutable.HashMap.empty[Any, Int], mutable.HashMap.empty[Any, Int])
       val stateValues = mutable.ArrayBuffer.empty[Any]
@@ -415,7 +411,7 @@ object Temporal {
         }
         Row.fromSeq(states :+ last.counts(w).toLong)
       }
-    }(Encoders.row(schema))
+    }
   }
 
   /** The positions 0 until `n` stably sorted by `lt`: a bottom-up merge

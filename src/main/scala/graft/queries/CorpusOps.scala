@@ -410,9 +410,8 @@ object CorpusOps extends QueryFamily {
       .withColumn("p_ppm",
         expr("(n * 1000000) div sum(n) over (partition by i)"))
       .select("i", "j", "p_ppm")
-      // joined once per unrolled round; eager, since over the one-task
-      // counts (no exchange) a lazy checkpoint would be filled by the
-      // rounds' concurrent query stages, each running the kernel
+      // joined once per unrolled round; materialized once, eagerly, so
+      // the rounds read its blocks instead of each re-running the window
       .localCheckpoint()
     val states = p.select(col("i").as("st"))
       .union(p.select(col("j"))).distinct()

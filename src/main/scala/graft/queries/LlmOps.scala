@@ -221,8 +221,8 @@ object LlmOps extends QueryFamily {
   def qNgramJaccard(s: SparkSession, dir: String): DataFrame =
     // Tables.parallel MEASURED AND REJECTED here (paired A/B at sf0.1,
     // 4 vCPUs, 6 pairs: dropping it gave median B/A 0.836). With the
-    // ShingleHashes kernel, shingling in the one scan task (the size
-    // check's job, which also materializes the shingle checkpoint) costs
+    // ShingleHashes kernel, shingling in one scan task (at sf0.1 the pair
+    // kernel's own task, which scans, shingles and counts) costs
     // less than the repair: an extra job writing a round-robin shuffle,
     // a planning pass for `getNumPartitions`, an AQE stage boundary.
     Dedup.ngramJaccardPairs(Tables.documents(s, dir),

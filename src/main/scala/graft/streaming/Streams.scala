@@ -931,13 +931,8 @@ object Streams {
       lit("prod").as("Namespace"),
       (unix_micros(col("ts")) * 1000).as("Timestamp"),
       col("props"))
-    val value = transform match {
-      case "none" => EnvelopeSink.toJsonValue.cast("binary")
-      case "avro" => EnvelopeSink.toAvroValue
-      case other =>
-        throw new IllegalArgumentException(s"unknown transform: $other")
-    }
-    env.select(col("SlaveID").cast("binary").as("key"), value.as("value"))
+    env.select(col("SlaveID").cast("binary").as("key"),
+      EnvelopeSink.value(transform).as("value"))
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
   }
 
@@ -970,13 +965,8 @@ object Streams {
       lit("prod").as("Namespace"),
       (unix_micros(col("ts")) * 1000).as("Timestamp"),
       col("body").as("props"))
-    val value = transform match {
-      case "none" => EnvelopeSink.toJsonValue.cast("binary")
-      case "avro" => EnvelopeSink.toAvroValue
-      case other =>
-        throw new IllegalArgumentException(s"unknown transform: $other")
-    }
-    env.select(col("SlaveID").cast("binary").as("key"), value.as("value"))
+    env.select(col("SlaveID").cast("binary").as("key"),
+      EnvelopeSink.value(transform).as("value"))
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
   }
 

@@ -27,11 +27,10 @@ class CorpusOpsSpec extends SparkSpec {
     }
   }
 
-  test("a repeated pruned co-purchase edge build runs 4 jobs") {
-    // The keys' checkpoint (AQE runs the distinct's map stage at the
-    // call), the one-task size check, the eager checkpoint of the kernel's
-    // mirrored edges, then the collect. The self-join formulation ran 4
-    // jobs too.
+  test("a repeated pruned co-purchase edge build runs 4 jobs: distinct, kernel, edge checkpoint, collect") {
+    // The distinct's map stage (AQE runs it before the one task reads its
+    // shuffle), the one-task kernel's job (its read is the size check),
+    // the eager checkpoint of the mirrored edges, then the collect.
     val q = CorpusOps.prunedEdgesBothWays(spark, sf).count()
     val jobs = jobsDuring {
       assert(CorpusOps.prunedEdgesBothWays(spark, sf).collect().length === q)

@@ -196,18 +196,21 @@ class DedupSpec extends SparkSpec {
     assert(jobs <= 6, s"$jobs jobs")
   }
 
-  test("a repeated q_ngram_jaccard in one session runs 2 jobs: size check, then kernel") {
+  test("a repeated q_ngram_jaccard in one session runs 2 jobs: the one-task kernel, then the count") {
     val q = graft.queries.LlmOps.qNgramJaccard(spark, sf).count()
-    // The schema is already known and shingling rides the check's scan
-    // task: no inference job, no round-robin shuffle job.
+    // The kernel's job (its read is the size check; scan and shingling
+    // run in its one task) materializes the pairs, then the count reads
+    // them. The schema is already known: no inference job, no round-robin
+    // shuffle job.
     val jobs = jobsDuring {
       assert(graft.queries.LlmOps.qNgramJaccard(spark, sf).count() === q)
     }
     assert(jobs === 2, s"$jobs jobs")
   }
 
-  test("a repeated q_ppjoin runs 2 jobs") {
-    // the shared operator's size check, then its kernel
+  test("a repeated q_ppjoin runs 2 jobs: the one-task kernel, then the count") {
+    // the shared operator's kernel job, whose read is the size check, then
+    // the count over its materialized pairs
     val q = graft.queries.CurateOps.qPpjoin(spark, sf).count()
     val jobs = jobsDuring {
       assert(graft.queries.CurateOps.qPpjoin(spark, sf).count() === q)
@@ -225,7 +228,7 @@ class DedupSpec extends SparkSpec {
     assert(docs.select("doc_id").distinct().count() === docs.count())
     val keys = Dedup.shingleKeys(docs, "text", "doc_id", 3)
     def counts(tail: PairTail) =
-      PairCounts.pairCountsOneTask(keys, Long.MaxValue, Some(0.01), tail)
+      PairCounts.pairCountsOneTask(keys, Long.MaxValue, Some(0.01), tail).get
     val all = counts(PairTail.Jaccard(Double.NegativeInfinity))
     val tail = PairTail.Jaccard(0.05)
     val kept = tail(all).count()
@@ -234,32 +237,40 @@ class DedupSpec extends SparkSpec {
     assert(counts(tail).count() === kept)
   }
 
-  test("OneTask.fits counts a multi-partition frame in one job with no shuffle") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-      SparkListenerTaskEnd}
+  test("OneTask.run runs a kernel in one job with no shuffle and stops past the cap") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructType}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     import graft.operators.OneTask
+    // a kernel that reads its whole input, then emits its row count
+    val schema = new StructType().add("n", LongType)
+    def rowCount(df: org.apache.spark.sql.DataFrame) =
+      OneTask.run(df, schema) { it =>
+        var n = 0L
+        it.foreach(_ => n += 1)
+        Iterator(Row(n))
+      }
     val frame = spark.sparkContext.parallelize(0 until 1000, 4).toDF("x")
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val shuffled = new java.util.concurrent.atomic.AtomicLong
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    var (jobs, out) = (0, Option.empty[org.apache.spark.sql.DataFrame])
+    listening(new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         if (t.taskMetrics != null)
           shuffled.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try {
-      assert(OneTask.fits(frame))
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(l)
-    assert(jobs.get === 1, s"${jobs.get} jobs")
+    }) { jobs = jobsDuring { out = rowCount(frame) } }
+    assert(jobs === 1, s"$jobs jobs")
     assert(shuffled.get === 0L, s"${shuffled.get} shuffle bytes written")
+    assert(out.get.as[Long].collect().toSeq === Seq(1000L))
     // both sides of the cap
-    assert(OneTask.fits(spark.range(0, OneTask.MaxRows, 1, 4).toDF()))
-    assert(!OneTask.fits(spark.range(0, OneTask.MaxRows + 1L, 1, 4).toDF()))
+    assert(rowCount(spark.range(0, OneTask.MaxRows, 1, 4).toDF()).get
+      .as[Long].collect().toSeq === Seq(OneTask.MaxRows.toLong))
+    assert(rowCount(spark.range(0, OneTask.MaxRows + 1L, 1, 4).toDF()).isEmpty)
+    // past the cap the read stops: an upstream counter sees at most cap + 1
+    val read = spark.sparkContext.longAccumulator
+    val upstream = spark.range(0, 2L * OneTask.MaxRows, 1, 4)
+      .map { x => read.add(1); x }.toDF()
+    assert(rowCount(upstream).isEmpty)
+    assert(read.sum <= OneTask.MaxRows + 1L, s"${read.sum} rows read")
   }
 
   test("containment finds the embedded quote Jaccard misses") {

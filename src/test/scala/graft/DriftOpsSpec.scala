@@ -211,7 +211,7 @@ class DriftOpsSpec extends SparkSpec {
     assert(two === ten, s"jobs grew with rounds: $two at 2, $ten at 10")
   }
 
-  test("q_pagerank on the spec tables runs 3 jobs and writes no shuffle") {
+  test("q_pagerank on the spec tables runs 3 jobs, two one-task kernels and the collect, and writes no shuffle") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     import graft.queries.DriftOps
     // warm-up: the first read of a table in a session infers its schema
@@ -226,10 +226,26 @@ class DriftOpsSpec extends SparkSpec {
       jobs = jobsDuring { rows = DriftOps.qPagerank(spark, sf).collect().toSeq }
     }
     assert(rows.nonEmpty && rows === expected)
-    // the transitions size check, the kernel (filling PageRank's edge
-    // checkpoint through its size check), and the rounds
+    // the transitions kernel's job, the PageRank kernel's job (each read
+    // is its own size check, each output materialized in that job), and
+    // the collect
     assert(jobs === 3)
     assert(shuffleBytes.get === 0L)
+  }
+
+  test("transitions over MaxRows + 1 events takes the window plan and returns its rows") {
+    import graft.operators.{OneTask, Temporal}
+    val events = spark.range(0, OneTask.MaxRows + 1L, 1, 4).select(
+      (col("id") % 1000).as("user_id"), expr("timestamp_micros(id)").as("ts"),
+      col("id").as("event_id"),
+      pmod(xxhash64(col("id")), lit(5)).cast("string").as("event_type"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
+    val got = Temporal.transitions(events, "user_id", "ts", "event_id",
+      "event_type")
+    val plan = got.queryExecution.executedPlan.toString
+    assert(plan.contains("Window"), plan)
+    assert(rows(got) === rows(Temporal.transitionsWindow(events, "user_id",
+      "ts", "event_id", "event_type", 1)))
   }
 
   // ---- incremental aggregate maintenance ----

@@ -29,6 +29,49 @@ class EnvelopeSpec extends SparkSpec {
       s"""{"SlaveID":"slave-8","Hostname":"host-3","Port":5051,"Namespace":"prod","Timestamp":$expectedTs,"Metrics":{"k":87}}""")
   }
 
+  // Mesos-shaped snapshot bodies and the Metrics each must carry, as Go's
+  // json.Marshal of the decoded map writes it: keys sorted, `4.0` as `4`,
+  // and `{}` for a body that does not decode (a null body is a failed
+  // fetch). `1e21` is pinned as VARIANT writes it, `1.0E21`; Go writes
+  // `1e+21` (SURVEY.md A3, A5).
+  private val mesosBodies = Seq(
+    """{"slave/uptime_secs": 4.0, "system/load_1min": 1.5,""" +
+      """ "slave/mem_total": 15360.0, "slave/tasks_running": 3,""" +
+      """ "slave/cpus_used": 0.0,""" +
+      """ "containerizer/mesos/container_destroy_errors": 0,""" +
+      """ "slave/frameworks_active": 2, "slave/cpus_total": 8.0}""" ->
+      ("""{"containerizer/mesos/container_destroy_errors":0,""" +
+        """"slave/cpus_total":8,"slave/cpus_used":0,""" +
+        """"slave/frameworks_active":2,"slave/mem_total":15360,""" +
+        """"slave/tasks_running":3,"slave/uptime_secs":4,""" +
+        """"system/load_1min":1.5}"""),
+    """{"slave/disk_total": 1e21, "slave/disk_used": 1.5}""" ->
+      """{"slave/disk_total":1.0E21,"slave/disk_used":1.5}""",
+    """{"slave/mem_total": 15360.0, "slave/""" -> "{}", // malformed
+    """[4.0, 1.5]""" -> "{}", // not an object
+    (null: String) -> "{}")
+  private def mesosDf = mesosBodies.zipWithIndex.map { case ((b, _), i) =>
+    (i.toLong, 8L, ts, b) }.toDF("event_id", "user_id", "ts", "props")
+
+  test("JSON envelope carries Mesos-shaped bodies as Go marshals them") {
+    val got = EnvelopeSink.kafkaRows(mesosDf, "none")
+      .orderBy("event_id").select(col("value").cast("string"))
+      .as[String].collect().toSeq
+    val expectedTs = 1437047650000000L * 1000
+    assert(got === mesosBodies.map { case (_, m) =>
+      s"""{"SlaveID":"slave-8","Hostname":"host-3","Port":5051,""" +
+        s""""Namespace":"prod","Timestamp":$expectedTs,"Metrics":$m}""" })
+  }
+
+  test("Avro envelope round-trips Mesos-shaped bodies to the JSON Metrics bytes") {
+    val got = EnvelopeSink.kafkaRows(mesosDf, "avro")
+      .withColumn("env", EnvelopeSink.fromAvroValue(col("value")))
+      .orderBy("event_id")
+      .select(col("env.SlaveID"), expr("cast(env.Metrics as string)"))
+      .as[(String, String)].collect().toSeq
+    assert(got === mesosBodies.map { case (_, m) => ("slave-8", m) })
+  }
+
   // -- independent minimal Avro binary encoder (spec-level, test-only) --
   private def zigzag(n: Long): Array[Byte] = {
     var v = (n << 1) ^ (n >> 63)

@@ -300,7 +300,7 @@ class PropertySpec extends SparkSpec {
       val e = frame(g, stringIds)
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().toSeq.sortBy(_.toString)
-      val one = rows(Clusters.pageRankOneTask(e, it, d))
+      val one = rows(Clusters.pageRankOneTask(e, it, d).get)
       val loop = rows(Clusters.pageRankRounds(e, it, d))
       assert(one === loop,
         s"case $caseIdx stringIds=$stringIds iterations=$it damping=$d: $g")
@@ -312,7 +312,7 @@ class PropertySpec extends SparkSpec {
     // a's weights sum to 0: (r·w) div ow divides by zero under ANSI
     val e = Seq(("a", "b", 2L), ("a", "c", -2L), ("b", "a", 1L))
       .toDF("src", "dst", "w")
-    intercept[Exception](Clusters.pageRankOneTask(e, 10, 850).collect())
+    intercept[Exception](Clusters.pageRankOneTask(e, 10, 850).get.collect())
     intercept[Exception](Clusters.pageRankRounds(e, 10, 850).collect())
     intercept[Exception](Clusters.pageRankWeighted(e, "src", "dst", "w")
       .collect())
@@ -478,7 +478,7 @@ class PropertySpec extends SparkSpec {
       for ((maxDf, frac) <- guards) {
         val at = s"corpus $caseIdx n=$n maxShingleDf=$maxDf fraction=$frac"
         val one = PairCounts.pairCountsOneTask(keys, maxDf, frac,
-          PairTail.Jaccard(Double.NegativeInfinity))
+          PairTail.Jaccard(Double.NegativeInfinity)).get
         val join = PairCounts.pairCountsJoin(keys, maxDf, frac)
         val counts = rows(join.select("a_id", "b_id", "i", "ca", "cb"))
         assert(rows(one) === counts, at)
@@ -501,7 +501,7 @@ class PropertySpec extends SparkSpec {
       // that make zero Jaccard denominators
       val join = PairCounts.pairCountsJoin(keys, Long.MaxValue, None)
       val unbounded = rows(PairCounts.pairCountsOneTask(keys, Long.MaxValue,
-        None, PairTail.Jaccard(Double.NegativeInfinity))).toSet
+        None, PairTail.Jaccard(Double.NegativeInfinity)).get).toSet
       for (t <- Seq(0.0, 0.2, 0.3, 1.0, 1.5, Double.NaN)) {
         val at = s"corpus $caseIdx n=$n threshold=$t"
         val jaccardJoin = outcome(PairTail.Jaccard(t)(join))
@@ -512,7 +512,7 @@ class PropertySpec extends SparkSpec {
         throwBit ||= jaccardJoin.isEmpty
         for (tail <- Seq(PairTail.Jaccard(t), PairTail.Containment(t))) {
           val bounded = rows(PairCounts.pairCountsOneTask(keys, Long.MaxValue,
-            None, tail)).toSet
+            None, tail).get).toSet
           assert(bounded.subsetOf(unbounded), s"$at $tail")
           boundBit ||= bounded.size < unbounded.size
         }
@@ -521,7 +521,7 @@ class PropertySpec extends SparkSpec {
         val at = s"corpus $caseIdx n=$n support=$support"
         val tail = PairTail.Support(support)
         val bounded = PairCounts.pairCountsOneTask(keys, Long.MaxValue, None,
-          tail)
+          tail).get
         assert(rows(bounded).toSet.subsetOf(unbounded), at)
         assert(rows(tail(bounded)) === rows(tail(join)), at)
         assert(rows(PairCounts(keys, tail)) === rows(tail(join)), at)
@@ -664,7 +664,8 @@ class PropertySpec extends SparkSpec {
       val keys = Temporal.oneTaskKeys(events, "user_id", "ts", "event_id",
         "event_type")
       assert(keys.nonEmpty, at)
-      assert(rows(Temporal.transitionsOneTask(keys.get, depth)) === window, at)
+      assert(rows(Temporal.transitionsOneTask(keys.get, depth).get) === window,
+        at)
       assert(rows(Temporal.transitions(events, "user_id", "ts", "event_id",
         "event_type", depth)) === window, at)
     }
