@@ -27,7 +27,7 @@ class CorpusOpsSpec extends SparkSpec {
     }
   }
 
-  test("a repeated pruned co-purchase edge build runs 4 jobs: distinct, kernel, edge checkpoint, collect") {
+  test("a repeated pruned co-purchase edge build runs 4 jobs") {
     // The distinct's map stage (AQE runs it before the one task reads its
     // shuffle), the one-task kernel's job (its read is the size check),
     // the eager checkpoint of the mirrored edges, then the collect.

@@ -196,7 +196,7 @@ class DedupSpec extends SparkSpec {
     assert(jobs <= 6, s"$jobs jobs")
   }
 
-  test("a repeated q_ngram_jaccard in one session runs 2 jobs: the one-task kernel, then the count") {
+  test("a repeated q_ngram_jaccard in one session runs 2 jobs: size check, then kernel") {
     val q = graft.queries.LlmOps.qNgramJaccard(spark, sf).count()
     // The kernel's job (its read is the size check; scan and shingling
     // run in its one task) materializes the pairs, then the count reads

@@ -211,7 +211,7 @@ class DriftOpsSpec extends SparkSpec {
     assert(two === ten, s"jobs grew with rounds: $two at 2, $ten at 10")
   }
 
-  test("q_pagerank on the spec tables runs 3 jobs, two one-task kernels and the collect, and writes no shuffle") {
+  test("q_pagerank on the spec tables runs 3 jobs and writes no shuffle") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     import graft.queries.DriftOps
     // warm-up: the first read of a table in a session infers its schema
