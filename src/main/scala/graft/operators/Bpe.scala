@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   * inherent sequential dependency (merge r+1's counts depend on merge r's
   * rewrite), the same driver-sequencing discipline as the PageRank
   * rounds, NOT a data collect — the vocabulary itself never leaves the
-  * cluster, and `localCheckpoint` truncates the per-round lineage.
+  * cluster. The vocabulary is [[Rounds.materialize]]d before the first
+  * round and after each merge, which truncates the per-round lineage.
   */
 object Bpe {
 
@@ -58,7 +59,7 @@ object Bpe {
   def trainVocab(docs: DataFrame, textCol: String, nMerges: Int,
       firstSymbol: Int = 0x4E00): (Seq[Merge], DataFrame) = {
     requireSymbolRange(nMerges, firstSymbol)
-    var vocab = wordVocab(docs, textCol).localCheckpoint()
+    var vocab = Rounds.materialize(wordVocab(docs, textCol))
     val expansion = scala.collection.mutable.Map.empty[Char, String]
     def expand(c: Char): String = expansion.getOrElse(c, c.toString)
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
@@ -79,9 +80,8 @@ object Bpe {
         val newCh = (firstSymbol + r).toChar
         expansion(newCh) = expand(pair.charAt(0)) + expand(pair.charAt(1))
         merges += Merge(r, expansion(newCh), newCh.toString, cnt)
-        vocab = vocab
-          .withColumn("sym", replace(col("sym"), lit(pair), lit(newCh.toString)))
-          .localCheckpoint()
+        vocab = Rounds.materialize(vocab.withColumn("sym",
+          replace(col("sym"), lit(pair), lit(newCh.toString))))
       }
       r += 1
     }

@@ -23,9 +23,9 @@ import org.apache.spark.sql.types._
   * O(log diameter) rounds, the same round bound as the large-star/small-star
   * MapReduce formulation. Every round is a constant number of
   * hash-partitioned joins on vertex id — no single-partition step anywhere,
-  * so each round scales like any other shuffle; `localCheckpoint` truncates
-  * the growing lineage (the standard iterative-DataFrame requirement — at
-  * production scale a reliable `checkpoint()` dir instead).
+  * so each round scales like any other shuffle. Each round's labels go
+  * through [[Rounds.materialize]], which cuts the growing lineage and
+  * hands the planner the round's measured size.
   *
   * Convergence is detected by an exact changed-label count per round (an
   * `isEmpty` probe — stops at the fixpoint rather than running a worst-case
@@ -85,18 +85,16 @@ object Clusters {
     * compression (`comp := comp(comp)`, the pointer-halving step that turns
     * O(diameter) convergence into O(log diameter) rounds), each a
     * hash-partitioned join on vertex id — no single-partition step. The
-    * round result is checkpointed ONCE with its change flag, so the
-    * convergence probe reads cached blocks instead of re-running the
-    * compression join (and the next round re-running it again — Spark has
-    * no plan-level CSE). `e` is (src: bigint, dst: bigint), read once. */
+    * symmetric edges, the labels and each round's propagated and compressed
+    * labels are [[Rounds.materialize]]d, the latter with their change flag,
+    * so the convergence probe reads cached blocks instead of re-running the
+    * compression join. `e` is (src: bigint, dst: bigint), read once. */
   private[graft] def componentsRounds(e: DataFrame, maxIter: Int): DataFrame = {
-    val sym = e.select(explode(array(struct("src", "dst"),
+    val sym = Rounds.materialize(e.select(explode(array(struct("src", "dst"),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select("e.*").distinct()
-      .localCheckpoint(eager = false) // joined every round — materialize once
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint(eager = false)
+      .select("e.*").distinct()) // joined every round
+    var labels = Rounds.materialize(sym.select(col("src").as("id")).distinct()
+      .withColumn("comp", col("id")))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -105,23 +103,21 @@ object Clusters {
         .join(labels.select(col("id").as("dst"), col("comp")), "dst")
         .groupBy(col("src").as("id"))
         .agg(min("comp").as("nbr_comp"))
-      // checkpoint BEFORE the compression self-join: it consumes
-      // `propagated` twice, and Spark has no plan-level CSE — unckeckpointed,
+      // materialize BEFORE the compression self-join: it consumes
+      // `propagated` twice, and Spark has no plan-level CSE — unmaterialized,
       // the neighbour-min join would be planned (and run) on both sides
-      val propagated = labels.join(nbrMin, Seq("id"), "left")
+      val propagated = Rounds.materialize(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-        .localCheckpoint(eager = true)
+          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp")))
       // path compression: comp := comp(comp) — labels only ever decrease,
       // so following the label's own label one hop is always sound and
       // halves the remaining pointer-chain depth
-      val next = propagated
+      val next = Rounds.materialize(propagated
         .join(propagated.select(col("id").as("comp"), col("comp").as("comp2")),
           Seq("comp"), "left")
         .join(labels.withColumnRenamed("comp", "prev"), "id")
         .select(col("id"), coalesce(col("comp2"), col("comp")).as("comp"),
-          (coalesce(col("comp2"), col("comp")) =!= col("prev")).as("changed"))
-        .localCheckpoint(eager = true)
+          (coalesce(col("comp2"), col("comp")) =!= col("prev")).as("changed")))
       converged = next.filter(col("changed")).isEmpty // cached blocks only
       labels = next.select("id", "comp")
       iter += 1
@@ -146,25 +142,24 @@ object Clusters {
     *
     * Scale shape: per round ONE edge⋈label hash join + ONE (node, label)
     * count with map-side combine + a min(struct) plurality pick — no
-    * window in the loop; the node-sized label table is localCheckpoint'd
-    * each round to cut lineage. */
+    * window in the loop. The edges and each round's node-sized labels are
+    * [[Rounds.materialize]]d. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 50,
       s"rounds must be in [1, 50], got $rounds")
-    val e = edges.select(col(srcCol).as("i"), col(dstCol).as("j"))
-      .localCheckpoint(eager = false) // joined once per round
-    var labels = e.select(col("i").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint()
+    val e = Rounds.materialize( // joined once per round
+      edges.select(col(srcCol).as("i"), col(dstCol).as("j")))
+    var labels = Rounds.materialize(e.select(col("i").as("node")).distinct()
+      .withColumn("lbl", col("node")))
     for (_ <- 1 to rounds) {
-      labels = e.join(labels.select(col("node").as("j"), col("lbl")), "j")
+      labels = Rounds.materialize(e
+        .join(labels.select(col("node").as("j"), col("lbl")), "j")
         .groupBy(col("i"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("i"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("m"))
-        .select(col("i").as("node"), col("m.l").as("lbl"))
-        .localCheckpoint() // node-sized; cuts the per-round lineage
+        .select(col("i").as("node"), col("m.l").as("lbl")))
     }
     labels
   }
@@ -183,30 +178,28 @@ object Clusters {
     *
     * Scale shape: per round ONE degree aggregate over the edge set
     * restricted to survivors (two node-keyed semi-joins + groupBy with
-    * map-side combine — no windows, no driver frontier); survivor tables
-    * are node-sized and localCheckpoint'd to cut lineage. */
+    * map-side combine — no windows, no driver frontier); the edges, degrees
+    * and each round's survivors are [[Rounds.materialize]]d. */
   def boundedKcore(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && k <= 1000000, s"k must be in [1, 1e6], got $k")
     require(rounds >= 1 && rounds <= 50,
       s"rounds must be in [1, 50], got $rounds")
-    val e = edges.select(col(srcCol).as("i"), col(dstCol).as("j"))
-      .localCheckpoint(eager = false) // re-joined every peel round
-    val d0 = e.groupBy(col("i").as("node")).agg(count(lit(1)).as("d0"))
-      .localCheckpoint(eager = false)
+    val e = Rounds.materialize( // re-joined every peel round
+      edges.select(col(srcCol).as("i"), col(dstCol).as("j")))
+    val d0 = Rounds.materialize(
+      e.groupBy(col("i").as("node")).agg(count(lit(1)).as("d0")))
     def degWithin(surv: DataFrame): DataFrame =
       e.join(surv.select(col("node").as("i")), Seq("i"))
         .join(surv.select(col("node").as("j")), Seq("j"))
         .groupBy(col("i").as("node")).agg(count(lit(1)).as("d"))
-    var surv = d0.filter(col("d0") >= k).select("node")
-      .localCheckpoint(eager = false)
+    var surv = Rounds.materialize(d0.filter(col("d0") >= k).select("node"))
     var acc = d0.join(surv.withColumn("m", lit(1)), Seq("node"), "left")
       .select(col("node"), col("d0"),
         when(col("m").isNull, lit(1L)).as("rr"))
     var lastDeg = degWithin(surv)
     for (r <- 2 to rounds) {
-      surv = lastDeg.filter(col("d") >= k).select("node")
-        .localCheckpoint(eager = false)
+      surv = Rounds.materialize(lastDeg.filter(col("d") >= k).select("node"))
       acc = acc.join(surv.withColumn("m", lit(1)), Seq("node"), "left")
         .select(col("node"), col("d0"),
           coalesce(col("rr"),
@@ -265,17 +258,15 @@ object Clusters {
   }
 
   /** The distributed round loop of [[pageRankWeighted]] — the any-size
-    * scale path. `e0` is (src, dst, w: bigint), read three times, so it is
-    * materialized once; `localCheckpoint` truncates the growing lineage
-    * each round exactly like [[connectedComponents]]. */
+    * scale path. `e0` is (src, dst, w: bigint), read three times; it and
+    * each round's ranks are [[Rounds.materialize]]d. */
   private[graft] def pageRankRounds(e0: DataFrame, iterations: Int,
       dampingMilli: Int): DataFrame = {
-    val e = e0.localCheckpoint()
+    val e = Rounds.materialize(e0)
     val outW = e.groupBy("src").agg(sum("w").as("ow"))
-    val ew = e.join(outW, "src").localCheckpoint(eager = false)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = false)
+    val ew = Rounds.materialize(e.join(outW, "src"))
+    val nodes = Rounds.materialize(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val base = 1000000L - dampingMilli * 1000L
     var ranks = nodes.withColumn("r", lit(1000000L))
     for (_ <- 1 to iterations) {
@@ -287,12 +278,11 @@ object Clusters {
         .select(col("dst").as("node"),
           expr("(CAST(r AS DECIMAL(20,0)) * w) div ow").as("c"))
         .groupBy("node").agg(sum("c").as("sc"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
+      ranks = Rounds.materialize(nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
           (lit(base) + expr(
             s"($dampingMilli * CAST(coalesce(sc, 0) AS DECIMAL(20,0))) div 1000"))
-            .as("r"))
-        .localCheckpoint(eager = false)
+            .as("r")))
     }
     ranks.select(col("node"), col("r").as("rank_micro"))
   }
@@ -412,22 +402,25 @@ object Clusters {
     * wedge→edge close is one equi-join on the canonical pair key. Every
     * triangle is found exactly once (its minimum-(degree, id) apex). */
   def triangleStats(edges0: DataFrame, aCol: String, bCol: String): DataFrame = {
+    // Eager: a lazy checkpoint's plan could be collected before its last
+    // stage reported the plan's metrics. Not Rounds.materialize: measured,
+    // the edges stop broadcasting into the wedge close (q_triangles 2.34x).
     val edges = edges0
       .select(least(col(aCol), col(bCol)).as("x"),
         greatest(col(aCol), col(bCol)).as("y"))
       .filter(col("x") < col("y")).distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val deg = edges.select(col("x").as("v"))
       .unionAll(edges.select(col("y").as("v")))
       .groupBy("v").agg(count(lit(1)).as("degree"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val lower = struct(col("dx"), col("x")) < struct(col("dy"), col("y"))
     val dir = edges
       .join(deg.select(col("v").as("x"), col("degree").as("dx")), "x")
       .join(deg.select(col("v").as("y"), col("degree").as("dy")), "y")
       .select(when(lower, col("x")).otherwise(col("y")).as("src"),
         when(lower, col("y")).otherwise(col("x")).as("dst"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val tris = dir.select(col("src"), col("dst").as("d1"))
       .join(dir.select(col("src"), col("dst").as("d2")), "src")
       .filter(col("d1") < col("d2"))

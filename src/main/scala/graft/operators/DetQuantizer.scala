@@ -31,10 +31,9 @@ import graft.functions.VectorFunctions
   *
   * Scale shape: the fit is `rounds` passes of (corpus × k broadcast
   * distance + one map-side-partial aggregate); the centroid table is k
-  * rows and always broadcasts; per-round lineage is cut by
-  * localCheckpoint on k rows (the PageRank discipline). At 100 TB the fit
-  * runs on a corpus sample like any coarse quantizer; assignment stays
-  * the only full pass.
+  * rows and always broadcasts; the corpus and each round's centroids go
+  * through [[Rounds.materialize]]. At 100 TB the fit runs on a corpus
+  * sample like any coarse quantizer; assignment stays the only full pass.
   * A fixed small `rounds` (default 3) is plenty for a COARSE quantizer —
   * cells need rough balance, not convergence (recall is asserted in
   * SimilaritySpec either way).
@@ -56,18 +55,16 @@ object DetQuantizer {
   def fit(corpus: DataFrame, embCol: String, idCol: String, k: Int,
       rounds: Int = DefaultRounds): DataFrame = {
     require(k > 0 && rounds >= 0, s"need k>0, rounds>=0; got k=$k rounds=$rounds")
-    val e = corpus
-      .select(col(idCol).as("_id"), microQuantize(col(embCol)).as("_v"))
-      .localCheckpoint(eager = false) // feeds every round + callers' assign
+    val e = Rounds.materialize(corpus // feeds every round
+      .select(col(idCol).as("_id"), microQuantize(col(embCol)).as("_v")))
     // Seeds: k smallest (md5(id), id). orderBy+limit plans TakeOrdered (no
     // global sort); the row_number window then runs on just those k rows.
-    var cents = e
+    var cents = Rounds.materialize(e
       .withColumn("_h", md5(col("_id").cast("string")))
       .orderBy(col("_h"), col("_id")).limit(k)
       .withColumn("cell_id",
         row_number().over(Window.orderBy(col("_h"), col("_id"))) - 1)
-      .select(col("cell_id"), col("_v").as("cent"))
-      .localCheckpoint()
+      .select(col("cell_id"), col("_v").as("cent")))
     var r = 0
     while (r < rounds) {
       // Assignment: corpus × k broadcast, min(struct) keeps the map-side
@@ -90,10 +87,9 @@ object DetQuantizer {
         .groupBy("cell_id")
         .agg(transform(array_sort(collect_list(struct(col("_i"), col("c")))),
           p => p.getField("c")).as("cent2"))
-      cents = cents.join(next, Seq("cell_id"), "left")
+      cents = Rounds.materialize(cents.join(next, Seq("cell_id"), "left")
         .select(col("cell_id"),
-          coalesce(col("cent2"), col("cent")).as("cent"))
-        .localCheckpoint() // k rows; cuts the per-round lineage
+          coalesce(col("cent2"), col("cent")).as("cent")))
       r += 1
     }
     cents

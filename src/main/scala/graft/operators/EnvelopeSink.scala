@@ -33,16 +33,16 @@ object EnvelopeSink {
   def schemaId: Int = SchemaRegistryStub.register(
     SchemaRegistryStub.subjectFor(schemaJson), schemaJson)
 
+  /** `props` as VARIANT; null where it is not a parseable JSON object. */
+  private def decoded: Column =
+    when(col("props").rlike("^[ \t\n\r]*\\{"), try_parse_json(col("props")))
+
   /** The snapshot body `props` decoded once, as VARIANT, which writes it
     * as Go re-marshals the decoded map (keys sorted, `4.0` as `4`). A null
     * body or one that is not a parseable JSON object becomes `{}`, as a
     * failed fetch or decode does in the reference. Divergences from Go
     * (`1e21` → `1.0E21`, repeated keys): SURVEY.md A3, A5. */
-  private def metrics: Column = {
-    val body = col("props")
-    coalesce(when(body.rlike("^[ \t\n\r]*\\{"), try_parse_json(body)),
-      parse_json(lit("{}")))
-  }
+  private def metrics: Column = coalesce(decoded, parse_json(lit("{}")))
 
   /** Envelope projection over the events stream: constant + derived context
     * columns and the ns-precision timestamp, exactly `transformNone`'s
@@ -122,13 +122,16 @@ object EnvelopeSink {
     * (/root/reference/Godeps/_workspace/src/github.com/elodina/siesta-producer/kafka_producer.go:12-21).
     * `keyed = false` emits null keys — the reference's own data path sends
     * records with NO key (/root/reference/syscol/metrics_reporter.go:96),
-    * trading per-key ordering for uniform random placement. */
+    * trading per-key ordering for uniform random placement. Observation
+    * `envelope`'s `empty_metrics` counts the rows whose Metrics fell back
+    * to `{}`, which the reference sends without a trace. */
   def kafkaRows(events: DataFrame, transform: String,
       keyed: Boolean = true): DataFrame = {
     val key =
       if (keyed) col("SlaveID").cast("binary")
       else lit(null).cast("binary")
     envelope(events)
+      .observe("envelope", count_if(decoded.isNull).as("empty_metrics"))
       .select(col("event_id"), key.as("key"), value(transform).as("value"))
   }
 

@@ -44,6 +44,7 @@ object Funnel {
         unix_micros(col(tsCol)).as("tus"))
       .filter(col("et").isin(stages: _*))
       .localCheckpoint(eager = false) // scanned once per stage round
+    // not Rounds.materialize: 1.18-1.31x slower by paired A/B at sf0.1
     // reached(i): (u, t1, ti) for users who completed stages 1..i
     var reached = e.filter(col("et") === stages.head)
       .groupBy("u").agg(min("tus").as("ti"))

@@ -533,37 +533,35 @@ object Similarity {
     require(k >= 1 && poolSize >= k, s"need 1 <= k <= poolSize, got $k/$poolSize")
     require(wSim > 0 && wDiv >= 0, s"need wSim>0, wDiv>=0, got $wSim/$wDiv")
     def micro(c: Column): Column = round(c * lit(1000000.0)).cast("long")
-    val pool = cosineTopK(queries, corpus, poolSize)
+    // bounded (queries × poolSize, poolSize² per query); feed every round
+    val pool = Rounds.materialize(cosineTopK(queries, corpus, poolSize)
       .select(col("q_id"), col("vec_id"), micro(col("sim")).as("si"))
-      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .localCheckpoint() // bounded: queries × poolSize rows, feeds k rounds
-    val pairs = pool
+      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id"))
+    val pairs = Rounds.materialize(pool
       .select(col("q_id"), col("vec_id").as("x_id"), col("embedding").as("x_emb"))
       .join(pool.select(col("q_id"), col("vec_id").as("y_id"),
         col("embedding").as("y_emb")), "q_id")
       .filter(col("x_id") =!= col("y_id"))
       .select(col("q_id"), col("x_id"), col("y_id"),
         micro(round(VectorFunctions.cosine(col("x_emb"), col("y_emb")), 6))
-          .as("pi"))
-      .localCheckpoint() // poolSize² per query, still bounded
+          .as("pi")))
     val w = Window.partitionBy("q_id").orderBy(desc("mmr_e7"), asc("vec_id"))
     var rem = pool.select("q_id", "vec_id", "si")
       .withColumn("msi", lit(null).cast("long"))
     var out: DataFrame = null
     var r = 1
     while (r <= k) {
-      val pick = rem
+      val pick = Rounds.materialize(rem
         .withColumn("mmr_e7",
           lit(wSim.toLong) * col("si") -
             lit(wDiv.toLong) * coalesce(col("msi"), lit(0L)))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
-        .select(col("q_id"), lit(r).as("rnk"), col("vec_id"), col("mmr_e7"))
-        .localCheckpoint() // one row per query
+        .select(col("q_id"), lit(r).as("rnk"), col("vec_id"), col("mmr_e7")))
       out = if (out == null) pick else out.union(pick)
       // Spark's greatest() skips nulls, so the first update replaces the
       // null msi with pi — the oracle mirrors this with an explicit CASE.
-      rem = rem
+      rem = Rounds.materialize(rem
         .join(pick.select(col("q_id"), col("vec_id").as("sel_id")), Seq("q_id"))
         .filter(col("vec_id") =!= col("sel_id"))
         .join(pairs
@@ -571,8 +569,7 @@ object Similarity {
           .withColumnRenamed("y_id", "sel_id"),
           Seq("q_id", "vec_id", "sel_id"))
         .withColumn("msi", greatest(col("msi"), col("pi")))
-        .select("q_id", "vec_id", "si", "msi")
-        .localCheckpoint()
+        .select("q_id", "vec_id", "si", "msi"))
       r += 1
     }
     out
@@ -641,28 +638,25 @@ object Similarity {
     * max-min squared distance at selection time (0 for the seed). */
   def farthestPointSample(corpus: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
-    val e = corpus.select(col("vec_id"),
-      DetQuantizer.microQuantize(col("embedding")).as("v"))
-      .localCheckpoint(eager = false)
-    var pick = e.withColumn("h", md5(col("vec_id").cast("string")))
-      .orderBy("h", "vec_id").limit(1)
-      .select(col("vec_id"), col("v"), lit(0L).as("gap"))
-      .localCheckpoint()
+    val e = Rounds.materialize(corpus.select(col("vec_id"),
+      DetQuantizer.microQuantize(col("embedding")).as("v")))
+    var pick = Rounds.materialize(
+      e.withColumn("h", md5(col("vec_id").cast("string")))
+        .orderBy("h", "vec_id").limit(1)
+        .select(col("vec_id"), col("v"), lit(0L).as("gap")))
     var out = pick.select(col("vec_id"), lit(1).as("rnk"), col("gap"))
     var rem = e.join(pick.select("vec_id"), Seq("vec_id"), "left_anti")
       .withColumn("mind", lit(null).cast("long"))
     var r = 2
     while (r <= k) {
-      val upd = rem
+      val upd = Rounds.materialize(rem
         .crossJoin(broadcast(pick.select(col("v").as("pv"))))
         .withColumn("mind", least(
           coalesce(col("mind"), lit(Long.MaxValue)),
           VectorFunctions.longL2Sq(col("v"), col("pv"))))
-        .drop("pv")
-        .localCheckpoint()
-      pick = upd.orderBy(desc("mind"), asc("vec_id")).limit(1)
-        .select(col("vec_id"), col("v"), col("mind").as("gap"))
-        .localCheckpoint()
+        .drop("pv"))
+      pick = Rounds.materialize(upd.orderBy(desc("mind"), asc("vec_id"))
+        .limit(1).select(col("vec_id"), col("v"), col("mind").as("gap")))
       out = out.union(pick.select(col("vec_id"), lit(r).as("rnk"), col("gap")))
       rem = upd.join(pick.select("vec_id"), Seq("vec_id"), "left_anti")
       r += 1

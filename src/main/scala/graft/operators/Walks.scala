@@ -16,55 +16,44 @@ import org.apache.spark.sql.functions._
   * (dst-ordered) window — bounded by degree, never corpus-wide.
   *
   * Scale shape: each step is ONE equi-join of the walk frontier against
-  * the ranked adjacency on (cur, chosen rank) — hash-partitioned on the
-  * node key, cost ∝ walks, not edges; `localCheckpoint` truncates the
-  * per-step lineage exactly like the PageRank loop. Dead-end nodes
+  * the ranked adjacency on the current node, which carries the node's
+  * degree, keeping the chosen rank — hash-partitioned on the node key,
+  * cost ∝ the frontier's out-edges. The frontier goes through
+  * [[Rounds.materialize]] every step; walks never fork, so the planner
+  * broadcasts it for a seed-set walk and shuffles it for all-nodes
+  * DeepWalk, by its measured size. Dead-end nodes
   * terminate their walk (emitted steps stop — standard DeepWalk
   * truncation). Output is EXPLODED (walk_id, step, node) rows, one per
   * visited position, so downstream skip-gram windowing is one
   * self-join/window away and the contract stays scalar. */
 object Walks {
 
-  /** `broadcastFrontier`: walks never fork, so the frontier is bounded by
-    * |starts| for the whole run. When the CALLER knows that bound is
-    * broadcast-sized (a seed-set walk, not all-nodes DeepWalk), passing
-    * true broadcasts the frontier side of both per-step joins; the ranked
-    * adjacency then STREAMS — without the hint, both sides are
-    * checkpointed LogicalRDDs whose size statistics default to "huge", so
-    * Spark sort-merge-joins and every step re-shuffles the entire edge
-    * table against a handful of walk rows (measured on q_random_walks:
-    * median 0.82x over 6 paired runs, 5/6 faster, guide §3.1). Default
-    * false: an every-node start set would broadcast a corpus-sized
-    * frontier. */
+  /** `steps`-step walks over directed `edges` from each `starts(startCol)`
+    * node: (walk_id = start node, step, node), step 0 at the start. */
   def deterministicWalks(edges: DataFrame, srcCol: String, dstCol: String,
       starts: DataFrame, startCol: String, steps: Int,
-      seed: String, broadcastFrontier: Boolean = false): DataFrame = {
+      seed: String): DataFrame = {
     require(steps >= 1 && steps <= 50, s"steps must be in [1, 50]: $steps")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
     val w = Window.partitionBy("src").orderBy("dst")
-    val nbr = e.withColumn("rn", row_number().over(w) - 1)
-      .localCheckpoint(eager = false) // joined every step
-    val deg = nbr.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = false)
-    def hint(df: DataFrame): DataFrame =
-      if (broadcastFrontier) broadcast(df) else df
-    var frontier = starts.select(col(startCol).as("walk_id"),
-      col(startCol).as("node"), lit(0L).as("step"))
+    val nbr = Rounds.materialize(e
+      .withColumn("rn", row_number().over(w) - 1)
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
+      .withColumnRenamed("src", "node"))
+    var frontier = Rounds.materialize(starts.select(
+      col(startCol).as("walk_id"), col(startCol).as("node"),
+      lit(0L).as("step")))
     var out = frontier
     for (i <- 1 to steps) {
       val pick = conv(substring(md5(concat(lit(seed), lit("|"),
         col("walk_id").cast("string"), lit("|"), lit(i.toString))), 1, 12),
         16, 10).cast("long")
-      frontier = hint(frontier)
-        .join(deg.withColumnRenamed("src", "node"), Seq("node")) // dead ends drop
-        .withColumn("rn", pmod(pick, col("deg")))
-        .withColumnRenamed("node", "src")
-      frontier = hint(frontier)
-        .join(nbr, Seq("src", "rn"))
+      frontier = Rounds.materialize(frontier
+        .join(nbr, Seq("node")) // dead ends drop
+        .filter(col("rn") === pmod(pick, col("deg")))
         .select(col("walk_id"), col("dst").as("node"),
-          lit(i.toLong).as("step"))
-        .localCheckpoint(eager = false)
+          lit(i.toLong).as("step")))
       out = out.unionAll(frontier)
     }
     out.select(col("walk_id"), col("step"), col("node"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{TextFunctions => T}
 import graft.operators.{Clusters, Dedup, Outliers, PairCounts, Ranking,
-  Temporal}
+  Rounds, Temporal}
 import graft.operators.PairCounts.PairTail
 
 /** Round-4 corpus-pipeline operators: duplicate-cluster resolution
@@ -405,18 +405,18 @@ object CorpusOps extends QueryFamily {
     * reports can never disagree about the chain they describe. */
   private def markovChain(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val p = eventTransitions(s, dir)
+    // joined once per round: the rounds read its blocks instead of each
+    // re-running the window
+    val p = Rounds.materialize(eventTransitions(s, dir)
       .select(col("s0").as("i"), col("s1").as("j"), col("n"))
       .withColumn("p_ppm",
         expr("(n * 1000000) div sum(n) over (partition by i)"))
-      .select("i", "j", "p_ppm")
-      // joined once per unrolled round; materialized once, eagerly, so
-      // the rounds read its blocks instead of each re-running the window
-      .localCheckpoint()
+      .select("i", "j", "p_ppm"))
     val states = p.select(col("i").as("st"))
       .union(p.select(col("j"))).distinct()
     val v0 = states.crossJoin(broadcast(states.agg(count(lit(1)).as("k"))))
       .select(col("st"), expr("1000000 div k").as("v"))
+    // one plan: materializing each round read 1.07-1.34x by paired A/B
     val vFinal = (1 to 8).foldLeft(v0) { (v, _) =>
       v.join(p, v("st") === p("i"))
         .groupBy(col("j"))
@@ -638,12 +638,13 @@ object CorpusOps extends QueryFamily {
   /** The support-pruned co-purchase edge list (co ≥ 2), `(i, j)` both
     * ways — the graph of q_bfs_hops, q_random_walks, q_communities,
     * q_kcore, q_assortativity and q_link_predict. Materialized once
-    * (eagerly): most consumers read it more than once in one plan. */
+    * ([[Rounds.materialize]]): most consumers read it more than once in
+    * one plan, and the round loops re-read it every round. */
   private[graft] def prunedEdgesBothWays(s: SparkSession,
       dir: String): DataFrame =
-    PairCounts.bothWays(coPurchase(orderPartPairs(s, dir), 2))
-      .select(col("a_id").as("i"), col("b_id").as("j"))
-      .localCheckpoint()
+    Rounds.materialize(
+      PairCounts.bothWays(coPurchase(orderPartPairs(s, dir), 2))
+        .select(col("a_id").as("i"), col("b_id").as("j")))
 
   /** q_triangles — triangle counting on the co-purchase graph (parts
     * appearing in the same order), the clustering-coefficient primitive
@@ -706,12 +707,8 @@ object CorpusOps extends QueryFamily {
     val e = prunedEdgesBothWays(s, dir)
     val starts = e.select(col("i").as("node")).distinct()
       .filter(col("node") < 20)
-    // broadcastFrontier (optimization r15, guide §3.1): starts is the
-    // <20-part seed set and walks never fork, so the frontier stays ≤20
-    // rows through all 5 steps — broadcast it and the edge table streams
-    // instead of being re-shuffled every step.
     graft.operators.Walks.deterministicWalks(e, "i", "j", starts, "node",
-        steps = 5, seed = "dw-r10", broadcastFrontier = true)
+        steps = 5, seed = "dw-r10")
       .orderBy("walk_id", "step")
   }
 
@@ -728,8 +725,8 @@ object CorpusOps extends QueryFamily {
     * clustering and duplicate-family grouping. Per round: one edge×label
     * equi-join, one (node, label) count, one plurality pick via
     * min(struct(−count, label)) — map-side-partial-friendly, no windows in
-    * the loop, and the label table is node-sized with its per-round lineage
-    * cut by localCheckpoint (the PageRank discipline). */
+    * the loop, and the node-sized label table is materialized each round
+    * ([[Rounds.materialize]]). */
   def qCommunities(s: SparkSession, dir: String): DataFrame =
     graft.operators.Clusters.labelPropagation(prunedEdgesBothWays(s, dir),
         "i", "j", rounds = 3)
@@ -751,17 +748,13 @@ object CorpusOps extends QueryFamily {
     * repeat relationships — here it also bounds frontier fan-out. */
   def qBfsHops(s: SparkSession, dir: String): DataFrame = {
     val e = prunedEdgesBothWays(s, dir) // joined once per hop round
-    // Frontier broadcast hints MEASURED AND REJECTED here (optimization
-    // r15, guide §3.1): paired A/B median 1.03x (1.01/1.03/1.05) —
-    // neutral. Unlike the 5-step walk loop, only TWO hops join the edge
-    // table and the hop tables are already tiny, so the shuffles the
-    // hints remove are a small share of the query.
-    val h0 = e.select(col("i").as("part")).distinct()
-      .filter(col("part") < 20).withColumn("hop", lit(0L))
+    val h0 = Rounds.materialize(e.select(col("i").as("part")).distinct()
+      .filter(col("part") < 20).withColumn("hop", lit(0L)))
     val n1 = e.join(h0.select(col("part").as("i")), "i")
       .select(col("j").as("part")).distinct()
-    val h1 = n1.join(h0.select("part"), Seq("part"), "left_anti")
-      .withColumn("hop", lit(1L))
+    val h1 = Rounds.materialize(
+      n1.join(h0.select("part"), Seq("part"), "left_anti")
+        .withColumn("hop", lit(1L)))
     val visited = h0.select("part").unionAll(h1.select("part"))
     val n2 = e.join(h1.select(col("part").as("i")), "i")
       .select(col("j").as("part")).distinct()
@@ -801,8 +794,8 @@ object CorpusOps extends QueryFamily {
     * density-stratification primitive behind influence cores and graph
     * sampling. Each round is one degree aggregation over the edge set
     * restricted to survivors (two node-keyed semi-joins + one groupBy — no
-    * windows, no driver frontier); the survivor table is node-sized and
-    * localCheckpoint'd per round (the q_pagerank iterative discipline).
+    * windows, no driver frontier); the node-sized survivor table is
+    * materialized each round ([[Rounds.materialize]]).
     * Rounds are FIXED, not run to convergence — the same bounded-unroll
     * contract as q_communities/q_pagerank, which is what makes the trajectory
     * a pure function of the graph and lets the oracle replay it as chained

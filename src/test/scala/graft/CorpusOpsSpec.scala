@@ -67,9 +67,17 @@ class CorpusOpsSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (3L, 2L), (2L, 4L),
       (4L, 3L), (3L, 4L), (5L, 6L), (7L, 8L), (9L, 8L))
       .toDF("a_id", "b_id")
-    val got = Clusters.triangleStats(edges, "a_id", "b_id")
-      .select("v", "degree", "n_tri", "clustering_permille")
-      .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+    // under collector pressure, a lazy checkpoint of the oriented edges
+    // lost its plan before the job that read it reported the plan's
+    // metrics: 25 "Failed to update accumulator" errors a run
+    var rows = Array.empty[(Long, Long, Long, Long)]
+    val logged = accumulatorErrorsUnderGc {
+      rows = Clusters.triangleStats(edges, "a_id", "b_id")
+        .select("v", "degree", "n_tri", "clustering_permille")
+        .as[(Long, Long, Long, Long)].collect()
+    }
+    assert(logged.isEmpty, logged)
+    val got = rows.map(r => r._1 -> r).toMap
     for (v <- 1L to 4L) assert(got(v) === ((v, 3L, 3L, 1000L)))
     assert(got(5L) === ((5L, 1L, 0L, 0L)))
     assert(got(8L) === ((8L, 2L, 0L, 0L)))
@@ -100,6 +108,17 @@ class CorpusOpsSpec extends SparkSpec {
     val comp = Clusters.componentsRounds(edges, maxIter = 25)
       .as[(Long, Long)].collect().toMap
     assert(comp.size == 64 && comp.values.forall(_ == 0L))
+  }
+
+  test("components rounds refuse to return labels when the round budget runs out") {
+    // one round cannot settle a 10-vertex path: its labels would not be
+    // components yet
+    val edges = (0L until 9L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalStateException] {
+      Clusters.componentsRounds(edges, maxIter = 1)
+    }
+    assert(e.getMessage.contains("did not converge within 1 rounds"),
+      e.getMessage)
   }
 
   test("label propagation splits bridged cliques that components merge") {
@@ -305,6 +324,39 @@ class CorpusOpsSpec extends SparkSpec {
     assert(m == Map(
       (0L, 0L) -> 2L, (0L, 1L) -> 1L, (0L, 2L) -> 2L,
       (1L, 0L) -> 1L, (1L, 2L) -> 1L))
+  }
+
+  /** The DAGScheduler's "Failed to update accumulator" errors logged while
+    * `body` runs with a thread forcing garbage collections. */
+  private def accumulatorErrorsUnderGc(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender("accumulatorErrors", null, null, true,
+        null) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.startsWith("Failed to update accumulator")) seen.add(m)
+      }
+    }
+    spark.sparkContext // logging is configured when the context starts
+    val logger = LogManager.getLogger(
+      "org.apache.spark.scheduler.DAGScheduler").asInstanceOf[Logger]
+    app.start()
+    logger.addAppender(app)
+    @volatile var done = false
+    val gc = new Thread(() => while (!done) { System.gc(); Thread.sleep(5) })
+    gc.start()
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally {
+      done = true
+      gc.join()
+      logger.removeAppender(app)
+    }
+    seen.toArray(Array.empty[String]).toSeq
   }
 
   // ---- container magic bytes (multimodal) ----

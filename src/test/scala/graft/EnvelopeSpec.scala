@@ -72,6 +72,25 @@ class EnvelopeSpec extends SparkSpec {
     assert(got === mesosBodies.map { case (_, m) => ("slave-8", m) })
   }
 
+  test("kafkaRows counts the bodies whose Metrics fell back to {} as empty_metrics") {
+    // Spark's Observation collects only an observation attached with it;
+    // the sink's named one is read from the query execution instead
+    val bodies = Seq("""{"slave/uptime_secs": 4.0}""", // good
+      """{"slave/mem_total": 15360.0, "slave/""", // malformed
+      """[4.0, 1.5]""", // not an object
+      null, // failed fetch
+      "{}") // an empty object, not a fallback
+    val df = bodies.zipWithIndex.map { case (b, i) => (i.toLong, 8L, ts, b) }
+      .toDF("event_id", "user_id", "ts", "props")
+    for (transform <- Seq("none", "avro")) {
+      val runs = plansDuring {
+        assert(EnvelopeSink.kafkaRows(df, transform).collect().length === 5)
+      }
+      assert(runs.map(_.observedMetrics("envelope")
+        .getAs[Long]("empty_metrics")) === Seq(3L), transform)
+    }
+  }
+
   // -- independent minimal Avro binary encoder (spec-level, test-only) --
   private def zigzag(n: Long): Array[Byte] = {
     var v = (n << 1) ^ (n >> 63)

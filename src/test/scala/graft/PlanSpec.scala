@@ -875,8 +875,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("localCheckpoint(eager = false) runs an exchange's map stages at the call when AQE is on") {
-    // the one-task size checks and the round loops rely on which lazy
-    // checkpoints run jobs when they are taken
+    // the read-twice checkpoints outside the round loops are lazy: this
+    // pins which of them run jobs when they are taken (the loops'
+    // Rounds.materialize runs its one job either way)
     import org.apache.spark.sql.functions.{count, lit}
     def grouped = spark.range(0, 1000, 1, 4).groupBy(col("id") % 7)
       .agg(count(lit(1)).as("n"))
@@ -887,5 +888,18 @@ class PlanSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try assert(jobsDuring(grouped.localCheckpoint(eager = false)) === 0)
     finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("q_random_walks' step joins broadcast from measured statistics, with no hint") {
+    val steps = plansDuring(graft.queries.CorpusOps.qRandomWalks(spark, sf))
+      .filter(_.analyzed.toString.contains("md5("))
+    assert(steps.size === 5) // one materialized frontier per step
+    for (qe <- steps) {
+      val p = qe.executedPlan.toString
+      assert(p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
+        p)
+      assert(!qe.analyzed.toString.contains("ResolvedHint"),
+        qe.analyzed.toString)
+    }
   }
 }

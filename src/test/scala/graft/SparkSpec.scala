@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -25,6 +27,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         n.incrementAndGet()
     })(body)
     n.get
+  }
+
+  /** The query executions that succeeded while `body` ran, one per action
+    * (checkpoints included), in the order they ended. */
+  def plansDuring(body: => Unit): Seq[QueryExecution] = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    spark.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally spark.listenerManager.unregister(l)
+    qes.toArray(Array.empty[QueryExecution]).toSeq
   }
 
   /** Runs `body` with `l` registered, draining the listener bus before and
